@@ -40,16 +40,21 @@ class DatalakePublishService(
     if (resources.isEmpty) return // ref :56-59 — zero storage interaction
     import spark.implicits._
     val n = resources.size
-    publishFhirR4(
+    publishNonEmpty(
       spark.createDataset(resources).repartition(math.min(cfg.publishPoolMax, n)),
       tenantId)
   }
 
   /** Dataset variant for large publishes: single distributed pass that
     * writes and aggregates (hadId, writeOk) counters. */
-  def publishFhirR4(resources: Dataset[FhirEnvelope], tenantId: String): Unit = {
+  def publishFhirR4(resources: Dataset[FhirEnvelope], tenantId: String): Unit =
+    if (!resources.isEmpty) publishNonEmpty(resources, tenantId)
+
+  /** Shared body of both overloads; the caller has ruled out empty input
+    * (the `Seq` overload by its size, for free — `Dataset.isEmpty` would
+    * cost it two more jobs and a second run of the repartition shuffle). */
+  private def publishNonEmpty(resources: Dataset[FhirEnvelope], tenantId: String): Unit = {
     val spark = resources.sparkSession
-    if (resources.isEmpty) return
     val date = clock() // one snapshot per batch -> single _date (ref :60)
     import spark.implicits._
     val root = cfg.root

@@ -1,6 +1,5 @@
 package graft.core
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -15,15 +14,27 @@ import org.apache.spark.sql.types.StructType
   * (list-level partition pruning — only matching files are ever opened),
   * then recover the partition columns from `input_file_name()`.
   *
-  * At cluster scale the listing is a cheap metadata walk of only the
-  * requested resourceType subtree, and the data scan reads only pruned
-  * files — equivalent to Hive-style partition pruning.
+  * The listing starts at the deepest directory the arguments fix —
+  * `ehr/<type>/fhir_tenant_id=<t>/_date=<d>` for a tenant and a date,
+  * `ehr/<type>/fhir_tenant_id=<t>` for a tenant alone, `ehr/<type>`
+  * otherwise — so a scan lists only its own partition. The
+  * `fhir_tenant_id=<t>/` and `_date=<d>/` substring filters still apply to
+  * every listed path, so the result is the full walk's with one exception:
+  * given a date, tenant `a` no longer picks up the documents of a tenant
+  * nested under it (`a/b`), which the substring filter matched.
+  *
+  * Listing goes through [[LakeStorage.listRecursive]], which walks with
+  * `listStatus`, not `listFiles`: on the local store `listFiles` forks an
+  * `ls` per file to load permissions nobody reads, and that fork, not the
+  * scan, was most of a small read's wall time.
   */
 object LakeReader {
 
   /** Read FHIR documents of one resourceType; optional tenant/date pruning.
     * Returns columns: body (raw JSON) + fhir_tenant_id + _date + any
-    * `schema` fields parsed from the body. */
+    * `schema` fields parsed from the body. `resourceType` names one
+    * directory under `ehr/`: an empty one, `.`, `..` or one containing '/'
+    * throws IllegalArgumentException. */
   def readFhir(
       spark: SparkSession,
       cfg: LakeConfig,
@@ -31,8 +42,22 @@ object LakeReader {
       tenant: Option[String] = None,
       date: Option[String] = None,
       bodySchema: Option[StructType] = None): DataFrame = {
+    require(resourceType.nonEmpty && resourceType != "." && resourceType != ".." &&
+      !resourceType.contains('/'), s"invalid resourceType: '$resourceType'")
+    // Listed paths are normalised: past its first segment (which follows
+    // "fhir_tenant_id=" or "_date="), no value can match one with an empty,
+    // "." or ".." segment. Returning early keeps such a value from
+    // steering the prefix outside ehr/<type>.
+    def unmatchable(v: String) =
+      v.split("/", -1).drop(1).exists(seg => seg.isEmpty || seg == "." || seg == "..")
+    if (tenant.exists(unmatchable) || date.exists(unmatchable)) {
+      return emptyResult(spark, bodySchema)
+    }
     val storage = new LakeStorage(cfg.root, LakeStorage.sharedHadoopConf, cfg.retryDelayMs)
-    val prefix = s"ehr/${resourceType.toLowerCase}"
+    val typeDir = s"ehr/${resourceType.toLowerCase}"
+    val prefix = tenant.fold(typeDir) { t =>
+      s"$typeDir/fhir_tenant_id=$t" + date.fold("")(d => s"/_date=$d")
+    }
     val files = storage.listRecursive(prefix)
       .filter(p => tenant.forall(t => p.contains(s"fhir_tenant_id=$t/")))
       .filter(p => date.forall(dt => p.contains(s"_date=$dt/")))

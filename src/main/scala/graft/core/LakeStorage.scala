@@ -1,6 +1,6 @@
 package graft.core
 
-import java.io.IOException
+import java.io.{FileNotFoundException, IOException}
 import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -67,19 +67,29 @@ class LakeStorage(val root: String, conf: Configuration, retryDelayMs: Long = 50
   def status(fileName: String): Option[FileStatus] =
     if (fs.exists(path(fileName))) Some(fs.getFileStatus(path(fileName))) else None
 
-  /** Recursive listing of object names relative to the root (test/tooling
-    * surface; at scale prefer partition-pruned reads over full listings). */
+  /** Recursive listing of object names under `prefix`, relative to the
+    * root; a missing prefix lists nothing. Callers pass the deepest prefix
+    * they can fix ([[LakeReader]] prunes to the tenant/date directory).
+    *
+    * The walk is depth-first over `fs.listStatus`, never `fs.listFiles`:
+    * `listFiles` wraps every entry in a `LocatedFileStatus`, whose
+    * constructor reads the permission, owner and group, and the local
+    * store without native Hadoop loads those by forking `ls` once per
+    * file (about 5 ms wall and 3 ms child CPU each). `listStatus` returns
+    * plain `FileStatus` objects that load them only on demand. The
+    * checksum filesystem filters `.crc` sidecars out of both. */
   def listRecursive(prefix: String = ""): Seq[String] = {
     val base = if (prefix.isEmpty) new Path(root) else path(prefix)
-    if (!fs.exists(base)) return Seq.empty
-    val it = fs.listFiles(base, true)
     val rootUri = fs.makeQualified(new Path(root)).toUri.getPath
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val st = it.next()
-      val full = st.getPath.toUri.getPath
-      buf += full.stripPrefix(rootUri).stripPrefix("/")
+    def walk(p: Path): Unit = {
+      val entries = try fs.listStatus(p) catch { case _: FileNotFoundException => Array.empty[FileStatus] }
+      entries.foreach { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else buf += st.getPath.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
+      }
     }
+    walk(base)
     buf.toSeq
   }
 

@@ -53,27 +53,6 @@ object Parallelism {
     if (wide) df else df.repartition(target)
   }
 
-  /** [[fanOut]], but hash-partitioned on `keyCols` instead of
-    * round-robin (optimization round 16, guide §2.4: two operations
-    * keyed the same way share one exchange). When the downstream
-    * pipeline aggregates or joins BY those columns, narrow map
-    * operators (projections, explodes) preserve the hash partitioning,
-    * so the later groupBy needs NO exchange — the dedup operators'
-    * signature aggregation previously re-shuffled every exploded
-    * shingle row that this fan-out had just spread. Same no-op-on-wide
-    * contract; hash partitioning is deterministic under retry (no
-    * rand), and key skew only matters if one key dwarfs the rest —
-    * callers key on high-cardinality ids. */
-  def fanOutByKey(df: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    val wide = estimatedInputPartitions(df) match {
-      case Some(n) => n >= target
-      case None    => df.rdd.getNumPartitions >= target
-    }
-    if (wide) df
-    else df.repartition(target, keyCols.map(org.apache.spark.sql.functions.col): _*)
-  }
-
   /** Leaf-derived width estimate: None when any leaf is of an unknown
     * shape. File relations estimate ceil(bytes / maxPartitionBytes) —
     * byte-proportional like the scan planner itself (many-tiny-files

@@ -8,6 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * through a single task — the classic silent scale killer. Walk every
   * batch query's optimized plan and require global windows only where the
   * semantics genuinely demand a global order (documented allowlist).
+  *
+  * A source check rides along: Hadoop's `listFiles(path, recursive)` and
+  * `listLocatedStatus` build a `LocatedFileStatus` per entry, which on the
+  * local store forks an `ls` per file for permissions nobody reads. Walks
+  * go through `listStatus` ([[graft.core.LakeStorage.listRecursive]]).
   */
 class ScaleLintSpec extends AnyFunSuite {
 
@@ -47,5 +52,28 @@ class ScaleLintSpec extends AnyFunSuite {
       }
     assert(offenders.isEmpty,
       s"queries with undeclared global windows: ${offenders.mkString(", ")}")
+  }
+
+  /** A Hadoop `listFiles` call (two arguments; one level of nested parens in
+    * the first) or any `listLocatedStatus` call. `java.io.File.listFiles()`
+    * takes no arguments and does not match. */
+  private val forkingListing =
+    """\blistFiles\s*\((?:[^()]|\([^()]*\))*,|\blistLocatedStatus\s*\(""".r
+
+  test("src/main never lists through LocatedFileStatus (listFiles / listLocatedStatus)") {
+    Seq("fs.listFiles(base, true)", "fs.listFiles(new Path(root, \"x\"),\n  true)",
+      "fs.listLocatedStatus(p)").foreach(s => assert(forkingListing.findFirstIn(s).isDefined, s))
+    Seq("new java.io.File(dir).listFiles()", "f.listFiles ()", "fs.listStatus(p)")
+      .foreach(s => assert(forkingListing.findFirstIn(s).isEmpty, s))
+    val main = new java.io.File("src/main/scala")
+    assert(main.isDirectory, s"source root not found: ${main.getAbsolutePath}")
+    def sources(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) sources(f) else Seq(f))
+    val offenders = sources(main).filter(_.getName.endsWith(".scala")).filter { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      forkingListing.findFirstIn(src).isDefined
+    }
+    assert(offenders.isEmpty,
+      s"forking Hadoop listings (use listStatus): ${offenders.map(_.getPath).mkString(", ")}")
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import java.time.{LocalDate, LocalDateTime}
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -170,5 +171,135 @@ class LakeRoundtripSpec extends AnyFunSuite {
     assert(rows.head.getString(0) === "t1")
     assert(rows.head.getString(1) === "2024-02-01")
     assert(df.count() === 2)
+  }
+
+  /** Publishes `ids` of `resourceType` for `tenant` on 2024-02-`day`. */
+  private def publishOn(cfg: LakeConfig, resourceType: String, tenant: String, day: Int,
+      ids: Seq[String]): Unit =
+    new DatalakePublishService(cfg, clock = () => LocalDate.of(2024, 2, day))
+      .publishFhirR4(spark, tenant, ids.map(id => FhirEnvelope(resourceType, id,
+        s"""{"resourceType":"$resourceType","id":"$id","tenant":"$tenant","day":$day}""")))
+
+  private def bodies(cfg: LakeConfig, resourceType: String, tenant: Option[String],
+      date: Option[String]): Seq[String] =
+    LakeReader.readFhir(spark, cfg, resourceType, tenant, date)
+      .select("body").collect().map(_.getString(0)).toSeq.sorted
+
+  test("LakeReader pruned reads return exactly the full-walk-then-filter rows") {
+    val (root, cfg) = freshLake()
+    val tenants = Seq("t1", "t2", "org/t3")
+    for ((t, ti) <- tenants.zipWithIndex; day <- 1 to 3 if (ti + day) % 3 != 0) {
+      publishOn(cfg, "Patient", t, day, Seq(s"p$ti$day", s"q$ti$day"))
+      publishOn(cfg, "Observation", t, day, Seq(s"o$ti$day"))
+    }
+    val storage = new LakeStorage(root, new Configuration())
+    val all = storage.listRecursive("ehr/patient")
+    assert(all.size === 12)
+    def reference(tenant: Option[String], date: Option[String]): Seq[String] =
+      all.filter(p => tenant.forall(t => p.contains(s"fhir_tenant_id=$t/")))
+        .filter(p => date.forall(d => p.contains(s"_date=$d/")))
+        .map(p => storage.get(p).get).sorted
+    val tenantArgs = None +: (tenants :+ "t9").map(Some(_))
+    val dateArgs = None +: Seq("2024-02-01", "2024-02-02", "2024-02-03", "2024-02-09").map(Some(_))
+    for (t <- tenantArgs; d <- dateArgs) {
+      val want = reference(t, d)
+      assert(bodies(cfg, "Patient", t, d) === want, s"tenant=$t date=$d")
+      if (t.exists(tenants.contains) && d.isEmpty) assert(want.nonEmpty)
+    }
+    assert(bodies(cfg, "Patient", None, None).size === 12)
+  }
+
+  test("LakeReader reads back a tenant whose id contains '/'") {
+    val (_, cfg) = freshLake()
+    publishOn(cfg, "Patient", "org/t3", 2, Seq("a", "b"))
+    publishOn(cfg, "Patient", "t1", 2, Seq("c"))
+    val published = Seq("a", "b").map(id =>
+      s"""{"resourceType":"Patient","id":"$id","tenant":"org/t3","day":2}""")
+    assert(bodies(cfg, "Patient", Some("org/t3"), None) === published)
+    assert(bodies(cfg, "Patient", Some("org/t3"), Some("2024-02-02")) === published)
+  }
+
+  test("LakeReader rejects a path-like resourceType and confines traversing tenants") {
+    val (_, cfg) = freshLake()
+    publishOn(cfg, "Patient", "t1", 1, Seq("a"))
+    new DatalakePublishService(cfg).publishRawData("t1", "raw", "https://src.example/x")
+    Seq("", ".", "..", "../raw_data_response", "raw_data_response/tenant_id=t1").foreach { rt =>
+      intercept[IllegalArgumentException](LakeReader.readFhir(spark, cfg, rt))
+    }
+    // Some of these normalise to a directory that exists (t1's partition,
+    // the patient type root, the raw-response tree); none may read from it.
+    Seq("x/../t1", "x/../fhir_tenant_id=t1", "x/..", "x/../../../raw_data_response", "t1/.", "t1/")
+      .foreach { t =>
+        assert(bodies(cfg, "Patient", Some(t), None).isEmpty, t)
+        assert(bodies(cfg, "Patient", Some(t), Some("2024-02-01")).isEmpty, t)
+      }
+    assert(bodies(cfg, "Patient", Some("t1"), Some("x/../2024-02-01")).isEmpty)
+    assert(bodies(cfg, "Patient", Some("t1"), Some("2024-02-01")).size === 1)
+  }
+
+  /** Reaped child CPU of this JVM in ms: `/proc/self/stat` fields 16-17
+    * (cutime, cstime), in clock ticks of 10 ms. */
+  private def childCpuMs(): Long = {
+    val stat = new String(Files.readAllBytes(java.nio.file.Paths.get("/proc/self/stat")), "UTF-8")
+    val fields = stat.substring(stat.lastIndexOf(')') + 2).split(" ")
+    (fields(13).toLong + fields(14).toLong) * 10L // field n sits at index n - 3
+  }
+
+  test("listing a lake forks no child processes") {
+    assume(new java.io.File("/proc/self/stat").exists, "no /proc: child CPU is not observable")
+    val (root, cfg) = freshLake()
+    publishOn(cfg, "Patient", "t1", 1, (1 to 120).map(i => s"p$i"))
+    val storage = new LakeStorage(root, new Configuration())
+    // The old listFiles walk cost about 3 ms of child CPU per entry (over
+    // 700 ms here). The best of three attempts keeps an unrelated fork
+    // elsewhere in the JVM from failing the check.
+    val costs = (1 to 3).map { _ =>
+      val before = childCpuMs()
+      assert(storage.listRecursive().size === 120)
+      assert(LakeReader.readFhir(spark, cfg, "Patient", Some("t1"), Some("2024-02-01")).count() === 120)
+      assert(LakeReader.readFhir(spark, cfg, "Patient").count() === 120)
+      childCpuMs() - before
+    }
+    assert(costs.min < 20, s"child CPU per listing pass (ms): ${costs.mkString(", ")}")
+  }
+
+  /** Spark jobs `body` launches. A sentinel job runs afterwards: a listener
+    * sees events in order, so when the sentinel's start arrives every job
+    * of `body` has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-sentinel" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("an 8-document publish runs at most 3 Spark jobs") {
+    val (root, cfg) = freshLake()
+    val svc = new DatalakePublishService(cfg, clock = jan3_1990)
+    val docs = (1 to 8).map(i => FhirEnvelope("Patient", s"p$i", s"""{"id":"p$i"}"""))
+    val jobs = jobsOf(svc.publishFhirR4(spark, "t1", docs))
+    assert(jobs <= 3, s"$jobs jobs")
+    assert(new LakeStorage(root, new Configuration()).listRecursive().size === 8)
+    // the Dataset overload keeps its empty-input short-circuit
+    import spark.implicits._
+    svc.publishFhirR4(spark.emptyDataset[FhirEnvelope], "t2")
+    assert(new LakeStorage(root, new Configuration()).listRecursive().size === 8)
   }
 }
