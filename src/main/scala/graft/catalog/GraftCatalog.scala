@@ -221,8 +221,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val meta = readMeta(dir).getOrElse(throw new NoSuchTableException(ident))
     val dataDir = meta.location.getOrElse(dir)
     if (meta.provider == "keyedlog") {
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+      val conf = LakeStorage.taskConf()
       val v = graft.sources.KeyedLogVersionLog
         .versionAsOfTimestamp(dataDir, conf, timestampMicros / 1000L)
         .getOrElse(throw new IllegalStateException(
@@ -1330,14 +1329,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def createDeepCloneKeyedLog(srcIdent: Identifier,
       dstIdent: Identifier, meta: TableMeta, srcDir: String,
       version: Option[Long]): (Long, Long, Long) = {
-    import graft.sources.{KeyedLogConf, KeyedLogSource, KeyedLogVersionLog}
+    import graft.sources.{KeyedLogSource, KeyedLogVersionLog}
     val ns = dstIdent.namespace()
     if (ns.nonEmpty && !fs.exists(new Path(nsDir(ns))))
       throw new NoSuchNamespaceException(ns)
     val dstDir = tableDir(dstIdent)
     if (fs.exists(new Path(dstDir, MetaFile)))
       throw new TableAlreadyExistsException((ns :+ dstIdent.name()).toSeq)
-    val conf = KeyedLogConf.capture()
+    val conf = LakeStorage.taskConf()
     val dataDir = meta.location.getOrElse(srcDir)
     // resolve the snapshot's NAMES and each name's physical source file
     // (a later rewrite may have tombstoned it — same rule as VERSION AS OF

@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.ManifestTable
+import graft.core.{LakeStorage, ManifestTable}
 
 /** Maintenance procedures for manifest tables, reachable from plain SQL
   * through Spark 4's `CALL` statement (the catalog implements
@@ -194,8 +194,7 @@ private[catalog] object GraftProcedures {
           // keyedlog debt = files a per-key compaction would consolidate:
           // every unclustered file + each clustered key's excess beyond
           // one file (the signal t.partitions reports per key)
-          val conf = new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf())
+          val conf = LakeStorage.taskConf()
           val keys = graft.sources.KeyedLogSource.readerFiles(dir, conf).toSeq
             .map(f => graft.sources.KeyedLogSource.keyOfFile(
               new org.apache.hadoop.fs.Path(f).getName))
@@ -283,9 +282,7 @@ private[catalog] object GraftProcedures {
           result(
             StructType(Seq(
               StructField("orphans_removed", IntegerType, nullable = false))),
-            graft.sources.KeyedLogSource.sweepOrphans(dir,
-              new org.apache.spark.util.SerializableConfiguration(
-                SparkSession.active.sessionState.newHadoopConf()),
+            graft.sources.KeyedLogSource.sweepOrphans(dir, LakeStorage.taskConf(),
               input.getLong(2), dryRun).length)
         case (other, _, _) => throw new IllegalArgumentException(
           s"vacuum applies to manifest and keyedlog tables; " +
@@ -750,14 +747,14 @@ private[catalog] object GraftProcedures {
       * would drop them). */
     private def keyedLogBounds(meta: GraftCatalog.TableMeta, dir: String,
                                statMode: String, columns: String): JIterator[Scan] = {
-      import graft.sources.{KeyedLogConf, KeyedLogSource, KeyedLogVersionLog}
+      import graft.sources.{KeyedLogSource, KeyedLogVersionLog}
       import org.apache.spark.sql.functions._
       require(statMode == "missing" || statMode == "all",
         s"collect_stats mode must be 'missing' or 'all', got '$statMode'")
       require(columns.isEmpty,
         "collect_stats columns => applies to manifest NDV stats; keyedlog " +
           "bounds always cover every long-typed column")
-      val conf = KeyedLogConf.capture()
+      val conf = LakeStorage.taskConf()
       val vs = KeyedLogVersionLog.versions(dir, conf)
       val live: Seq[String] = KeyedLogVersionLog.liveSet(dir, conf).getOrElse(
         KeyedLogSource.listDataFiles(dir, conf)
@@ -955,9 +952,7 @@ private[catalog] object GraftProcedures {
       val committed = target(catalog, input.getString(0)) match {
         case ("manifest", dir, _) => ManifestTable.rollback(dir, restored)
         case ("keyedlog", dir, _) =>
-          graft.sources.KeyedLogSource.restoreVersion(dir,
-            new org.apache.spark.util.SerializableConfiguration(
-              SparkSession.active.sessionState.newHadoopConf()), restored)
+          graft.sources.KeyedLogSource.restoreVersion(dir, LakeStorage.taskConf(), restored)
         case (other, _, _) => throw new IllegalArgumentException(
           s"rollback applies to manifest and keyedlog tables; " +
             s"'${input.getString(0)}' is a $other table")

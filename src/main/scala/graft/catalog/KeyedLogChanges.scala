@@ -6,7 +6,8 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.{KeyedLogConf, KeyedLogPartition, KeyedLogReaderFactory, KeyedLogSource, KeyedLogVersionLog}
+import graft.core.LakeStorage
+import graft.sources.{KeyedLogPartition, KeyedLogReaderFactory, KeyedLogSource, KeyedLogVersionLog}
 
 /** `t.changes` for KEYEDLOG tables — the commit-journal CDC feed, rows
   * tagged `_change_type`, window/error contract matching
@@ -75,7 +76,7 @@ case class KeyedLogChangesScan(dir: String, startVersion: Option[Long],
                                declared: StructType = KeyedLogSource.schema)
     extends Scan with Batch {
 
-  private val conf = KeyedLogConf.capture()
+  private val conf = LakeStorage.taskConf()
 
   override def readSchema(): StructType =
     StructType(declared.fields :+
@@ -217,7 +218,7 @@ class KeyedLogChangesMicroBatchStream(dir: String, startVersion: Long,
 
   import org.apache.spark.sql.connector.read.streaming.Offset
 
-  private val conf = KeyedLogConf.capture()
+  private val conf = LakeStorage.taskConf()
 
   private def headVersion: Long =
     KeyedLogVersionLog.versions(dir, conf).lastOption.getOrElse(-1L)

@@ -273,7 +273,7 @@ class ManifestDeltaWrite(op: ManifestDeltaOperation, dir: String,
     ManifestDeltaWriterFactory(owf, dir, s"$dir/$insertPool", insertPool,
       dvPool, writeSchema, rowIdSchema,
       op.snapshotState.dvs.map { case (f, ref) => f -> ref.path },
-      new SerializableConfiguration(job.getConfiguration), checker)
+      LakeStorage.taskConf(job.getConfiguration), checker)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {

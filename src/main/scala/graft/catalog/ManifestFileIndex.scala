@@ -1,5 +1,8 @@
 package graft.catalog
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.{PartitioningAwareFileIndex, PartitionSpec}
@@ -73,7 +76,6 @@ object ManifestFileIndex {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(16, missing.length))
         try {
-          import scala.jdk.CollectionConverters._
           val tasks = missing.map { f =>
             new java.util.concurrent.Callable[(String, Long)] {
               override def call(): (String, Long) =
@@ -93,7 +95,9 @@ object ManifestFileIndex {
     * shared entry point for snapshot scans, CDC windows, streaming
     * batches, and the DML read, all listing-free. `withRowIndex` extends
     * the data schema with the parquet row-index column (see [[DvRead]]) —
-    * the deletion-vector and `_pos` paths need per-row file positions. */
+    * the deletion-vector and `_pos` paths need per-row file positions.
+    * The scan's conf is Spark's own (`newHadoopConfWithOptions`), made
+    * [[LakeStorage.shippable]]: the scan broadcasts it to its tasks. */
   def scanBuilder(spark: SparkSession, declared: StructType,
                   dir: String, files: Seq[String],
                   stats: Map[String, FileStats.Stats],
@@ -101,7 +105,11 @@ object ManifestFileIndex {
                   withRowIndex: Boolean = false): ParquetScanBuilder = {
     val schema = if (withRowIndex) DvRead.withRowIndex(declared) else declared
     new ParquetScanBuilder(spark,
-      new ManifestFileIndex(spark, statuses(dir, files, stats)),
-      schema, schema, options)
+        new ManifestFileIndex(spark, statuses(dir, files, stats)),
+        schema, schema, options) {
+      override lazy val hadoopConf: Configuration = LakeStorage.shippable(
+        sparkSession.sessionState.newHadoopConfWithOptions(
+          this.options.asCaseSensitiveMap.asScala.toMap))
+    }
   }
 }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.ManifestTable
+import graft.core.{LakeStorage, ManifestTable}
 
 /** Group-based row-level DML (SQL `DELETE FROM` / `UPDATE` / `MERGE INTO`)
   * over a [[graft.core.ManifestTable]] — the copy-on-write model of
@@ -941,7 +941,7 @@ class ManifestReplaceWrite(op: ManifestRowLevelOperation, dir: String,
     // re-validates in the task writer — the same contract Delta's
     // CheckInvariant enforces on CoW DML output
     ManifestPoolWriterFactory(owf, s"$dir/$poolName", schema,
-      new SerializableConfiguration(job.getConfiguration),
+      LakeStorage.taskConf(job.getConfiguration),
       Constraints.rowChecker(spark, schema, op.checkList))
   }
 

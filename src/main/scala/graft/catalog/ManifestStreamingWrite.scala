@@ -74,7 +74,7 @@ class ManifestStreamingWrite(dir: String, schema: StructType, queryId: String,
     // codegen'd predicates evaluate per row inside each epoch's task
     // writers — a violating micro-batch fails BEFORE its epoch commits
     ManifestStreamingWriterFactory(owf, dir, queryId, schema,
-      new SerializableConfiguration(job.getConfiguration),
+      LakeStorage.taskConf(job.getConfiguration),
       Constraints.rowChecker(spark, schema, checks),
       identity, identitySlab)
   }

@@ -190,7 +190,7 @@ object MetadataTables {
     * rows remain as history with zero surviving bytes). */
   def keyedLogHistory(dir: String): Table =
     new VirtualRowsTable(s"history($dir)", KeyedLogHistorySchema, () => {
-      val conf = graft.sources.KeyedLogConf.capture()
+      val conf = LakeStorage.taskConf()
       val fs = LakeStorage.openFor(dir)
       graft.sources.KeyedLogVersionLog.versions(dir, conf).map { v =>
         val names = graft.sources.KeyedLogVersionLog.read(dir, conf, v)
@@ -214,7 +214,7 @@ object MetadataTables {
     new VirtualRowsTable(s"files($dir)", StructType(
       KeyedLogFilesSchema.fields :+
         StructField("clustered", org.apache.spark.sql.types.BooleanType, nullable = false)), () => {
-      val conf = graft.sources.KeyedLogConf.capture()
+      val conf = LakeStorage.taskConf()
       val fs = LakeStorage.openFor(dir)
       // journal-resolved like the scans — the ops view must describe the
       // files the table SERVES, not listing leftovers a failed tombstone
@@ -234,7 +234,7 @@ object MetadataTables {
     * compaction debt). */
   def keyedLogPartitions(dir: String, bucket: Option[Int]): Table =
     new VirtualRowsTable(s"partitions($dir)", PartitionsSchema, () => {
-      val conf = graft.sources.KeyedLogConf.capture()
+      val conf = LakeStorage.taskConf()
       val fs = LakeStorage.openFor(dir)
       val files = graft.sources.KeyedLogSource.readerFiles(dir, conf).toSeq
       def keyOf(f: String): String = {

@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
@@ -192,31 +193,41 @@ object FileStats {
 
   /** [[fromFooter]] from an already-stat'ed file (no extra filesystem
     * round trip); records the file length so scan planning can later
-    * build its file index from the log alone. */
+    * build its file index from the log alone.
+    *
+    * The read options come from the caller's already-parsed `conf`.
+    * Opening with the input file alone builds them over a fresh
+    * `new Configuration()`, which re-parses core-default.xml: about 11 ms
+    * per file, paid for every file each manifest commit writes. */
   def fromFooter(conf: Configuration,
                  status: org.apache.hadoop.fs.FileStatus): Option[Stats] =
     try {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
-      try {
-        val footer = reader.getFooter
-        val blocks = footer.getBlocks
-        import scala.jdk.CollectionConverters._
-        val rowCount = blocks.asScala.map(_.getRowCount).sum
-        // accumulate per top-level column across row groups
-        val acc = scala.collection.mutable.LinkedHashMap.empty[String, BoundsAcc]
-        val indexed = footer.getFileMetaData.getSchema.getFields.asScala
-          .take(MaxIndexedCols).map(_.getName).toSet
-        for (block <- blocks.asScala; chunk <- block.getColumns.asScala) {
-          val pathParts = chunk.getPath.toArray
-          if (pathParts.length == 1 && indexed.contains(pathParts(0)))
-            acc.getOrElseUpdate(pathParts(0), new BoundsAcc).update(chunk)
-        }
-        val cols = acc.iterator.flatMap { case (name, a) =>
-          a.result.map(name.toLowerCase -> _)
-        }.toMap
-        Some(Stats(rowCount, cols, Some(status.getLen)))
-      } finally reader.close()
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf),
+        HadoopReadOptions.builder(conf, status.getPath).build())
+      try Some(fromMetadata(reader.getFooter, status.getLen))
+      finally reader.close()
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Stats of an already-read footer of a file `len` bytes long. */
+  private[graft] def fromMetadata(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata, len: Long): Stats = {
+    val blocks = footer.getBlocks
+    import scala.jdk.CollectionConverters._
+    val rowCount = blocks.asScala.map(_.getRowCount).sum
+    // accumulate per top-level column across row groups
+    val acc = scala.collection.mutable.LinkedHashMap.empty[String, BoundsAcc]
+    val indexed = footer.getFileMetaData.getSchema.getFields.asScala
+      .take(MaxIndexedCols).map(_.getName).toSet
+    for (block <- blocks.asScala; chunk <- block.getColumns.asScala) {
+      val pathParts = chunk.getPath.toArray
+      if (pathParts.length == 1 && indexed.contains(pathParts(0)))
+        acc.getOrElseUpdate(pathParts(0), new BoundsAcc).update(chunk)
+    }
+    val cols = acc.iterator.flatMap { case (name, a) =>
+      a.result.map(name.toLowerCase -> _)
+    }.toMap
+    Stats(rowCount, cols, Some(len))
+  }
 
   /** Per-column accumulator over a file's row groups. A bound that any
     * chunk cannot supply is STICKILY unknown (a later chunk must not

@@ -115,7 +115,7 @@ object LakeCompaction {
     // the rewrite's own commit journaled the compacted files as the tmp
     // dir's version 0 — drop that: the journal entry must continue the
     // TABLE's version line, which is carried over next
-    val conf = graft.sources.KeyedLogConf.capture()
+    val conf = LakeStorage.taskConf()
     val compactedNames = fs.listStatus(tmp).filter(dataFile).map(_.getPath.getName).toSeq
     // the rewrite's writers journaled fresh column stats into the tmp
     // dir's own v0 entry — harvest them before dropping that journal so

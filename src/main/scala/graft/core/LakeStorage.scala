@@ -6,6 +6,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.io.{Text, WritableUtils}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 
 /** Key-addressed object storage over any Hadoop FileSystem.
   *
@@ -108,6 +111,48 @@ object LakeStorage {
     * must keep going through `sessionState.newHadoopConf()`, which
     * copies parsed properties without re-parsing the XML). */
   lazy val sharedHadoopConf: Configuration = new Configuration()
+
+  /** A copy of `conf` that is cheap to ship to tasks.
+    *
+    * `Configuration.write` follows every key and value with that key's
+    * "source" array, gzipped one key at a time. The session conf holds
+    * about 1,100 keys, so one `SerializableConfiguration` of it costs
+    * 113 KB, 6.7-7.8 ms to serialize and 11-13 ms to deserialize; this
+    * copy costs 68 KB, 0.6 ms and 0.8-1.1 ms (local[4], 4-vCPU host).
+    * A manifest parquet scan broadcasts one conf per statement and a
+    * keyedlog job serializes one twice, so on small tables the plain
+    * copies were a fifth to two fifths of a point read's wall time.
+    *
+    * The wire format stays Hadoop's, with a null source array written by
+    * `WritableUtils.writeCompressedStringArray` (the encoding `readFields`
+    * expects), so tasks read back an ordinary `Configuration` with the
+    * same key -> value pairs and no per-key sources, which they never
+    * read. Every conf the engine ships goes through here: the manifest
+    * scan builder ([[graft.catalog.ManifestFileIndex.scanBuilder]]), the
+    * manifest writer factories and the keyedlog plan nodes, the last two
+    * through [[taskConf]]. */
+  def shippable(conf: Configuration): Configuration = new ShippableConf(conf)
+
+  private final class ShippableConf(conf: Configuration) extends Configuration(conf) {
+    override def write(out: java.io.DataOutput): Unit = {
+      val props = getProps
+      WritableUtils.writeVInt(out, props.size)
+      props.forEach { (k, v) =>
+        Text.writeString(out, k.asInstanceOf[String])
+        Text.writeString(out, v.asInstanceOf[String])
+        WritableUtils.writeCompressedStringArray(out, null)
+      }
+    }
+  }
+
+  /** The one way the engine wraps a Hadoop conf for tasks: the active
+    * session's conf by default (it carries `spark.hadoop.*` overrides such
+    * as object-store credentials, which a bare `new Configuration()` on an
+    * executor would miss), or a writer's prepared job conf, made
+    * [[shippable]]. */
+  def taskConf(conf: Configuration = SparkSession.active.sessionState.newHadoopConf())
+      : SerializableConfiguration =
+    new SerializableConfiguration(shippable(conf))
 
   /** Shared by driver-side puts and executor-side foreachPartition writers. */
   def putWith(fs: FileSystem, p: Path, data: String, retryDelayMs: Long): Boolean = {

@@ -1917,10 +1917,11 @@ object CoverageQueries extends QueryModule {
         graft.core.ManifestTable.currentVersion(dir).get)
       def hasBloom(f: String, colName: String): Boolean = {
         import scala.jdk.CollectionConverters._
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$dir/$f"),
-          graft.core.LakeStorage.sharedHadoopConf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val conf = graft.core.LakeStorage.sharedHadoopConf
+        val path = new org.apache.hadoop.fs.Path(s"$dir/$f")
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
+          org.apache.parquet.HadoopReadOptions.builder(conf, path).build())
         try r.getFooter.getBlocks.asScala.forall(_.getColumns.asScala
           .exists(c => c.getPath.toDotString == colName && c.getBloomFilterOffset >= 0))
         finally r.close()

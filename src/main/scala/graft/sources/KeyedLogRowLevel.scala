@@ -8,6 +8,8 @@ import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.sources.{Filter, In}
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
+import graft.core.LakeStorage
+
 /** Row-level DML (UPDATE / MERGE / arbitrary-predicate DELETE) for the
   * keyed-log connector — group-based COPY-ON-WRITE at FILE granularity,
   * the same DSv2 contract the manifest format implements
@@ -54,7 +56,7 @@ class KeyedLogRowLevelOperation(path: String, bucketN: Option[Int],
                                   KeyedLogSource.schema) extends RowLevelOperation {
   import KeyedLogRowLevelOperation._
 
-  private[sources] val conf = KeyedLogConf.capture()
+  private[sources] val conf = LakeStorage.taskConf()
 
   /** Live file NAMES pinned when the DML statement starts analysis —
     * scan and commit agree on this base (journal-resolved; listing on

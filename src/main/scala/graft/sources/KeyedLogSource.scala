@@ -19,6 +19,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.core.LakeStorage
+
 /** DataSource V2 reader for the tab-separated "keyed log" format
   * (`key \t seq \t metric` per line) — the custom-connector rung of the
   * extension ladder (SURVEY §4.3): when a format Spark does not know holds
@@ -413,9 +415,6 @@ class KeyedLogTable(path: String, bucketN: Option[Int] = None,
     () => new KeyedLogRowLevelOperation(path, bucketN, info.command, declared)
   }
 
-  private def hadoopConf() = new org.apache.spark.util.SerializableConfiguration(
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-
   /** The key set a conjunction of pushable KEY filters admits, as a
     * predicate over a file's key (None = the null key); None when any
     * filter is outside the supported shapes. */
@@ -447,11 +446,9 @@ class KeyedLogTable(path: String, bucketN: Option[Int] = None,
     * delete, and the feed can serve the delete's pre-images until the
     * tombstones age out. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    asOf.isEmpty && keyPredicate(filters).isDefined && {
-      val c = hadoopConf()
-      KeyedLogSource.readerFiles(path, c).forall(f =>
+    asOf.isEmpty && keyPredicate(filters).isDefined &&
+      KeyedLogSource.readerFiles(path, LakeStorage.taskConf()).forall(f =>
         KeyedLogSource.keyOfFile(new Path(f).getName).isDefined)
-    }
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     require(asOf.isEmpty,
@@ -460,7 +457,7 @@ class KeyedLogTable(path: String, bucketN: Option[Int] = None,
       s"keyed_log($path): DELETE supports conjunctions of key predicates " +
         s"(=, IN, IS NULL, IS NOT NULL) over key-clustered files; got " +
         filters.mkString(", ")))
-    val c = hadoopConf()
+    val c = LakeStorage.taskConf()
     val names = KeyedLogSource.readerFiles(path, c).map(f => new Path(f).getName)
     val keyed = names.map(n => n -> KeyedLogSource.keyOfFile(n))
     require(keyed.forall(_._2.isDefined),
@@ -561,7 +558,7 @@ case class KeyedLogBatchWrite(path: String, queryId: String,
                               clustered: Boolean = false,
                               extras: Seq[org.apache.spark.sql.types.DataType] = Nil)
     extends BatchWrite {
-  private val conf = KeyedLogConf.capture()
+  private val conf = LakeStorage.taskConf()
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     if (clustered) KeyedLogClusteredWriterFactory(path, queryId, conf, extras = extras)
     else KeyedLogWriterFactory(path, queryId, conf, extras = extras)
@@ -1153,17 +1150,6 @@ private[graft] object KeyedLogVersionLog {
   }
 }
 
-/** Hadoop-conf propagation: DSv2 plan nodes are built on the driver, so
-  * capture the SESSION's Hadoop conf there (carrying `spark.hadoop.*`
-  * overrides — s3a credentials, HA nameservices) and ship it to tasks;
-  * a bare `new Configuration()` on an executor would see only
-  * classpath defaults. */
-private[graft] object KeyedLogConf {
-  def capture(): org.apache.spark.util.SerializableConfiguration =
-    new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-}
-
 /** Streaming (micro-batch) sink: same staged-rename task commit, with the
   * epoch id baked into the FINAL file name — a RETRIED epoch regenerates
   * the same names and replaces its own files, so replays after a failure
@@ -1175,7 +1161,7 @@ private[graft] object KeyedLogConf {
   * file; last-committer-wins on the shared final name. */
 case class KeyedLogStreamingWrite(path: String, queryId: String,
     extras: Seq[org.apache.spark.sql.types.DataType] = Nil) extends StreamingWrite {
-  private val conf = KeyedLogConf.capture()
+  private val conf = LakeStorage.taskConf()
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     KeyedLogStreamingWriterFactory(path, queryId, conf, extras)
   // a REPLAYED epoch re-commits the same file names -> journal dedup
@@ -1465,7 +1451,7 @@ class KeyedLogScanBuilder(path: String, bucketN: Option[Int] = None,
     val enabled = org.apache.spark.sql.internal.SQLConf.get
       .getConfString("spark.sql.sources.v2.bucketing.enabled", "false") == "true"
     enabled && {
-      val files = KeyedLogSource.readerFiles(path, KeyedLogConf.capture())
+      val files = KeyedLogSource.readerFiles(path, LakeStorage.taskConf())
       files.nonEmpty &&
         files.forall(f => KeyedLogSource.keyOfFile(new Path(f).getName).isDefined)
     }
@@ -1780,7 +1766,7 @@ case class KeyedLogScan(path: String, required: StructType,
     }
 
   // captured lazily on the driver (both callers below run there)
-  @transient private lazy val conf = KeyedLogConf.capture()
+  @transient private lazy val conf = LakeStorage.taskConf()
 
   override def planInputPartitions(): Array[InputPartition] =
     (bucketGroups, keyGroups) match {

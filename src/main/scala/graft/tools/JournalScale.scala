@@ -26,7 +26,7 @@ object JournalScale {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val conf = graft.sources.KeyedLogConf.capture()
+    val conf = graft.core.LakeStorage.taskConf()
 
     def timeMs[T](body: => T): (T, Double) = {
       val t0 = System.nanoTime()

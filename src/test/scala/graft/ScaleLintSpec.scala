@@ -13,6 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `listLocatedStatus` build a `LocatedFileStatus` per entry, which on the
   * local store forks an `ls` per file for permissions nobody reads. Walks
   * go through `listStatus` ([[graft.core.LakeStorage.listRecursive]]).
+  * Two Hadoop-conf hazards are checked the same way: a one-argument
+  * `ParquetFileReader.open` re-parses core-default.xml for its read
+  * options, and a `new SerializableConfiguration` outside
+  * [[graft.core.LakeStorage.taskConf]] ships per-key gzipped sources.
   */
 class ScaleLintSpec extends AnyFunSuite {
 
@@ -60,20 +64,57 @@ class ScaleLintSpec extends AnyFunSuite {
   private val forkingListing =
     """\blistFiles\s*\((?:[^()]|\([^()]*\))*,|\blistLocatedStatus\s*\(""".r
 
+  /** Every `.scala` file under `src/main/scala` with its text. */
+  private lazy val mainSources: Seq[(java.io.File, String)] = {
+    val main = new java.io.File("src/main/scala")
+    assert(main.isDirectory, s"source root not found: ${main.getAbsolutePath}")
+    def sources(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) sources(f) else Seq(f))
+    sources(main).filter(_.getName.endsWith(".scala")).map(f =>
+      f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
   test("src/main never lists through LocatedFileStatus (listFiles / listLocatedStatus)") {
     Seq("fs.listFiles(base, true)", "fs.listFiles(new Path(root, \"x\"),\n  true)",
       "fs.listLocatedStatus(p)").foreach(s => assert(forkingListing.findFirstIn(s).isDefined, s))
     Seq("new java.io.File(dir).listFiles()", "f.listFiles ()", "fs.listStatus(p)")
       .foreach(s => assert(forkingListing.findFirstIn(s).isEmpty, s))
-    val main = new java.io.File("src/main/scala")
-    assert(main.isDirectory, s"source root not found: ${main.getAbsolutePath}")
-    def sources(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) sources(f) else Seq(f))
-    val offenders = sources(main).filter(_.getName.endsWith(".scala")).filter { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      forkingListing.findFirstIn(src).isDefined
-    }
+    val offenders = mainSources.collect {
+      case (f, src) if forkingListing.findFirstIn(src).isDefined => f.getPath }
     assert(offenders.isEmpty,
-      s"forking Hadoop listings (use listStatus): ${offenders.map(_.getPath).mkString(", ")}")
+      s"forking Hadoop listings (use listStatus): ${offenders.mkString(", ")}")
+  }
+
+  /** `ParquetFileReader.open(x)` with no top-level comma among its
+    * arguments (up to two levels of nested parens). */
+  private val oneArgFooterOpen =
+    """\bParquetFileReader\.open\s*\((?:[^(),]|\((?:[^()]|\([^()]*\))*\))*\)""".r
+
+  test("src/main opens parquet footers with the caller's conf, never a one-argument open") {
+    Seq("ParquetFileReader.open(in)",
+      "org.apache.parquet.hadoop.ParquetFileReader.open(\n  HadoopInputFile.fromStatus(st, conf))",
+      "ParquetFileReader.open(HadoopInputFile.fromPath(new Path(dir, f), conf))")
+      .foreach(s => assert(oneArgFooterOpen.findFirstIn(s).isDefined, s))
+    Seq("ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),\n" +
+        "  HadoopReadOptions.builder(conf, st.getPath).build())",
+      "ParquetFileReader.open(conf, path)")
+      .foreach(s => assert(oneArgFooterOpen.findFirstIn(s).isEmpty, s))
+    val offenders = mainSources.collect {
+      case (f, src) if oneArgFooterOpen.findFirstIn(src).isDefined => f.getPath }
+    assert(offenders.isEmpty,
+      s"one-argument ParquetFileReader.open (pass HadoopReadOptions): ${offenders.mkString(", ")}")
+  }
+
+  private val newSerializableConf = """\bnew\s+(?:[\w.]+\.)?SerializableConfiguration\s*\(""".r
+
+  test("src/main wraps task-shipped confs only in LakeStorage.taskConf") {
+    Seq("new SerializableConfiguration(job.getConfiguration)",
+      "new org.apache.spark.util.SerializableConfiguration(\n  spark.sessionState.newHadoopConf())")
+      .foreach(s => assert(newSerializableConf.findFirstIn(s).isDefined, s))
+    assert(newSerializableConf.findFirstIn("conf: SerializableConfiguration,").isEmpty)
+    val counts = mainSources.map { case (f, src) =>
+      f.getPath -> newSerializableConf.findAllIn(src).size }.filter(_._2 > 0)
+    assert(counts === Seq("src/main/scala/graft/core/LakeStorage.scala" -> 1),
+      "construct SerializableConfiguration only in LakeStorage.taskConf")
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.ManifestTable
+import graft.core.{LakeStorage, ManifestTable}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.MetadataBuilder
@@ -180,7 +180,7 @@ class BucketedTableSpec extends AnyFunSuite {
     (0 until 3).foreach { i =>
       s.sql(s"INSERT INTO gb.db.xj SELECT concat('k', id % 5), id + ${i * 100}, id FROM range(100)")
     }
-    val conf = graft.sources.KeyedLogConf.capture()
+    val conf = LakeStorage.taskConf()
     val dir = s.sql("SHOW TBLPROPERTIES gb.db.xj").collect()
       .find(_.getString(0) == "graft.location").get.getString(1)
     assert(graft.sources.KeyedLogVersionLog.versions(dir, conf) === Seq(0L, 1L, 2L))

@@ -8,6 +8,8 @@ import org.apache.spark.sql.sources.{EqualTo, IsNotNull}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.LakeStorage
+
 /** The custom DSv2 source must parse correctly (incl. malformed lines),
   * prune columns, push key filters into the per-file reader, and split one
   * partition per file. */
@@ -100,7 +102,7 @@ class DataSourceSpec extends AnyFunSuite {
   test("aborted write task leaves nothing visible (staged temp cleanup)") {
     val dir = Files.createTempDirectory("graft_klog_abort_").toString
     val _ = spark.sparkContext
-    val writer = KeyedLogWriterFactory(dir, "q1", KeyedLogConf.capture()).createWriter(0, 7L)
+    val writer = KeyedLogWriterFactory(dir, "q1", LakeStorage.taskConf()).createWriter(0, 7L)
     writer.write(org.apache.spark.sql.catalyst.InternalRow(
       org.apache.spark.unsafe.types.UTF8String.fromString("en"), 1L, 10L))
     writer.abort()
@@ -108,7 +110,7 @@ class DataSourceSpec extends AnyFunSuite {
     assert(new java.io.File(dir).listFiles().forall(!_.getName.startsWith(".tmp")),
       "aborted temp file not cleaned up")
     // an uncommitted (still-staged) writer is also invisible to readers
-    val w2 = KeyedLogWriterFactory(dir, "q2", KeyedLogConf.capture()).createWriter(1, 8L)
+    val w2 = KeyedLogWriterFactory(dir, "q2", LakeStorage.taskConf()).createWriter(1, 8L)
     w2.write(org.apache.spark.sql.catalyst.InternalRow(
       org.apache.spark.unsafe.types.UTF8String.fromString("de"), 2L, 20L))
     assert(read(dir).count() === 0)
@@ -147,7 +149,7 @@ class DataSourceSpec extends AnyFunSuite {
           .map(m => s.substring("part-".length, m.start))
           .getOrElse(fail(s"unexpected sink file name: $s"))
     }
-    val factory = KeyedLogStreamingWriterFactory(dir, qid, KeyedLogConf.capture())
+    val factory = KeyedLogStreamingWriterFactory(dir, qid, LakeStorage.taskConf())
     val replay = factory.createWriter(0, 99L, 0L)
     replay.write(org.apache.spark.sql.catalyst.InternalRow(
       org.apache.spark.unsafe.types.UTF8String.fromString("fr"), 9L, 90L))
@@ -240,7 +242,7 @@ class DataSourceSpec extends AnyFunSuite {
   test("offsets stay constant-size; seen-log compacts and bounds restart replay") {
     val dir = Files.createTempDirectory("graft_klog_led_").toString
     val ckpt = Files.createTempDirectory("graft_klog_led_ckpt_").toString
-    val conf = KeyedLogConf.capture()
+    val conf = LakeStorage.taskConf()
     val schema = KeyedLogSource.schema
     val stream = new KeyedLogMicroBatchStream(dir, schema, Array.empty, conf, ckpt)
     assert(stream.latestOffset() === KeyedLogVersionOffset(-1L)) // empty dir: no batch
@@ -289,7 +291,7 @@ class DataSourceSpec extends AnyFunSuite {
   test("a torn seen-log head entry (crash mid-write) is repaired on restart") {
     val dir = Files.createTempDirectory("graft_klog_torn_").toString
     val ckpt = Files.createTempDirectory("graft_klog_torn_ckpt_").toString
-    val conf = KeyedLogConf.capture()
+    val conf = LakeStorage.taskConf()
     val schema = KeyedLogSource.schema
     val stream = new KeyedLogMicroBatchStream(dir, schema, Array.empty, conf, ckpt)
     Files.write(java.nio.file.Paths.get(dir, "f000.log"), "a\t1\t10\n".getBytes("UTF-8"))
@@ -339,7 +341,7 @@ class DataSourceSpec extends AnyFunSuite {
     write(Seq(("en", 1L, 10L), ("de", 2L, 20L)))  // journal v0
     write(Seq(("fr", 3L, 30L)))                   // journal v1
     write(Seq(("en", 4L, 40L)))                   // journal v2
-    val conf = KeyedLogConf.capture()
+    val conf = LakeStorage.taskConf()
     assert(KeyedLogVersionLog.versions(dir, conf) === Seq(0L, 1L, 2L))
     def readWindow(opts: (String, String)*) = {
       val r = spark.read.format("graft.sources.KeyedLogSource")
@@ -379,7 +381,7 @@ class DataSourceSpec extends AnyFunSuite {
 
   test("journal head pointer: fresh/stale/corrupt/absent states all resolve") {
     val dir = Files.createTempDirectory("graft_klog_head_").toString
-    val conf = KeyedLogConf.capture()
+    val conf = LakeStorage.taskConf()
     (0 until 12).foreach(i =>
       KeyedLogVersionLog.commit(dir, conf, Seq(f"h-$i%03d.log")))
     // fresh pointer: head O(1), versions = 0..head without listing
@@ -406,7 +408,7 @@ class DataSourceSpec extends AnyFunSuite {
 
   test("journal commits race safely: sequential versions, no lost names") {
     val dir = Files.createTempDirectory("graft_klog_race_").toString
-    val conf = KeyedLogConf.capture()
+    val conf = LakeStorage.taskConf()
     val names = (0 until 40).map(i => f"race-$i%03d.log")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
@@ -858,7 +860,7 @@ class DataSourceSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_klog_retry_").toString
     val _ = spark.sparkContext
     def attempt(taskId: Long): Unit = {
-      val w = KeyedLogWriterFactory(dir, "q9", KeyedLogConf.capture())
+      val w = KeyedLogWriterFactory(dir, "q9", LakeStorage.taskConf())
         .createWriter(0, taskId)
       w.write(org.apache.spark.sql.catalyst.InternalRow(
         org.apache.spark.unsafe.types.UTF8String.fromString("en"), 1L, 10L))
