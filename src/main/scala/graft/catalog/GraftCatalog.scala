@@ -1442,13 +1442,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def readMeta(dir: String): Option[TableMeta] = {
     val p = new Path(dir, MetaFile)
     if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text = try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 8192, false)
-      new String(bytes.toByteArray, "UTF-8")
-    } finally in.close()
-    val m = org.json4s.jackson.JsonMethods.parse(text)
+    val m = org.json4s.jackson.JsonMethods.parse(graft.core.LakeStorage.readText(fs, p))
     def str(k: String): Option[String] = m \ k match {
       case org.json4s.JString(s) => Some(s)
       case _                     => None

@@ -103,14 +103,9 @@ object IdentityColumns {
     * reserved the same n — the total alone cannot disambiguate). */
   private def readRaw(fs: org.apache.hadoop.fs.FileSystem, d: Path,
                       k: Long): Option[String] = {
-    val content = try {
-      val in = fs.open(new Path(d, s"c-$k"))
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 256, false)
-        new String(bytes.toByteArray, "UTF-8").trim
-      } finally in.close()
-    } catch { case _: java.io.IOException => "" }
+    val content =
+      try graft.core.LakeStorage.readText(fs, new Path(d, s"c-$k")).trim
+      catch { case _: java.io.IOException => "" }
     if (content.isEmpty) None else Some(content)
   }
 
@@ -267,14 +262,9 @@ object IdentityColumns {
     if (!fs.exists(d)) fs.mkdirs(d)
     val name = s"e-$queryId-e$epochId-p$partitionId"
     def baseOf(): Option[Long] = {
-      val content = try {
-        val in = fs.open(new Path(d, name))
-        try {
-          val bytes = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 256, false)
-          new String(bytes.toByteArray, "UTF-8").trim
-        } finally in.close()
-      } catch { case _: java.io.IOException => "" }
+      val content =
+        try graft.core.LakeStorage.readText(fs, new Path(d, name)).trim
+        catch { case _: java.io.IOException => "" }
       if (content.isEmpty) None
       else scala.util.Try(content.takeWhile(_ != ':').toLong).toOption
     }

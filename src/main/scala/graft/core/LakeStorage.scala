@@ -57,12 +57,7 @@ class LakeStorage(val root: String, conf: Configuration, retryDelayMs: Long = 50
   /** Point read; None when missing (the reference's 404->null). */
   def get(fileName: String): Option[String] = {
     val p = path(fileName)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), UTF_8))
-      finally in.close()
-    }
+    if (!fs.exists(p)) None else Some(LakeStorage.readText(fs, p))
   }
 
   def exists(fileName: String): Boolean = fs.exists(path(fileName))
@@ -176,9 +171,16 @@ object LakeStorage {
   def openFor(root: String): FileSystem =
     FileSystem.get(new URI(root), sharedHadoopConf)
 
-  /** Atomic create-exclusive across PROCESSES — the claim primitive the
-    * optimistic commit protocols (manifest markers, keyedlog journal,
-    * seen-log fence) build on. Hadoop's LOCAL filesystem implements
+  /** The whole object at `p` as UTF-8 text; a missing object raises
+    * `FileNotFoundException`. */
+  def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  }
+
+  /** Atomic create-exclusive across PROCESSES — the claim primitive of
+    * [[VersionLog.claim]] (behind every versioned log) and of the identity
+    * columns' epoch-slab reservation. Hadoop's LOCAL filesystem implements
     * `create(p, overwrite = false)` as check-then-act, so two JVMs could
     * both claim one path; `file://` URIs therefore go through java.nio's
     * CREATE_NEW (O_EXCL — atomic on POSIX), restoring exactly-one-winner.

@@ -23,7 +23,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *  - `{"a":[...],"r":[...]}` delta commit: previous version minus `r`
   *    plus `a` (appends carry only `a`; row-level DML carries both)
   *  - `[...]`             legacy full-list marker, still readable
-  * Every [[CheckpointInterval]] commits, the committer also writes a
+  * Every [[VersionLog.AnchorInterval]] commits, the committer also writes a
   * CHECKPOINT — a plain text file, one dir-relative path per line, of the
   * fully-resolved list at that version (text so the metadata itself is
   * splittable and `spark.read.text`-able for metadata-as-Dataset reads).
@@ -59,14 +59,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *  - [[compact]] re-adds files appended since the snapshot it rewrote,
   *    and ABORTS if a concurrent writer replaced/removed files it
   *    compacted (the rewrite is stale — rerun it).
-  * The marker claim goes through [[LakeStorage.createExclusive]]: atomic
-  * on HDFS (exclusive namenode create) AND on local filesystems (O_EXCL —
-  * Hadoop's own local `create(overwrite = false)` is check-then-act, so
-  * the helper routes `file://` through java.nio; proven cross-process by
-  * CommitRaceSpec), making the loop a correct lock-free protocol there.
-  * On S3A-style object stores without conditional PUT the claim is
-  * check-then-act and the protocol is best-effort (a store with
-  * If-None-Match closes that hole). [[vacuum]]
+  * The markers are a [[VersionLog]] (numbered from 1, head pointer
+  * `_head`): its doc gives the claim loop, the pointer protocol and the
+  * claim's atomicity by store class. [[vacuum]]
   * keeps the previous `keep - 1` versions as a grace window for in-flight
   * readers (and writes a checkpoint at the oldest kept version before
   * deleting older markers, so kept versions stay resolvable); schedule it
@@ -78,112 +73,28 @@ object ManifestTable {
   private val CkptPrefix = "_ckpt_"
   private val DataDirPrefix = "d-"
 
-  /** A checkpoint is written every this-many commits; resolution therefore
-    * reads at most this many markers plus one checkpoint. Delta uses 10 by
-    * default for the same knob (checkpointInterval). */
-  val CheckpointInterval: Long = 10L
-
-  private def marker(n: Long): String = f"${MarkerPrefix}$n%020d"
   private def ckptName(n: Long): String = f"${CkptPrefix}$n%020d"
 
-  /** Parse a name of the form `prefix<long>`; None for foreign files that
-    * merely share the prefix (a stray `_commit_x` must not crash manifest
-    * resolution or vacuum). */
-  private def parseSuffix(name: String, prefix: String): Option[Long] =
-    if (!name.startsWith(prefix)) None
-    else scala.util.Try(name.stripPrefix(prefix).toLong).toOption
-
-  /** Best-effort head CACHE: `_head` holds `{"v":N}` for some committed
-    * version N. Written create-overwrite after every successful commit
-    * (non-atomic and advisory by design — any torn/stale/absent state is
-    * recoverable): a reader validates the pointed-at marker EXISTS, then
-    * probes forward marker-by-marker to the true head, so a pointer k
-    * commits stale costs k+1 existence checks and a missing/corrupt
-    * pointer falls back to the directory listing. Head resolution is
-    * therefore O(1) object reads in steady state instead of
-    * O(retained-versions) listing per commit attempt/read. */
-  private val HeadPointer = "_head"
-
-  private def writeHeadPointer(dir: String, v: Long): Unit =
-    try {
-      val fs = LakeStorage.openFor(dir)
-      val out = fs.create(new Path(dir, HeadPointer), true)
-      try out.write(s"""{"v":$v}""".getBytes("UTF-8")) finally out.close()
-    } catch { case _: java.io.IOException => () } // advisory cache only
-
-  private def readHeadPointer(fs: org.apache.hadoop.fs.FileSystem,
-                              dir: String): Option[Long] =
-    try {
-      val p = new Path(dir, HeadPointer)
-      if (!fs.exists(p)) None
-      else scala.util.Try(org.json4s.jackson.JsonMethods.parse(readTextFile(fs, p)))
-        .toOption.flatMap(_ \ "v" match {
-          case org.json4s.JInt(n) => Some(n.toLong)
-          case _                  => None
-        })
-    } catch { case _: java.io.IOException => None }
+  /** The marker log of `dir`: markers numbered from 1, head pointer `_head`. */
+  private def markerLog(dir: String): VersionLog =
+    new VersionLog(dir, LakeStorage.openFor(dir), MarkerPrefix, Some("_head"), "manifest")
 
   /** Highest committed version, if any. */
-  def currentVersion(dir: String): Option[Long] = currentVersionProbed(dir)._1
+  def currentVersion(dir: String): Option[Long] = markerLog(dir).head
 
   /** currentVersion + the number of filesystem operations it took —
-    * test instrumentation for the O(1)-with-pointer claim. A listing
-    * fallback counts as one operation per retained marker. */
-  private[graft] def currentVersionProbed(dir: String): (Option[Long], Int) = {
-    val fs = LakeStorage.openFor(dir)
-    readHeadPointer(fs, dir) match {
-      case Some(v) if fs.exists(new Path(dir, marker(v))) =>
-        var head = v
-        var probes = 2 // pointer read + pointed-marker check
-        while (fs.exists(new Path(dir, marker(head + 1)))) { head += 1; probes += 1 }
-        (Some(head), probes + 1) // + the final miss
-      case _ =>
-        val vs = allVersions(dir)
-        (vs.lastOption, 1 + vs.length)
-    }
-  }
+    * test instrumentation for the O(1)-with-pointer claim. */
+  private[graft] def currentVersionProbed(dir: String): (Option[Long], Int) =
+    markerLog(dir).headProbed
 
   /** Latest version committed at or before `tsMillis` (marker modification
     * time — the commit instant on any Hadoop filesystem). None if the
     * table has no version that old. */
-  def versionAsOfTimestamp(dir: String, tsMillis: Long): Option[Long] = {
-    val fs = LakeStorage.openFor(dir)
-    val base = new Path(dir)
-    if (!fs.exists(base)) return None
-    fs.listStatus(base).iterator
-      .flatMap(s => parseSuffix(s.getPath.getName, MarkerPrefix)
-        .filter(_ => s.getModificationTime <= tsMillis))
-      .reduceOption(_ max _)
-  }
+  def versionAsOfTimestamp(dir: String, tsMillis: Long): Option[Long] =
+    markerLog(dir).asOfTimestamp(tsMillis)
 
   /** All committed versions still present (ascending). */
-  def allVersions(dir: String): Seq[Long] = {
-    val fs = LakeStorage.openFor(dir)
-    val base = new Path(dir)
-    if (!fs.exists(base)) return Seq.empty
-    fs.listStatus(base).iterator
-      .map(_.getPath.getName)
-      .flatMap(parseSuffix(_, MarkerPrefix))
-      .toSeq.sorted
-  }
-
-  /** Checkpoint versions present (ascending). */
-  private def checkpointVersions(dir: String): Seq[Long] = {
-    val fs = LakeStorage.openFor(dir)
-    val base = new Path(dir)
-    if (!fs.exists(base)) return Seq.empty
-    fs.listStatus(base).iterator
-      .map(_.getPath.getName)
-      .flatMap(parseSuffix(_, CkptPrefix))
-      .toSeq.sorted
-  }
-
-  /** The path of the checkpoint file for `version`, if one exists — the
-    * full resolved file list as newline-separated text, readable as a
-    * Dataset via `spark.read.text` (metadata-as-Dataset entry point). */
-  private[graft] def checkpointFileAtOrBefore(dir: String, version: Long): Option[(Long, String)] =
-    checkpointVersions(dir).filter(_ <= version).lastOption
-      .map(v => (v, s"$dir/${ckptName(v)}"))
+  def allVersions(dir: String): Seq[Long] = markerLog(dir).listed
 
   // ---- marker encoding -------------------------------------------------
 
@@ -215,25 +126,7 @@ object ManifestTable {
     def deletedRows: Long = dvs.valuesIterator.map(_.count).sum
   }
 
-  private def readTextFile(fs: org.apache.hadoop.fs.FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 8192, false)
-      new String(bytes.toByteArray, "UTF-8")
-    } finally in.close()
-  }
-
-  private def strings(v: org.json4s.JValue, p: Path): Seq[String] = v match {
-    case org.json4s.JArray(items) => items.map {
-      case org.json4s.JString(f) => f
-      case other => throw new IllegalStateException(
-        s"corrupt manifest $p: non-string element $other")
-    }
-    case org.json4s.JNothing => Seq.empty
-    case other => throw new IllegalStateException(
-      s"corrupt manifest $p: expected JSON array, got $other")
-  }
+  private val EmptyState = TableState(Seq.empty, Map.empty, Map.empty)
 
   private def markerStats(m: Map[String, org.json4s.JValue]): Map[String, FileStats.Stats] =
     m.get("st") match {
@@ -253,24 +146,23 @@ object ManifestTable {
       case _ => Map.empty
     }
 
-  private def readMarkerData(dir: String, version: Long): MarkerData = {
-    val fs = LakeStorage.openFor(dir)
-    val p = new Path(dir, marker(version))
-    org.json4s.jackson.JsonMethods.parse(readTextFile(fs, p)) match {
-      case arr: org.json4s.JArray =>
-        SnapshotMarker(strings(arr, p), Map.empty, Map.empty) // legacy full list
-      case obj: org.json4s.JObject =>
-        val m = obj.obj.toMap
-        if (m.contains("s"))
-          SnapshotMarker(strings(m("s"), p), markerStats(m), markerDvs(m))
-        else DeltaMarker(
-          strings(m.getOrElse("a", org.json4s.JNothing), p),
-          strings(m.getOrElse("r", org.json4s.JNothing), p),
-          markerStats(m), markerDvs(m))
-      case other => throw new IllegalStateException(
-        s"corrupt manifest $p: expected JSON array or object, got $other")
-    }
+  private def decodeMarker(j: org.json4s.JValue): MarkerData = j match {
+    case arr: org.json4s.JArray =>
+      SnapshotMarker(VersionLog.strings(arr), Map.empty, Map.empty) // legacy full list
+    case obj: org.json4s.JObject =>
+      val m = obj.obj.toMap
+      if (m.contains("s"))
+        SnapshotMarker(VersionLog.strings(m("s")), markerStats(m), markerDvs(m))
+      else DeltaMarker(
+        VersionLog.strings(m.getOrElse("a", org.json4s.JNothing)),
+        VersionLog.strings(m.getOrElse("r", org.json4s.JNothing)),
+        markerStats(m), markerDvs(m))
+    case other => VersionLog.corrupt(s"expected JSON array or object, got $other")
   }
+
+  /** Marker `version`, through the log's entry cache. */
+  private def readMarkerData(dir: String, version: Long): MarkerData =
+    markerLog(dir).entry(version)(decodeMarker)
 
   /** Checkpoint line format: `relative/path`, `relative/path\t{stats}`,
     * or `relative/path\t{stats}\t{dv}` (tab-separated file-stats and
@@ -279,9 +171,8 @@ object ManifestTable {
     * checkpoints parse as the first form). Still plain newline-separated
     * text, so the metadata stays `spark.read.text`-able and splittable. */
   private def readCheckpointEntries(dir: String, version: Long): TableState = {
-    val fs = LakeStorage.openFor(dir)
-    val text = readTextFile(fs, new Path(dir, ckptName(version)))
-    if (text.isEmpty) return TableState(Seq.empty, Map.empty, Map.empty)
+    val text = LakeStorage.readText(LakeStorage.openFor(dir), new Path(dir, ckptName(version)))
+    if (text.isEmpty) return EmptyState
     val files = Seq.newBuilder[String]
     val stats = Map.newBuilder[String, FileStats.Stats]
     val dvs = Map.newBuilder[String, DeletionVectors.DvRef]
@@ -339,134 +230,103 @@ object ManifestTable {
     (st.files, st.stats)
   }
 
-  /** [[manifestEntries]] plus the version's deletion-vector attachments —
-    * what every LIVE-ROW read path resolves (a scan that ignored the
-    * vectors would resurrect deleted rows). */
   /** Resolved-state LRU (values softly referenced — the GC reclaims them
     * under memory pressure before anything OOMs). A committed version's
     * content is immutable, so (dir, version) *almost* identifies a state;
     * the one rebirth case — DROP TABLE then CREATE at the same path —
-    * is fenced by validating the md5 of the whole resolution CHAIN's
-    * marker bytes ([[cacheTag]]): pool names carry UUIDs, so chains
-    * folding to different states can't hash equal. A hit costs a few
-    * small delta-marker reads instead of checkpoint + chain replay — at
-    * 10⁵ live files
-    * that's the difference between ~0.24 s and ~1 ms per query plan
-    * (measured in tools/MetaScale). */
+    * is fenced by the resolution CHAIN's identity ([[Chain.tag]]): the
+    * (length, mtime) stamp of every marker the backward walk reads plus
+    * that of its checkpoint anchor. Fencing on v's own marker alone is
+    * not sound for DELTA versions: a recreate where v's delta marker
+    * matches across incarnations (an empty append) but an EARLIER chain
+    * marker differs would serve the dead incarnation's state. A hit
+    * costs the walk's marker stats (entry-cache hits) instead of
+    * checkpoint + chain replay — at 10⁵ live files that's the difference
+    * between ~0.24 s and ~1 ms per query plan (measured in
+    * tools/MetaScale). */
   private val StateCacheMax = 32
   private val stateCache =
     new java.util.LinkedHashMap[(String, Long),
-        java.lang.ref.SoftReference[(String, TableState)]](StateCacheMax, 0.75f, true) {
+        java.lang.ref.SoftReference[(Seq[VersionLog.Stamp], TableState)]](StateCacheMax, 0.75f, true) {
       override protected def removeEldestEntry(
           e: java.util.Map.Entry[(String, Long),
-            java.lang.ref.SoftReference[(String, TableState)]]): Boolean =
+            java.lang.ref.SoftReference[(Seq[VersionLog.Stamp], TableState)]]): Boolean =
         size() > StateCacheMax
     }
 
-  /** Cache-validation tag for (dir, version): md5 over the BYTES of every
-    * marker the backward resolution would read — version v down to the
-    * nearest snapshot marker or checkpoint (whose identity is folded as
-    * length+mtime without reading its body). Hashing only v's own marker
-    * is not a sound fence for DELTA versions: a DROP/recreate where v's
-    * delta marker is byte-identical across incarnations (an empty append)
-    * but an EARLIER chain marker differs would serve the dead
-    * incarnation's state. Hashing the whole chain makes tag-equal imply
-    * state-equal (file-bearing markers are unique per incarnation via
-    * pool UUIDs; byte-identical chains fold to identical states). Cost is
-    * ≤ CheckpointInterval small delta-marker reads per validation — still
-    * far below a full checkpoint read + chain fold. */
-  private def cacheTag(dir: String, version: Long): String =
-    try {
-      val fs = LakeStorage.openFor(dir)
-      val md = java.security.MessageDigest.getInstance("MD5")
-      var v = version
-      var done = false
-      while (!done) {
-        if (v < 1) done = true
-        else {
-          val txt = readTextFile(fs, new Path(dir, marker(v)))
-          md.update(txt.getBytes("UTF-8"))
-          if (txt.startsWith("{\"s\"")) done = true // snapshot anchor
-          else {
-            val ck = new Path(dir, ckptName(v))
-            if (fs.exists(ck)) { // checkpoint anchor: fold its identity
-              val st = fs.getFileStatus(ck)
-              md.update(s"${st.getLen}:${st.getModificationTime}".getBytes("UTF-8"))
-              done = true
-            } else v -= 1
-          }
-        }
-      }
-      java.util.Base64.getEncoder.encodeToString(md.digest())
-    } catch { case _: java.io.IOException => null } // marker vacuumed: checkpoint path, uncached
+  /** The backward walk that resolves a version: from `version` down to
+    * the nearest snapshot marker or checkpoint (or below v1: the table
+    * began empty), at most [[VersionLog.AnchorInterval]] markers. `base`
+    * reads the anchor's state; `deltas` (oldest first) replay on it. */
+  private final case class Chain(tag: Seq[VersionLog.Stamp], base: () => TableState,
+                                 deltas: List[DeltaMarker])
 
-  def state(dir: String, version: Long): TableState = {
-    val tag = cacheTag(dir, version)
-    val key = (dir, version)
-    if (tag != null) stateCache.synchronized {
-      val ref = stateCache.get(key)
-      val hit = if (ref == null) null else ref.get()
-      if (hit != null && hit._1 == tag) return hit._2
+  private def chain(dir: String, version: Long): Chain = {
+    val log = markerLog(dir)
+    val tag = Vector.newBuilder[VersionLog.Stamp]
+    var deltas = List.empty[DeltaMarker]
+    var base: () => TableState = null
+    var v = version
+    while (base == null) {
+      if (v < 1) base = () => EmptyState
+      else log.stamped(v)(decodeMarker) match {
+        case (stamp, SnapshotMarker(files, st, dv)) =>
+          tag += stamp
+          base = () => TableState(files, st, dv)
+        case (stamp, d: DeltaMarker) =>
+          tag += stamp
+          val ckpt = try Some(log.fs.getFileStatus(new Path(dir, ckptName(v))))
+            catch { case _: java.io.FileNotFoundException => None }
+          ckpt match {
+            case Some(ck) => // the checkpoint already holds this delta
+              tag += ((ck.getLen, ck.getModificationTime))
+              val at = v
+              base = () => readCheckpointEntries(dir, at)
+            case None => deltas ::= d; v -= 1
+          }
+      }
     }
-    val resolved = stateUncached(dir, version)
-    if (tag != null) stateCache.synchronized {
-      stateCache.put(key, new java.lang.ref.SoftReference((tag, resolved))); ()
-    }
-    resolved
+    Chain(tag.result(), base, deltas)
   }
 
-  private def stateUncached(dir: String, version: Long): TableState = {
+  /** [[manifestEntries]] plus the version's deletion-vector attachments —
+    * what every LIVE-ROW read path resolves (a scan that ignored the
+    * vectors would resurrect deleted rows). Retries on a marker deleted
+    * mid-walk by a concurrent [[vacuum]] — the retry re-anchors at the
+    * checkpoint vacuum wrote before truncating. */
+  def state(dir: String, version: Long): TableState = {
+    val key = (dir, version)
     var lastMiss: java.io.FileNotFoundException = null
     var attempt = 0
     while (attempt < 3) {
-      try return resolve(dir, version)
-      catch { case e: java.io.FileNotFoundException => lastMiss = e; attempt += 1 }
+      try {
+        val c = chain(dir, version)
+        stateCache.synchronized {
+          val ref = stateCache.get(key)
+          val hit = if (ref == null) null else ref.get()
+          if (hit != null && hit._1 == c.tag) return hit._2
+        }
+        val resolved = c.deltas.foldLeft(c.base()) { case (TableState(list, stats, dvs), d) =>
+          val rm = d.remove.toSet
+          TableState(
+            (if (rm.isEmpty) list else list.filterNot(rm)) ++ d.add,
+            (if (rm.isEmpty) stats else stats -- rm) ++ d.stats,
+            (if (rm.isEmpty) dvs else dvs -- rm) ++ d.dvs)
+        }
+        stateCache.synchronized {
+          stateCache.put(key, new java.lang.ref.SoftReference((c.tag, resolved))); ()
+        }
+        return resolved
+      } catch { case e: java.io.FileNotFoundException => lastMiss = e; attempt += 1 }
     }
     throw new IllegalStateException(
       s"version $version of $dir is not resolvable (vacuumed or corrupt log)", lastMiss)
   }
 
-  private def resolve(dir: String, version: Long): TableState = {
-    val ckpt = checkpointVersions(dir).filter(_ <= version).lastOption
-    if (ckpt.contains(version)) return readCheckpointEntries(dir, version)
-    var deltas = List.empty[DeltaMarker] // head = oldest unapplied
-    var base: TableState = null
-    var v = version
-    while (base == null) {
-      if (v < version && ckpt.contains(v)) base = readCheckpointEntries(dir, v)
-      else if (v < 1) // all-delta chain: the table began empty
-        base = TableState(Seq.empty, Map.empty, Map.empty)
-      else readMarkerData(dir, v) match {
-        case SnapshotMarker(files, st, dv) => base = TableState(files, st, dv)
-        case d: DeltaMarker => deltas ::= d; v -= 1
-      }
-    }
-    deltas.foldLeft(base) { case (TableState(list, stats, dvs), d) =>
-      val rm = d.remove.toSet
-      TableState(
-        (if (rm.isEmpty) list else list.filterNot(rm)) ++ d.add,
-        (if (rm.isEmpty) stats else stats -- rm) ++ d.stats,
-        (if (rm.isEmpty) dvs else dvs -- rm) ++ d.dvs)
-    }
-  }
-
-  /** Number of marker/checkpoint objects the backward scan reads to
+  /** Number of marker/checkpoint objects the backward walk reads to
     * resolve `version` — test instrumentation for the O(interval) claim. */
-  private[core] def resolutionDepth(dir: String, version: Long): Int = {
-    val ckpt = checkpointVersions(dir).filter(_ <= version).lastOption
-    if (ckpt.contains(version)) return 1
-    var reads = 0
-    var v = version
-    var done = false
-    while (!done) {
-      if (v < 1 || (v < version && ckpt.contains(v))) { reads += 1; done = true }
-      else readMarkerData(dir, v) match {
-        case _: SnapshotMarker => reads += 1; done = true
-        case _: DeltaMarker => reads += 1; v -= 1
-      }
-    }
-    reads
-  }
+  private[core] def resolutionDepth(dir: String, version: Long): Int =
+    chain(dir, version).tag.size
 
   /** (added, removed) files between two committed versions — the change
     * feed's metadata query, O(window delta): replays ONLY the delta
@@ -821,7 +681,7 @@ object ManifestTable {
     val st = collectStats(dataDir.getOrElse(dir), added, ndvCols)
     commitLoop(dir) { base =>
       val baseState = base.map(state(dir, _))
-        .getOrElse(TableState(Seq.empty, Map.empty, Map.empty))
+        .getOrElse(EmptyState)
       conflictGuard.foreach { case (snapshot, mayConflict) =>
         val conflicting = baseState.files
           .filterNot(snapshot).filter(f => mayConflict(f, baseState.stats.get(f)))
@@ -864,7 +724,7 @@ object ManifestTable {
     val st = collectStats(dataDir.getOrElse(dir), added, ndvCols)
     commitLoop(dir) { base =>
       val baseState = base.map(state(dir, _))
-        .getOrElse(TableState(Seq.empty, Map.empty, Map.empty))
+        .getOrElse(EmptyState)
       val live = baseState.files.toSet
       val ok = dvs.keysIterator.forall { f =>
         live.contains(f) &&
@@ -988,21 +848,28 @@ object ManifestTable {
       readSnapshot(spark, dir, snapFiles, readSchema), snap.dvs)
     val compacted = writePool(layoutRewrite(snapshot, nOut, clusterBy, zorderBy),
       dir, writeOptions = writeOptions)
-    val compactedStats = collectStats(dir, compacted, ndvCols)
-    val snapSet = snapFiles.toSet
+    commitCompacted(dir, snapVersion, snap, compacted, collectStats(dir, compacted, ndvCols))
+    (snapFiles.length.toLong, compacted.length.toLong)
+  }
+
+  /** Commit a whole-snapshot rewrite of version `snapVersion` as a new
+    * snapshot — the rebase rule shared by [[compact]] and
+    * [[compactBucketed]]: files appended since the snapshot are carried
+    * over (with their vectors — applied by no one); a concurrent writer
+    * that replaced or re-vectored any rewritten file aborts the commit. */
+  private def commitCompacted(dir: String, snapVersion: Long, snap: TableState,
+      compacted: Seq[String], compactedStats: Map[String, FileStats.Stats]): Long = {
+    val snapSet = snap.files.toSet
     commitLoop(dir) { base =>
       if (base.contains(snapVersion)) Some(Snapshot(compacted, compactedStats))
       else {
-        val baseState = base.map(state(dir, _))
-          .getOrElse(TableState(Seq.empty, Map.empty, Map.empty))
+        val baseState = base.map(state(dir, _)).getOrElse(EmptyState)
         val baseFiles = baseState.files
         // a vector committed on OUR files since the snapshot means rows
         // this rewrite already copied were deleted concurrently — stale
         val dvsUnchanged = snapSet.forall(f =>
           baseState.dvs.get(f).map(_.path) == snap.dvs.get(f).map(_.path))
         if (snapSet.subsetOf(baseFiles.toSet) && dvsUnchanged) {
-          // concurrent appends since our snapshot: carry their files over
-          // (vectors on carried files too — they were applied by no one)
           val carried = baseFiles.filterNot(snapSet)
           Some(Snapshot(compacted ++ carried,
             compactedStats ++ baseState.stats.view.filterKeys(carried.toSet).toMap,
@@ -1011,7 +878,6 @@ object ManifestTable {
         else None // our snapshot's files were replaced — stale rewrite
       }
     }
-    (snapFiles.length.toLong, compacted.length.toLong)
   }
 
   /** Layout of a compaction rewrite — ONE definition shared by
@@ -1288,25 +1154,7 @@ object ManifestTable {
     val compacted = stagePoolBucketed(
       applyDvs(spark, dir, readSnapshot(spark, dir, snapFiles, readSchema), snap.dvs),
       dir, numBuckets, keyCol, writeOptions)
-    val compactedStats = collectStats(dir, compacted, ndvCols)
-    val snapSet = snapFiles.toSet
-    commitLoop(dir) { base =>
-      if (base.contains(snapVersion)) Some(Snapshot(compacted, compactedStats))
-      else {
-        val baseState = base.map(state(dir, _))
-          .getOrElse(TableState(Seq.empty, Map.empty, Map.empty))
-        val baseFiles = baseState.files
-        val dvsUnchanged = snapSet.forall(f =>
-          baseState.dvs.get(f).map(_.path) == snap.dvs.get(f).map(_.path))
-        if (snapSet.subsetOf(baseFiles.toSet) && dvsUnchanged) {
-          val carried = baseFiles.filterNot(snapSet)
-          Some(Snapshot(compacted ++ carried,
-            compactedStats ++ baseState.stats.view.filterKeys(carried.toSet).toMap,
-            baseState.dvs.view.filterKeys(carried.toSet).toMap))
-        }
-        else None
-      }
-    }
+    commitCompacted(dir, snapVersion, snap, compacted, collectStats(dir, compacted, ndvCols))
     (snapFiles.length.toLong, compacted.length.toLong)
   }
 
@@ -1356,7 +1204,7 @@ object ManifestTable {
       .flatMap { n =>
         val name = n.stripPrefix(TagPrefix)
         scala.util.Try(
-          readTextFile(fs, new Path(dir, n)).trim.toLong).toOption.map(name -> _)
+          LakeStorage.readText(fs, new Path(dir, n)).trim.toLong).toOption.map(name -> _)
       }.toMap
   }
 
@@ -1375,7 +1223,7 @@ object ManifestTable {
         ("tag", s.getModificationTime))
       .toMap
     val brMs = branches(dir).flatMap { case (name, head) =>
-      val p = new Path(branchLogDir(dir, name), marker(head))
+      val p = markerLog(branchLogDir(dir, name)).path(head)
       if (fs.exists(p))
         Some(name -> ("branch", fs.getFileStatus(p).getModificationTime))
       else None
@@ -1504,7 +1352,7 @@ object ManifestTable {
     val fs = LakeStorage.openFor(dir)
     val p = new Path(branchLogDir(dir, name), ForkFile)
     require(fs.exists(p), s"no branch '$name' on $dir")
-    readTextFile(fs, p).trim.toLong
+    LakeStorage.readText(fs, p).trim.toLong
   }
 
   /** True when the branch exists WITH its fork anchor. A writer that
@@ -1565,7 +1413,7 @@ object ManifestTable {
     // mid-write, or a crash between create and write — parses as ABSENT,
     // which only re-widens the next diff to the fork base; the per-file
     // idempotent delta keeps that publish correct regardless
-    scala.util.Try(readTextFile(fs, p).trim.toLong).toOption
+    scala.util.Try(LakeStorage.readText(fs, p).trim.toLong).toOption
   }
 
   private def writePublished(dir: String, name: String, brV: Long): Unit = {
@@ -1624,7 +1472,7 @@ object ManifestTable {
     var publishedAt: Option[Long] = None
     val out = try commitLoop(dir) { cur =>
       val curState = cur.map(state(dir, _))
-        .getOrElse(TableState(Seq.empty, Map.empty, Map.empty))
+        .getOrElse(EmptyState)
       val live = curState.files.toSet
       // per-file idempotence: never re-add a file main already has, never
       // re-remove one already gone, never re-attach an identical vector
@@ -1756,10 +1604,10 @@ object ManifestTable {
           removed += 1
         }
       } else if (!dryRun) {
-        parseSuffix(name, MarkerPrefix).foreach { v =>
+        VersionLog.version(MarkerPrefix, name).foreach { v =>
           if (v < cutoff && !tagged.contains(v)) { fs.delete(st.getPath, false); () }
         }
-        parseSuffix(name, CkptPrefix).foreach { v =>
+        VersionLog.version(CkptPrefix, name).foreach { v =>
           if (v < cutoff && !tagged.contains(v)) { fs.delete(st.getPath, false); () }
         }
       }
@@ -1864,46 +1712,29 @@ object ManifestTable {
       stats: Map[String, FileStats.Stats],
       dvs: Map[String, DeletionVectors.DvRef] = Map.empty) extends Commit
 
-  /** Optimistic commit: compute the commit action against the current
-    * version and try to create marker `current + 1`; if another writer won
-    * the race, re-read and rebase. `action(base)` returning None aborts
-    * (the rebase found the attempt stale). After a successful commit at a
-    * checkpoint-interval boundary, also writes the checkpoint. Returns the
+  /** Optimistic commit through the marker log's claim loop: compute the
+    * commit action against the current version and claim marker
+    * `current + 1`; a lost claim re-reads and rebases. `action(base)`
+    * returning None aborts (the rebase found the attempt stale). After a
+    * commit at an anchor version, also writes the checkpoint. Returns the
     * committed version. */
   private def commitLoop(dir: String, maxRetries: Int = 20)(
       action: Option[Long] => Option[Commit]): Long = {
-    val fs = LakeStorage.openFor(dir)
-    val basePath = new Path(dir)
-    if (!fs.exists(basePath)) fs.mkdirs(basePath)
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val base = currentVersion(dir)
-      val next = base.getOrElse(0L) + 1
+    val next = markerLog(dir).commit(first = 1L, attempts = maxRetries + 1) { base =>
       action(base) match {
         case None => throw new java.util.ConcurrentModificationException(
           s"commit to $dir aborted: the files this attempt rewrote were " +
             "replaced by a concurrent writer (stale rewrite) — rerun")
-        case Some(commit) =>
-          if (tryCommit(fs, dir, next, commit)) {
-            writeHeadPointer(dir, next) // best-effort O(1) head cache
-            if (next % CheckpointInterval == 0)
-              writeCheckpoint(dir, next, state(dir, next))
-            return next
-          }
+        case Some(commit) => Some(encodeCommit(commit))
       }
-      attempt += 1
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"commit to $dir failed after $maxRetries rebase attempts — " +
-        "writer contention too high")
+    }.get
+    if (VersionLog.isAnchor(next)) writeCheckpoint(dir, next, state(dir, next))
+    next
   }
 
-  /** One atomic commit attempt: create-if-absent of the marker holding the
-    * commit JSON. False if another writer owns this version number. */
-  private def tryCommit(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                        n: Long, commit: Commit): Boolean = {
+  /** The marker JSON of one commit. */
+  private def encodeCommit(commit: Commit): Array[Byte] = {
     import org.json4s.{JArray, JObject, JString, JValue}
-    val p = new Path(dir, marker(n))
     def statsObj(st: Map[String, FileStats.Stats]): List[(String, JValue)] =
       if (st.isEmpty) Nil
       else List("st" -> JObject(st.toList.sortBy(_._1).map { case (f, v) =>
@@ -1914,7 +1745,7 @@ object ManifestTable {
       else List("dv" -> JObject(dv.toList.sortBy(_._1).map { case (f, v) =>
         f -> DeletionVectors.toJson(v)
       }))
-    val jv = commit match {
+    VersionLog.render(commit match {
       case Snapshot(files, st, dv) =>
         JObject(("s" -> (JArray(files.map(JString(_)).toList): JValue)) ::
           (statsObj(st) ++ dvObj(dv)))
@@ -1923,13 +1754,6 @@ object ManifestTable {
           ("a" -> (JArray(add.map(JString(_)).toList): JValue)) ::
           ("r" -> (JArray(remove.map(JString(_)).toList): JValue)) ::
           (statsObj(st) ++ dvObj(dv)))
-    }
-    val json = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(jv))
-    LakeStorage.createExclusive(fs, p) match {
-      case None => false // marker exists: lost the race
-      case Some(out) =>
-        try { out.write(json.getBytes("UTF-8")); true } finally out.close()
-    }
+    })
   }
 }

@@ -826,7 +826,7 @@ object AdvancedQueries extends QueryModule {
     // --- keyedlog STATS-SKIPPING (journal-carried file bounds): every
     //     write commit journals per-file [min,max] of the long-typed
     //     columns ("st" entries, accumulated at anchors so resolution
-    //     stays O(CompactInterval) reads), and the scan prunes files
+    //     stays O(AnchorInterval) reads), and the scan prunes files
     //     whose bounds cannot satisfy the pushed comparisons BEFORE
     //     split planning — the log-carried stats-skipping of the lake
     //     formats on the TSV document log, which has no footers to put

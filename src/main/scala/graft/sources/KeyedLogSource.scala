@@ -647,89 +647,42 @@ private[sources] final class KeyedLogFileStats(
   * `t.history` serve exactly the files a commit window added, the same
   * manifest-diff contract manifest tables have. Writers that predate the
   * journal (or drop files by hand) simply have unjournaled files: full
-  * scans see them, version windows don't. Markers are appended with the
-  * same optimistic create-next-version loop the manifest uses, so
-  * concurrent committers serialize; a replayed streaming epoch
-  * re-commits the same file names and is deduplicated to a no-op
-  * (exactly-once journaling on top of replace-on-retry files). Every
-  * [[KeyedLogVersionLog.CompactInterval]]-th marker embeds the full
-  * journaled-name set, so the dedup check reads at most one compact
-  * entry plus an interval of deltas per commit — never the whole
-  * history (the manifest checkpoint pattern, applied to the journal). */
+  * scans see them, version windows don't.
+  *
+  * The markers are a [[graft.core.VersionLog]] (numbered from 0, head
+  * pointer `_klogv_head`; its doc gives the claim, pointer and anchor
+  * protocol). The journal is never truncated and every commit claims
+  * exactly `head + 1` (compaction carries all markers over), so versions
+  * are consecutive `0..head` BY CONSTRUCTION: knowing the head is knowing
+  * the list, and per-commit/per-read cost stops growing with stream
+  * lifetime. Hand-deleting a marker breaks that invariant; don't. A
+  * replayed streaming epoch re-commits the same file names and is
+  * deduplicated to a no-op (exactly-once journaling on top of
+  * replace-on-retry files). Every anchor version's marker embeds the
+  * full journaled-name set and the live set, so the dedup check and the
+  * live-set resolution read at most one anchor plus an interval of
+  * deltas — never the whole history. */
 private[graft] object KeyedLogVersionLog {
-  private val Prefix = "_klogv_"
-  private def name(v: Long): String = f"$Prefix$v%020d"
-  /** Every this-many versions, a marker embeds the full journaled set. */
-  val CompactInterval = 10L
-  /** Best-effort head cache (`_klogv_head`, `{"v":N}`), the manifest
-    * `_head` pattern applied to the journal: refreshed create-overwrite
-    * after every commit; readers validate the pointed-at marker exists and
-    * probe forward to the true head, falling back to a directory listing
-    * when the pointer is absent/corrupt/ahead. The journal NEVER gets
-    * truncated by the engine and every commit claims exactly
-    * `head + 1` (compaction carries all markers over), so versions are
-    * consecutive `0..head` BY CONSTRUCTION — knowing the head is knowing
-    * the list, and per-commit/per-read cost stops growing with stream
-    * lifetime (a year of one-minute epochs is ~500k markers: a listing
-    * per epoch would be the dominant metadata term). Hand-deleting a
-    * marker breaks the consecutiveness invariant; don't. */
-  private val HeadPointer = s"${Prefix}head"
+  import org.json4s.{JArray, JInt, JObject, JString, JValue}
+  import graft.core.VersionLog
 
-  private def writeHeadPointer(path: String,
-      conf: org.apache.spark.util.SerializableConfiguration, v: Long): Unit =
-    try {
-      val fs = new Path(path).getFileSystem(conf.value)
-      val out = fs.create(new Path(path, HeadPointer), true)
-      try out.write(s"""{"v":$v}""".getBytes("UTF-8")) finally out.close()
-    } catch { case _: java.io.IOException => () } // advisory cache only
+  private def log(path: String,
+                  conf: org.apache.spark.util.SerializableConfiguration): VersionLog =
+    new VersionLog(path, new Path(path).getFileSystem(conf.value), "_klogv_",
+      Some("_klogv_head"), "keyed_log journal marker")
 
   /** The journal head version, O(1) object reads with a fresh pointer. */
   def head(path: String,
-           conf: org.apache.spark.util.SerializableConfiguration): Option[Long] = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    val pointed: Option[Long] =
-      try {
-        val p = new Path(path, HeadPointer)
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          val text = try {
-            val bytes = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 8192, false)
-            new String(bytes.toByteArray, "UTF-8")
-          } finally in.close()
-          scala.util.Try(org.json4s.jackson.JsonMethods.parse(text)).toOption
-            .flatMap(_ \ "v" match {
-              case org.json4s.JInt(n) => Some(n.toLong)
-              case _                  => None
-            })
-        }
-      } catch { case _: java.io.IOException => None }
-    pointed match {
-      case Some(v) if fs.exists(new Path(path, name(v))) =>
-        var h = v
-        while (fs.exists(new Path(path, name(h + 1)))) h += 1
-        Some(h)
-      case _ => listedVersions(path, conf).lastOption
-    }
-  }
+           conf: org.apache.spark.util.SerializableConfiguration): Option[Long] =
+    log(path, conf).head
 
   /** All journal versions — `0..head` (consecutive by construction). */
   def versions(path: String,
                conf: org.apache.spark.util.SerializableConfiguration): Seq[Long] =
-    head(path, conf).map(h => 0L to h: Seq[Long]).getOrElse(Seq.empty)
+    upTo(head(path, conf))
 
-  /** Directory-listing fallback (pointer absent on pre-pointer dirs, or
-    * corrupt/ahead): one pass over the dir, the pre-cache cost. */
-  private def listedVersions(path: String,
-      conf: org.apache.spark.util.SerializableConfiguration): Seq[Long] = {
-    val base = new Path(path)
-    val fs = base.getFileSystem(conf.value)
-    if (!fs.exists(base)) return Seq.empty
-    fs.listStatus(base).iterator.map(_.getPath.getName)
-      .filter(_.startsWith(Prefix)).map(_.stripPrefix(Prefix))
-      .filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong).toSeq.sorted
-  }
+  private def upTo(head: Option[Long]): Seq[Long] =
+    head.map(h => 0L to h: Seq[Long]).getOrElse(Seq.empty)
 
   /** File names first journaled in versions (startExclusive, endInclusive];
     * endInclusive None = the journal head. */
@@ -758,195 +711,90 @@ private[graft] object KeyedLogVersionLog {
 
   /** The names version `v` FIRST journaled. */
   def read(path: String, conf: org.apache.spark.util.SerializableConfiguration,
-           v: Long): Seq[String] = readEntry(path, conf, v).fresh
+           v: Long): Seq[String] = entry(path, conf, v).fresh
 
   /** True when version `v` was journaled as a REWRITE (compaction or
     * row-level DML): its names are the whole post-rewrite file set,
     * superseding every earlier version's files. Entries written before
     * the flag existed parse as non-rewrites. */
   def isRewrite(path: String, conf: org.apache.spark.util.SerializableConfiguration,
-                v: Long): Boolean = readEntry(path, conf, v).rewrite
+                v: Long): Boolean = entry(path, conf, v).rewrite
 
-  /** Full parsed marker `v` — the changes feed reads rm/ad from here. */
+  /** Full parsed marker `v` (through the log's entry cache) — the
+    * changes feed reads rm/ad from here. */
   def entry(path: String, conf: org.apache.spark.util.SerializableConfiguration,
-            v: Long): Entry = readEntry(path, conf, v)
+            v: Long): Entry = log(path, conf).entry(v)(decode)
 
-  /** Parsed-marker LRU (optimization round 16, guide §1/§6: stop paying
-    * repeated metadata I/O). Markers are WRITE-ONCE — claimed by
-    * create-exclusive, filled once, never rewritten — so a fully parsed
-    * entry is immutable for the life of its (dir, version) file, and
-    * every journal resolution (liveSet, stats walk, commit dedup, the
-    * changes feed) re-reading + JSON-parsing the same
-    * O(CompactInterval) markers was pure repeat cost: a hit now costs
-    * one `getFileStatus` instead of open+read+parse. The one rebirth
-    * hazard — a dir deleted and recreated at the same path — is fenced
-    * by validating the marker file's (length, modification time)
-    * against the cached stat; entries from concurrent writers in OTHER
-    * processes are simply cache misses (CommitRaceSpec's cross-JVM
-    * commits read through). Keyed by the dir string exactly as callers
-    * spell it (the same normalization [[dirLocks]] uses). */
-  private val EntryCacheMax = 4096
-  private val entryCache =
-    new java.util.LinkedHashMap[(String, Long), (Long, Long, Entry)](256, 0.75f, true) {
-      override protected def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long), (Long, Long, Entry)]): Boolean =
-        size() > EntryCacheMax
-    }
-
-  /** Cache-bypassing read count (test instrumentation for the cache). */
-  private[sources] val entryParses = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Delta entries are a bare JSON array; every CompactInterval-th entry
-    * is `{"n":[...],"all":[...],"live":[...]}`; rewrite entries carry
+  /** Delta entries are a bare JSON array; every anchor entry is
+    * `{"n":[...],"all":[...],"live":[...]}`; rewrite entries carry
     * `"rw":1` and (row-level DML only) `"rm":[...]`,`"ad":[...]`. */
-  private def readEntry(path: String,
-      conf: org.apache.spark.util.SerializableConfiguration,
-      v: Long): Entry = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    val p = new Path(path, name(v))
-    val key = (new Path(path).toString, v)
-    val st = try fs.getFileStatus(p) catch {
-      case _: java.io.FileNotFoundException =>
-        null // let the open() below raise the canonical miss
-    }
-    if (st != null) entryCache.synchronized {
-      val hit = entryCache.get(key)
-      if (hit != null && hit._1 == st.getLen && hit._2 == st.getModificationTime)
-        return hit._3
-    }
-    val entry = parseEntry(path, conf, v)
-    entryParses.incrementAndGet()
-    // stat AFTER the successful parse: the first stat may have caught the
-    // marker mid-fill (shorter); caching the post-parse stat keeps the
-    // fence aligned with the content actually cached
-    try {
-      val st2 = fs.getFileStatus(p)
-      entryCache.synchronized {
-        entryCache.put(key, (st2.getLen, st2.getModificationTime, entry)); ()
-      }
-    } catch { case _: java.io.IOException => () } // cache is advisory
-    entry
-  }
-
-  private def parseEntry(path: String,
-      conf: org.apache.spark.util.SerializableConfiguration,
-      v: Long): Entry = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    def strs(j: org.json4s.JValue): Seq[String] = j match {
-      case org.json4s.JArray(items) => items.map {
-        case org.json4s.JString(s) => s
-        case other => throw new IllegalStateException(
-          s"corrupt keyed_log journal marker v$v: non-string element $other")
-      }
-      case other => throw new IllegalStateException(
-        s"corrupt keyed_log journal marker v$v: expected array, got $other")
-    }
-    // a marker is CLAIMED by create-exclusive and filled right after — a
-    // reader can catch it mid-write (empty / truncated JSON). Re-read
-    // briefly before declaring corruption; the fill window is one small
-    // buffered write.
-    var attempt = 0
-    while (true) {
-      val in = fs.open(new Path(path, name(v)))
-      val text = try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 8192, false)
-        new String(bytes.toByteArray, "UTF-8")
-      } finally in.close()
-      scala.util.Try(org.json4s.jackson.JsonMethods.parse(text)).toOption match {
-        case Some(arr: org.json4s.JArray) =>
-          return Entry(strs(arr), None, rewrite = false, None, None, None)
-        case Some(o: org.json4s.JObject) =>
-          val m = o.obj.toMap
-          // stats parse is STRICT: an empty col map means "all tracked
-          // columns were all-null" and a missing col key means "all-null
-          // there" — both PRUNE files, so silently defaulting a malformed
-          // entry to either would turn marker corruption into missing
-          // rows. Corruption fails loudly, like every other field.
-          val st: Map[String, Map[String, (Long, Long)]] = m.get("st") match {
-            case Some(org.json4s.JObject(files)) => files.toMap.map {
-              case (f, org.json4s.JObject(cols)) => f -> cols.toMap.map {
-                case (c, org.json4s.JArray(List(
-                    org.json4s.JInt(lo), org.json4s.JInt(hi)))) =>
-                  c -> ((lo.toLong, hi.toLong))
-                case (c, other) => throw new IllegalStateException(
-                  s"corrupt keyed_log journal marker v$v: stats for $f.$c " +
-                    s"should be [min,max], got $other")
-              }
-              case (f, other) => throw new IllegalStateException(
-                s"corrupt keyed_log journal marker v$v: stats for $f should " +
-                  s"be an object, got $other")
-            }
-            case None => Map.empty
-            case Some(other) => throw new IllegalStateException(
-              s"corrupt keyed_log journal marker v$v: 'st' should be an " +
-                s"object, got $other")
+  private def decode(j: JValue): Entry = j match {
+    case arr: JArray => Entry(VersionLog.strings(arr), None, rewrite = false, None, None, None)
+    case o: JObject =>
+      val m = o.obj.toMap
+      // stats parse is STRICT: an empty col map means "all tracked
+      // columns were all-null" and a missing col key means "all-null
+      // there" — both PRUNE files, so silently defaulting a malformed
+      // entry to either would turn marker corruption into missing
+      // rows. Corruption fails loudly, like every other field.
+      val st: Map[String, Map[String, (Long, Long)]] = m.get("st") match {
+        case Some(JObject(files)) => files.toMap.map {
+          case (f, JObject(cols)) => f -> cols.toMap.map {
+            case (c, JArray(List(JInt(lo), JInt(hi)))) => c -> ((lo.toLong, hi.toLong))
+            case (c, other) => VersionLog.corrupt(s"stats for $f.$c should be [min,max], got $other")
           }
-          return Entry(strs(m.getOrElse("n", org.json4s.JArray(Nil))),
-            m.get("all").map(strs), m.contains("rw"), m.get("live").map(strs),
-            m.get("rm").map(strs), m.get("ad").map(strs), st)
-        case Some(other) => throw new IllegalStateException(
-          s"corrupt keyed_log journal marker v$v: expected array or object, got $other")
-        case None => // unparseable: in-flight writer, or real corruption
-          attempt += 1
-          if (attempt >= 100) throw new IllegalStateException(
-            s"corrupt keyed_log journal marker v$v: unparseable after ${attempt} reads")
-          Thread.sleep(10)
+          case (f, other) => VersionLog.corrupt(s"stats for $f should be an object, got $other")
+        }
+        case None => Map.empty
+        case Some(other) => VersionLog.corrupt(s"'st' should be an object, got $other")
       }
-    }
-    throw new IllegalStateException("unreachable")
+      Entry(VersionLog.strings(m.getOrElse("n", JArray(Nil))),
+        m.get("all").map(VersionLog.strings), m.contains("rw"),
+        m.get("live").map(VersionLog.strings),
+        m.get("rm").map(VersionLog.strings), m.get("ad").map(VersionLog.strings), st)
+    case other => VersionLog.corrupt(s"expected array or object, got $other")
   }
 
-  /** Every name journaled as of the newest version: replay newest-first,
-    * stopping at the first compact entry — O(CompactInterval) reads
-    * however long the journal is. */
-  private def allJournaled(path: String,
-      conf: org.apache.spark.util.SerializableConfiguration,
-      vs: Seq[Long]): Set[String] = {
-    val acc = scala.collection.mutable.HashSet.empty[String]
-    vs.reverseIterator.foreach { v =>
-      val e = readEntry(path, conf, v)
-      acc ++= e.fresh
-      e.all match {
-        case Some(all) => acc ++= all; return acc.toSet
-        case None      => ()
-      }
-    }
-    acc.toSet
+  /** Entries from the newest of `vs` back to the first one `anchor`
+    * accepts — O(AnchorInterval) reads however long the journal is. */
+  private def back(l: VersionLog, vs: Seq[Long])(anchor: Entry => Boolean): List[Entry] =
+    if (vs.isEmpty) Nil else l.walkBack(vs.last, vs.head)(decode)(anchor)
+
+  /** Every name journaled as of the newest of `vs`: the fresh names back
+    * to the first compact entry, plus its `all` set. */
+  private def allJournaled(l: VersionLog, vs: Seq[Long]): Set[String] = {
+    val es = back(l, vs)(_.all.isDefined)
+    es.iterator.flatMap(_.fresh).toSet ++ es.lastOption.flatMap(_.all).getOrElse(Nil)
   }
 
   /** The journaled column stats by FILE NAME — replay newest-first,
     * merging each entry's `st` (names are write-once, so first-seen
     * wins), stopping at the first ANCHOR (rewrite, or a compact entry
     * carrying `all`): anchors accumulate the carried-forward stats at
-    * commit time, so this walk is O(CompactInterval) reads like the name
+    * commit time, so this walk is O(AnchorInterval) reads like the name
     * walks. Files absent from the result simply have no journaled stats
     * (pre-stats writers, genesis anchors) and are never pruned. */
   def statsJournaled(path: String,
       conf: org.apache.spark.util.SerializableConfiguration,
-      vs: Seq[Long]): Map[String, Map[String, (Long, Long)]] = {
-    val acc = scala.collection.mutable.HashMap.empty[String, Map[String, (Long, Long)]]
-    vs.reverseIterator.foreach { v =>
-      val e = readEntry(path, conf, v)
-      e.stats.foreach { case (f, st) =>
-        if (!acc.contains(f)) acc += f -> st
-      }
-      if (e.rewrite || e.all.isDefined) return acc.toMap
-    }
-    acc.toMap
-  }
+      vs: Seq[Long]): Map[String, Map[String, (Long, Long)]] =
+    statsJournaled(log(path, conf), vs)
+
+  private def statsJournaled(l: VersionLog,
+      vs: Seq[Long]): Map[String, Map[String, (Long, Long)]] =
+    back(l, vs)(e => e.rewrite || e.all.isDefined)
+      .foldRight(Map.empty[String, Map[String, (Long, Long)]])((e, acc) => acc ++ e.stats)
 
   /** The LIVE file names at the journal head — what a reader should plan
     * over; None when no journal exists (pre-journal dirs fall back to a
     * directory listing). Replay newest-first, union each version's fresh
     * names, and stop at the first ANCHOR: a REWRITE entry (its names are
     * the whole set as of that version) or a compact entry carrying a
-    * `live` set. Cost: O(versions since the last anchor) small reads —
-    * compact entries anchor every [[CompactInterval]] commits. */
+    * `live` set. */
   def liveSet(path: String,
               conf: org.apache.spark.util.SerializableConfiguration): Option[Seq[String]] = {
-    val vs = versions(path, conf)
-    if (vs.isEmpty) None else Some(liveAt(path, conf, vs).toSeq.sorted)
+    val l = log(path, conf)
+    val vs = upTo(l.head)
+    if (vs.isEmpty) None else Some(liveAt(l, vs).toSeq.sorted)
   }
 
   /** The live names AS OF journal version `v` — the time-travel
@@ -960,9 +808,10 @@ private[graft] object KeyedLogVersionLog {
   def liveSetAt(path: String,
                 conf: org.apache.spark.util.SerializableConfiguration,
                 v: Long): Option[Seq[String]] = {
-    val vs = versions(path, conf)
+    val l = log(path, conf)
+    val vs = upTo(l.head)
     if (!vs.contains(v)) None
-    else Some(liveAt(path, conf, vs.filter(_ <= v)).toSeq.sorted)
+    else Some(liveAt(l, vs.filter(_ <= v)).toSeq.sorted)
   }
 
   /** TIMESTAMP AS OF resolution: the newest version whose journal marker
@@ -970,33 +819,16 @@ private[graft] object KeyedLogVersionLog {
     * clock). */
   def versionAsOfTimestamp(path: String,
       conf: org.apache.spark.util.SerializableConfiguration,
-      ms: Long): Option[Long] = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    versions(path, conf).filter(v =>
-      fs.getFileStatus(new Path(path, name(v))).getModificationTime <= ms)
-      .lastOption
-  }
+      ms: Long): Option[Long] = log(path, conf).asOfTimestamp(ms)
 
-  private def liveAt(path: String,
-      conf: org.apache.spark.util.SerializableConfiguration,
-      vs: Seq[Long]): Set[String] = {
-    val acc = scala.collection.mutable.HashSet.empty[String]
-    vs.reverseIterator.foreach { v =>
-      val e = readEntry(path, conf, v)
-      acc ++= e.fresh
-      if (e.rewrite) return acc.toSet
-      e.live match {
-        case Some(live) => acc ++= live; return acc.toSet
-        case None       => ()
-      }
-    }
-    acc.toSet
+  private def liveAt(l: VersionLog, vs: Seq[Long]): Set[String] = {
+    val es = back(l, vs)(e => e.rewrite || e.live.isDefined)
+    es.iterator.flatMap(_.fresh).toSet ++
+      es.lastOption.filterNot(_.rewrite).flatMap(_.live).getOrElse(Nil)
   }
 
   /** Same-JVM committers to one dir serialize here — not for correctness
-    * (the claim itself is atomic: [[graft.core.LakeStorage.createExclusive]]
-    * routes local stores through O_EXCL and HDFS creates are exclusive;
-    * only conditional-PUT-less object stores remain best-effort) but to
+    * (the claim itself is atomic, see [[graft.core.VersionLog]]) but to
     * avoid wasted optimistic-loop retries between in-process racers.
     * Cross-JVM contention is exercised by CommitRaceSpec. */
   private val dirLocks =
@@ -1059,11 +891,10 @@ private[graft] object KeyedLogVersionLog {
              rebase: Option[(Set[String], Seq[String])],
              stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
              statsOnly: Boolean = false): Option[Long] = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    var attempt = 0
-    while (attempt < 20) {
-      val vs = versions(path, conf)
-      val seen = allJournaled(path, conf, vs) // compact-anchored, O(interval)
+    val l = log(path, conf)
+    l.commit(first = 0L, attempts = 20) { head =>
+      val vs = upTo(head)
+      val seen = allJournaled(l, vs) // compact-anchored, O(interval)
       // epoch-replay dedup applies to plain commits only: a REWRITE's name
       // set is the new visible whole (a metadata DELETE's surviving files
       // are all previously-journaled names — the entry must still land,
@@ -1073,7 +904,7 @@ private[graft] object KeyedLogVersionLog {
           // in-loop rebase: live is re-read on every attempt, so losing
           // the claim race to a concurrent append re-folds its files in
           val base: Set[String] =
-            if (vs.nonEmpty) liveAt(path, conf, vs)
+            if (vs.nonEmpty) liveAt(l, vs)
             else KeyedLogSource.listDataFiles(path, conf)
               .map(f => new Path(f).getName).toSet
           (((base -- removed) ++ added).toSeq.distinct.sorted,
@@ -1082,71 +913,51 @@ private[graft] object KeyedLogVersionLog {
           (if (rewrite) fileNames.distinct.sorted
            else fileNames.filterNot(seen).distinct.sorted, None)
       }
-      if (fresh.isEmpty && !rewrite && !statsOnly) return None
-      val v = vs.lastOption.getOrElse(-1L) + 1L
-      val fields = scala.collection.mutable.ListBuffer.empty[(String, org.json4s.JValue)]
-      def arr(ns: Seq[String]) = org.json4s.JArray(ns.map(org.json4s.JString(_)).toList)
-      fields += "n" -> arr(fresh)
-      val anchor = rewrite || (v > 0 && v % CompactInterval == 0)
-      if (v > 0 && v % CompactInterval == 0) {
-        fields += "all" -> arr((seen ++ fresh).toList.sorted)
-        // live-set anchor: readers replay back to here, never further
-        if (!rewrite)
-          fields += "live" -> arr((liveAt(path, conf, vs) ++ fresh).toList.sorted)
-      }
-      if (rewrite) fields += "rw" -> org.json4s.JInt(1)
-      rmAd.foreach { case (rm, ad) =>
-        fields += "rm" -> arr(rm)
-        fields += "ad" -> arr(ad)
-      }
-      // column stats ("st": {file: {col: [min,max]}}) ride the entry for
-      // journal-carried file skipping. ANCHOR entries (rewrites, compact
-      // markers) ACCUMULATE the prior entries' stats for the names they
-      // carry forward — the stats walk then stops where the name walk
-      // stops, keeping both O(CompactInterval) reads per resolution.
-      val entryStats: Map[String, Map[String, (Long, Long)]] = {
-        // a stats-only entry attaches bounds to ALREADY-journaled names;
-        // ordinary entries carry stats for exactly the names they journal
-        val scoped =
-          if (statsOnly) stats.view.filterKeys(seen).toMap
-          else stats.view.filterKeys(fresh.toSet).toMap
-        if (!anchor) scoped
-        else {
-          val carried = (seen ++ fresh) -- scoped.keySet
-          statsJournaled(path, conf, vs).view
-            .filterKeys(carried).toMap ++ scoped
-        }
-      }
-      if (entryStats.nonEmpty)
-        fields += "st" -> org.json4s.JObject(
-          entryStats.toList.sortBy(_._1).map { case (f, cols) =>
-            f -> (org.json4s.JObject(cols.toList.sortBy(_._1).map {
-              case (c, (lo, hi)) => c -> (org.json4s.JArray(List(
-                org.json4s.JInt(lo), org.json4s.JInt(hi))): org.json4s.JValue)
-            }): org.json4s.JValue)
-          })
-      val body: org.json4s.JValue =
-        if (fields.size == 1 && !rewrite)
-          org.json4s.JArray(fresh.map(org.json4s.JString(_)).toList)
-        else org.json4s.JObject(fields.toList)
-      // CREATE-EXCLUSIVE claims the version number atomically — the same
-      // protocol as the manifest's commit markers (a tmp+rename scheme is
-      // NOT safe here: Hadoop's local rename happily replaces an existing
-      // destination, so two racers could both claim one version).
-      // LakeStorage.createExclusive routes file:// through O_EXCL, so the
-      // claim is atomic cross-PROCESS on local stores too (CommitRaceSpec)
-      graft.core.LakeStorage.createExclusive(fs, new Path(path, name(v))) match {
-        case None => attempt += 1 // lost the race
-        case Some(out) =>
-          try out.write(org.json4s.jackson.JsonMethods.compact(
-            org.json4s.jackson.JsonMethods.render(body)).getBytes("UTF-8"))
-          finally out.close()
-          writeHeadPointer(path, conf, v) // best-effort O(1) head cache
-          return Some(v)
-      }
+      if (fresh.isEmpty && !rewrite && !statsOnly) None
+      else Some(VersionLog.render(
+        encode(l, vs, head.fold(0L)(_ + 1), seen, fresh, rewrite, rmAd, stats, statsOnly)))
     }
-    throw new IllegalStateException(
-      s"keyed_log journal: lost the commit race 20 times under $path")
+  }
+
+  /** The marker JSON of journal version `v`. */
+  private def encode(l: VersionLog, vs: Seq[Long], v: Long, seen: Set[String],
+      fresh: Seq[String], rewrite: Boolean, rmAd: Option[(Seq[String], Seq[String])],
+      stats: Map[String, Map[String, (Long, Long)]], statsOnly: Boolean): JValue = {
+    val fields = scala.collection.mutable.ListBuffer.empty[(String, JValue)]
+    def arr(ns: Seq[String]) = JArray(ns.map(JString(_)).toList)
+    fields += "n" -> arr(fresh)
+    val anchor = rewrite || VersionLog.isAnchor(v)
+    if (VersionLog.isAnchor(v)) {
+      fields += "all" -> arr((seen ++ fresh).toList.sorted)
+      // live-set anchor: readers replay back to here, never further
+      if (!rewrite) fields += "live" -> arr((liveAt(l, vs) ++ fresh).toList.sorted)
+    }
+    if (rewrite) fields += "rw" -> JInt(1)
+    rmAd.foreach { case (rm, ad) =>
+      fields += "rm" -> arr(rm)
+      fields += "ad" -> arr(ad)
+    }
+    // column stats ("st": {file: {col: [min,max]}}) ride the entry for
+    // journal-carried file skipping. ANCHOR entries (rewrites, compact
+    // markers) ACCUMULATE the prior entries' stats for the names they
+    // carry forward — the stats walk then stops where the name walk
+    // stops, keeping both O(AnchorInterval) reads per resolution.
+    val entryStats: Map[String, Map[String, (Long, Long)]] = {
+      // a stats-only entry attaches bounds to ALREADY-journaled names;
+      // ordinary entries carry stats for exactly the names they journal
+      val scoped =
+        if (statsOnly) stats.view.filterKeys(seen).toMap
+        else stats.view.filterKeys(fresh.toSet).toMap
+      if (!anchor) scoped
+      else statsJournaled(l, vs).view.filterKeys((seen ++ fresh) -- scoped.keySet).toMap ++ scoped
+    }
+    if (entryStats.nonEmpty)
+      fields += "st" -> JObject(entryStats.toList.sortBy(_._1).map { case (f, cols) =>
+        f -> (JObject(cols.toList.sortBy(_._1).map {
+          case (c, (lo, hi)) => c -> (JArray(List(JInt(lo), JInt(hi))): JValue)
+        }): JValue)
+      })
+    if (fields.size == 1 && !rewrite) arr(fresh) else JObject(fields.toList)
   }
 }
 
@@ -1613,7 +1424,7 @@ case class KeyedLogScan(path: String, required: StructType,
   }
 
   /** Journal stats by file name — read ONLY when a prunable predicate
-    * was pushed (zero planning cost otherwise); O(CompactInterval)
+    * was pushed (zero planning cost otherwise); O(AnchorInterval)
     * marker reads, the same anchor walk every journal resolution uses. */
   @transient private lazy val statsByFile: Map[String, Map[String, (Long, Long)]] =
     if (boundsPreds.isEmpty) Map.empty
@@ -1794,8 +1605,8 @@ case class KeyedLogScan(path: String, required: StructType,
   * offset is a single seen-log version (`{"v":N}`, constant size for the
   * life of the stream), never the file list. Each trigger lists the dir,
   * diffs against the in-memory seen set (rebuilt from the seen-log on
-  * restart — at most one compact entry plus [[KeyedLogSeenLog
-  * .CompactInterval]] deltas, never the whole history), and records the
+  * restart — at most one anchor entry plus an anchor interval of
+  * deltas, never the whole history), and records the
   * new files as one seen-log entry under the stream's per-source
   * checkpoint dir — the compacted-metadata-log pattern of Spark's
   * FileStreamSource, re-expressed for a DSv2 source. Each batch reads
@@ -1861,55 +1672,58 @@ object KeyedLogVersionOffset {
     }
 }
 
-/** The seen-file log backing bounded streaming offsets. Entry `v`
-  * (file `%020d`) holds the files FIRST seen at version v as single-line
-  * JSON `{"n":[...]}`; every [[KeyedLogSeenLog.CompactInterval]]-th entry
+/** The seen-file log backing bounded streaming offsets: a
+  * [[graft.core.VersionLog]] with bare `%020d` entry names, numbered
+  * from 0, no head pointer. Entry `v` holds the files FIRST seen at
+  * version v as single-line JSON `{"n":[...]}`; every anchor entry
   * additionally embeds the full seen set (`{"n":[...],"all":[...]}`), so
   * rebuilding the seen set — on restart, or to migrate a legacy offset —
-  * reads at most one compact entry plus CompactInterval deltas, never the
-  * whole history. Single-writer by construction (the driver of the one
-  * stream owning this checkpoint dir); entries are claimed by
-  * create-exclusive (the zombie-driver fence) and filled in place — a
-  * crash in that window leaves a torn head entry, which the constructor
+  * reads at most one anchor plus an interval of deltas, never the whole
+  * history. Single-writer by construction (the driver of the one stream
+  * owning this checkpoint dir): each entry is claimed once, and a lost
+  * claim (a zombie driver after failover) is fatal — a crash between
+  * claim and fill leaves a torn head entry, which the constructor
   * detects and repairs (see the replay block). */
 private[sources] class KeyedLogSeenLog(dir: String,
     conf: org.apache.spark.util.SerializableConfiguration) {
-  import KeyedLogSeenLog._
   import org.json4s._
-  import org.json4s.jackson.JsonMethods
+  import graft.core.VersionLog
 
-  private val base = new Path(dir)
-  private val fs = base.getFileSystem(conf.value)
+  private val log = new VersionLog(dir, new Path(dir).getFileSystem(conf.value), "",
+    None, "seen-log entry")
   private var latest: Long = -1L
   private val seenSet = scala.collection.mutable.HashSet.empty[String]
   /** Log entries read by the constructor's replay (test instrumentation
     * for the bounded-restart claim). */
   private[sources] var replayReads: Int = 0
   locally {
-    // A driver crash inside advance() — after the create-exclusive claim,
-    // before the JSON write completes — leaves a torn (0-byte/truncated)
-    // HEAD entry. Its version was never returned from advance(), so it was
-    // never committed to Spark's offset log: treating it as absent is
-    // always safe. Tolerate exactly that case — delete the torn head and
-    // rewind — so a restart re-claims the version instead of throwing on
-    // every replay (a permanently bricked checkpoint). Tearing can only
-    // hit the head: entries are written strictly sequentially, so v is
-    // durable before v+1 is created. A STRUCTURALLY wrong but parseable
-    // entry, or an unparseable non-head entry, is still real corruption
-    // and still throws.
-    var vs = versions
-    if (vs.nonEmpty && tryReadEntry(vs.last).isEmpty) {
-      fs.delete(new Path(base, name(vs.last)), false)
-      vs = vs.init
+    // A driver crash inside advance() — after the claim, before the JSON
+    // write completes — leaves a torn (0-byte/truncated) HEAD entry. Its
+    // version was never returned from advance(), so it was never
+    // committed to Spark's offset log: treating it as absent is always
+    // safe. Tolerate exactly that case — delete the torn head and rewind
+    // — so a restart re-claims the version instead of throwing on every
+    // replay (a permanently bricked checkpoint). Tearing can only hit the
+    // head: entries are written strictly sequentially, so v is durable
+    // before v+1 is created. A STRUCTURALLY wrong but parseable entry, or
+    // an unparseable non-head entry, is still real corruption and still
+    // throws.
+    var stamps = log.listedStamps
+    if (stamps.nonEmpty &&
+        log.tryStamped(stamps.lastKey, reads = 1, stamps.get(stamps.lastKey))(decode).isEmpty) {
+      log.fs.delete(log.path(stamps.lastKey), false)
+      stamps = stamps.init
     }
-    if (vs.nonEmpty) {
-      latest = vs.last
-      val anchor = newestCompactAtOrBefore(vs, latest)
-      anchor.foreach { a => seenSet ++= readEntry(a)._2.get; replayReads += 1 }
-      val from = anchor.map(_ + 1).getOrElse(0L)
-      (from to latest).foreach { v => seenSet ++= readEntry(v)._1; replayReads += 1 }
+    if (stamps.nonEmpty) {
+      latest = stamps.lastKey
+      val es = replay(latest, stamps)
+      seenSet ++= es.flatMap(_._1) ++ es.last._2.getOrElse(Nil)
+      replayReads += es.size
     }
   }
+  /** The entries this instance wrote that no batch has planned past yet:
+    * the next [[newFilesIn]] serves them without reading them back. */
+  private val unplanned = scala.collection.mutable.Map.empty[Long, Seq[String]]
 
   def latestVersion: Long = latest
   def seen(file: String): Boolean = seenSet.contains(file)
@@ -1919,87 +1733,49 @@ private[sources] class KeyedLogSeenLog(dir: String,
     val v = latest + 1
     val newArr: JValue = JArray(fresh.map(JString(_)).toList)
     val body: JValue =
-      if (v > 0 && v % CompactInterval == 0)
+      if (VersionLog.isAnchor(v))
         JObject("n" -> newArr,
           "all" -> JArray((seenSet ++ fresh).toList.sorted.map(JString(_))))
       else JObject("n" -> newArr)
-    // create-exclusive (atomic cross-process via LakeStorage): a failure
-    // means a SECOND driver owns this checkpoint (zombie after failover)
-    // — fatal, never silent clobber
-    val out = graft.core.LakeStorage.createExclusive(fs, new Path(base, name(v)))
-      .getOrElse(throw new IllegalStateException(
-        s"keyed_log seen-log: version $v already exists under $base — " +
-          "concurrent driver on one checkpoint?"))
-    try out.write(JsonMethods.compact(JsonMethods.render(body)).getBytes("UTF-8"))
-    finally out.close()
+    if (!log.claim(v, VersionLog.render(body)))
+      throw new IllegalStateException(
+        s"keyed_log seen-log: version $v already exists under $dir — " +
+          "concurrent driver on one checkpoint?")
     seenSet ++= fresh
+    unplanned(v) = fresh
     latest = v
     v
   }
 
   /** Files first seen in versions (startExclusive, endInclusive]. */
-  def newFilesIn(startExclusive: Long, endInclusive: Long): Seq[String] =
-    ((startExclusive + 1) to endInclusive).flatMap(v => readEntry(v)._1)
+  def newFilesIn(startExclusive: Long, endInclusive: Long): Seq[String] = {
+    unplanned --= unplanned.keys.filter(_ <= startExclusive)
+    ((startExclusive + 1) to endInclusive).flatMap(v =>
+      unplanned.getOrElse(v, log.entry(v)(decode)._1))
+  }
 
   /** The full seen set as of version `v` — the legacy-offset migration
-    * path; bounded by the same compact-anchor replay as the constructor. */
-  def allUpTo(v: Long): Set[String] = {
-    if (v < 0) return Set.empty
-    val vs = versions
-    val anchor = newestCompactAtOrBefore(vs, v)
-    val acc = scala.collection.mutable.HashSet.empty[String]
-    anchor.foreach(a => acc ++= readEntry(a)._2.get)
-    (anchor.map(_ + 1).getOrElse(0L) to v).foreach(acc ++= readEntry(_)._1)
-    acc.toSet
-  }
-
-  private def versions: Seq[Long] =
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).iterator.map(_.getPath.getName)
-      .filter(n => n.length == 20 && n.forall(_.isDigit)).map(_.toLong).toSeq.sorted
-
-  private def newestCompactAtOrBefore(vs: Seq[Long], v: Long): Option[Long] =
-    vs.filter(x => x <= v && x > 0 && x % CompactInterval == 0).lastOption
-
-  private def name(v: Long): String = f"$v%020d"
-
-  /** (new files, full set if compact) of entry `v`. */
-  private def readEntry(v: Long): (Seq[String], Option[Seq[String]]) =
-    tryReadEntry(v).getOrElse(throw new IllegalStateException(
-      s"corrupt seen-log entry $v: unparseable (torn write?) under $base"))
-
-  /** readEntry, but None when the entry text is not parseable JSON — the
-    * signature of a torn head write, which the constructor repairs. Any
-    * PARSEABLE entry with the wrong shape still throws: that is real
-    * corruption, not a torn write. */
-  private def tryReadEntry(v: Long): Option[(Seq[String], Option[Seq[String]])] = {
-    val in = fs.open(new Path(base, name(v)))
-    val text = try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 8192, false)
-      new String(bytes.toByteArray, "UTF-8")
-    } finally in.close()
-    def strs(j: JValue): Seq[String] = j match {
-      case JArray(items) => items.map {
-        case JString(s) => s
-        case other => throw new IllegalStateException(
-          s"corrupt seen-log entry $v: non-string element $other")
-      }
-      case other => throw new IllegalStateException(
-        s"corrupt seen-log entry $v: expected array, got $other")
+    * path; bounded by the same anchor replay as the constructor. */
+  def allUpTo(v: Long): Set[String] =
+    if (v < 0) Set.empty
+    else {
+      val es = replay(v, log.listedStamps)
+      (es.flatMap(_._1) ++ es.last._2.getOrElse(Nil)).toSet
     }
-    scala.util.Try(JsonMethods.parse(text)).toOption.map {
-      case o: JObject =>
-        val m = o.obj.toMap
-        (strs(m.getOrElse("n", JArray(Nil))), m.get("all").map(strs))
-      case other => throw new IllegalStateException(
-        s"corrupt seen-log entry $v: expected object, got $other")
-    }
+
+  /** Entries `v` back to the newest anchor (newest first), reading each
+    * under its listed stamp. */
+  private def replay(v: Long, stamps: collection.Map[Long, VersionLog.Stamp])
+      : List[(Seq[String], Option[Seq[String]])] =
+    log.walkBack(v, 0L, stamps.get)(decode)(_._2.isDefined)
+
+  /** (new files, full set if anchor) of one entry. */
+  private def decode(j: JValue): (Seq[String], Option[Seq[String]]) = j match {
+    case o: JObject =>
+      val m = o.obj.toMap
+      (VersionLog.strings(m.getOrElse("n", JArray(Nil))), m.get("all").map(VersionLog.strings))
+    case other => VersionLog.corrupt(s"expected object, got $other")
   }
-}
-private[sources] object KeyedLogSeenLog {
-  /** Every this-many versions, an entry embeds the full seen set. */
-  val CompactInterval = 10L
 }
 
 /** LEGACY offset = the full set of files already processed — the

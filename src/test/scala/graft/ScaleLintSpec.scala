@@ -17,6 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `ParquetFileReader.open` re-parses core-default.xml for its read
   * options, and a `new SerializableConfiguration` outside
   * [[graft.core.LakeStorage.taskConf]] ships per-key gzipped sources.
+  * And `LakeStorage.createExclusive` is called only by the versioned-log
+  * core ([[graft.core.VersionLog]]) and the identity columns' slab
+  * reservation, so a hand-rolled log cannot come back.
   */
 class ScaleLintSpec extends AnyFunSuite {
 
@@ -103,6 +106,26 @@ class ScaleLintSpec extends AnyFunSuite {
       case (f, src) if oneArgFooterOpen.findFirstIn(src).isDefined => f.getPath }
     assert(offenders.isEmpty,
       s"one-argument ParquetFileReader.open (pass HadoopReadOptions): ${offenders.mkString(", ")}")
+  }
+
+  private val exclusiveCreate = """\bLakeStorage\.createExclusive\s*\(""".r
+
+  test("src/main claims log entries only through VersionLog") {
+    Seq("graft.core.LakeStorage.createExclusive(fs, new Path(d, \"c-1\"))",
+      "LakeStorage.createExclusive (fs, p)")
+      .foreach(s => assert(exclusiveCreate.findFirstIn(s).isDefined, s))
+    Seq("def createExclusive(fs: FileSystem, p: Path)", "[[LakeStorage.createExclusive]]")
+      .foreach(s => assert(exclusiveCreate.findFirstIn(s).isEmpty, s))
+    // the identity columns' epoch-slab reservation is a different protocol
+    val allowed = Set("src/main/scala/graft/core/VersionLog.scala",
+      "src/main/scala/graft/catalog/IdentityColumns.scala")
+    val offenders = mainSources.collect {
+      case (f, src) if exclusiveCreate.findFirstIn(src).isDefined && !allowed(f.getPath) => f.getPath }
+    assert(offenders.isEmpty,
+      s"hand-rolled log claims (commit through graft.core.VersionLog): ${offenders.mkString(", ")}")
+    assert(exclusiveCreate.findAllIn(mainSources.collectFirst {
+      case (f, src) if f.getPath == "src/main/scala/graft/core/VersionLog.scala" => src
+    }.get).size === 1, "VersionLog claims through one createExclusive call")
   }
 
   private val newSerializableConf = """\bnew\s+(?:[\w.]+\.)?SerializableConfiguration\s*\(""".r

@@ -82,6 +82,24 @@ class ManifestTableSpec extends AnyFunSuite {
     assert(h3 === Some(26L) && p3 === 3, "commit must refresh the pointer")
   }
 
+  test("a reader waits out a claimed-but-unfilled marker instead of throwing") {
+    val dir = freshDir()
+    ManifestTable.write(df(10), dir)
+    val added = ManifestTable.stagePool(df(5), dir)
+    // a committer claims v2 with an empty marker and fills it ~100 ms later
+    val marker = new java.io.File(new java.net.URI(s"$dir/_commit_${"%020d".format(2L)}")).toPath
+    Files.createFile(marker)
+    val body = added.map(f => "\"" + f + "\"").mkString("""{"a":[""", ",", """],"r":[]}""")
+    val filler = new Thread(() => {
+      Thread.sleep(100)
+      Files.write(marker, body.getBytes("UTF-8")); ()
+    })
+    filler.start()
+    try assert(ManifestTable.read(spark, dir).count() === 15L)
+    finally filler.join()
+    assert(ManifestTable.currentVersion(dir) === Some(2L))
+  }
+
   test("append commits only delta files; base files are re-listed, not rewritten") {
     val dir = freshDir()
     ManifestTable.write(df(10), dir)
@@ -246,13 +264,13 @@ class ManifestTableSpec extends AnyFunSuite {
     // the whole history
     Seq(1L, 57L, 123L, 200L).foreach { v =>
       val depth = ManifestTable.resolutionDepth(dir, v)
-      assert(depth <= ManifestTable.CheckpointInterval + 1,
+      assert(depth <= VersionLog.AnchorInterval + 1,
         s"resolving v$v read $depth log objects — unbounded replay")
     }
     // checkpoints exist at every interval boundary
     val ckpts = fs.listStatus(new Path(dir))
       .map(_.getPath.getName).count(_.startsWith("_ckpt_"))
-    assert(ckpts === 200 / ManifestTable.CheckpointInterval)
+    assert(ckpts === 200 / VersionLog.AnchorInterval)
     // resolved snapshots are exactly right, at the head and mid-history
     assert(ManifestTable.read(spark, dir).count() === 4L + 199L)
     assert(ManifestTable.read(spark, dir, Some(100L)).count() === 4L + 99L)

@@ -258,7 +258,7 @@ class DataSourceSpec extends AnyFunSuite {
       s"offset JSON must be constant-size: ${offsets.map(_.json())}")
     // no new files -> same version, no empty log entries
     assert(stream.latestOffset() === KeyedLogVersionOffset(24L))
-    // compact entries exist at every CompactInterval-th version
+    // compact entries exist at every anchor version (VersionLog.AnchorInterval)
     val ledgerDir = java.nio.file.Paths.get(ckpt, "graft_seen_log")
     def entry(v: Long) = new String(java.nio.file.Files.readAllBytes(
       ledgerDir.resolve(f"$v%020d")), "UTF-8")
@@ -268,7 +268,7 @@ class DataSourceSpec extends AnyFunSuite {
     // compact entry + the deltas after it, NEVER the whole history
     val restarted = new KeyedLogMicroBatchStream(dir, schema, Array.empty, conf, ckpt)
     assert(restarted.ledger.latestVersion === 24L)
-    assert(restarted.ledger.replayReads <= KeyedLogSeenLog.CompactInterval + 1,
+    assert(restarted.ledger.replayReads <= graft.core.VersionLog.AnchorInterval + 1,
       s"restart replayed ${restarted.ledger.replayReads} entries (unbounded?)")
     assert(restarted.latestOffset() === KeyedLogVersionOffset(24L)) // nothing re-read
     // a version-range batch plans exactly the files first seen in-window
@@ -358,7 +358,7 @@ class DataSourceSpec extends AnyFunSuite {
     val v0names = KeyedLogVersionLog.read(dir, conf, 0L)
     assert(KeyedLogVersionLog.commit(dir, conf, v0names) === None)
     assert(KeyedLogVersionLog.versions(dir, conf) === Seq(0L, 1L, 2L))
-    // the journal compacts: after enough commits, every CompactInterval-th
+    // the journal compacts: after enough commits, every anchor
     // marker embeds the full set, and dedup/window reads stay exact
     (5 to 25).foreach(i => write(Seq((s"k$i", i.toLong, i.toLong))))
     assert(KeyedLogVersionLog.versions(dir, conf).max === 23L)
@@ -1008,10 +1008,10 @@ class DataSourceSpec extends AnyFunSuite {
     }
     // warm pass parses whatever the liveSet/stats walks need
     assert(s.table("gklec.db.t").count() === 15L)
-    val p0 = KeyedLogVersionLog.entryParses.get()
+    val p0 = graft.core.VersionLog.entryParses.get()
     assert(s.table("gklec.db.t").count() === 15L)
     assert(s.table("gklec.db.t").filter(col("metric") >= 0L).count() === 15L)
-    val p1 = KeyedLogVersionLog.entryParses.get()
+    val p1 = graft.core.VersionLog.entryParses.get()
     assert(p1 === p0,
       s"repeat reads must hit the entry cache (parses went $p0 -> $p1)")
     // a new commit appends a new marker: it is parsed (read through the
@@ -1019,10 +1019,36 @@ class DataSourceSpec extends AnyFunSuite {
     s.range(5).selectExpr("'k9' AS key", "id + 100 AS seq", "id AS metric")
       .coalesce(1).writeTo("gklec.db.t").append()
     assert(s.table("gklec.db.t").count() === 20L)
-    val p2 = KeyedLogVersionLog.entryParses.get()
+    val p2 = graft.core.VersionLog.entryParses.get()
     assert(p2 > p1, "a fresh marker must be parsed once")
     assert(s.table("gklec.db.t").count() === 20L)
-    assert(KeyedLogVersionLog.entryParses.get() === p2,
+    assert(graft.core.VersionLog.entryParses.get() === p2,
+      "the fresh marker must now be served from the cache")
+  }
+
+  test("manifest entry cache: repeat reads parse no marker; a new commit parses only its own") {
+    val s = spark.newSession()
+    graft.catalog.GraftCatalog.register(s, "gmec",
+      Files.createTempDirectory("graft_mec_root_").toString)
+    s.sql("CREATE NAMESPACE IF NOT EXISTS gmec.db")
+    s.sql("CREATE TABLE gmec.db.t (id BIGINT, v BIGINT) USING manifest")
+    (0 until 3).foreach { i =>
+      s.range(5).selectExpr(s"id + ${i * 5} AS id", "id AS v")
+        .coalesce(1).writeTo("gmec.db.t").append()
+    }
+    assert(s.table("gmec.db.t").count() === 15L)
+    val p0 = graft.core.VersionLog.entryParses.get()
+    assert(s.table("gmec.db.t").count() === 15L)
+    assert(s.table("gmec.db.t").filter(col("v") >= 0L).count() === 15L)
+    val p1 = graft.core.VersionLog.entryParses.get()
+    assert(p1 === p0, s"repeat reads must hit the entry cache (parses went $p0 -> $p1)")
+    s.range(5).selectExpr("id + 100 AS id", "id AS v")
+      .coalesce(1).writeTo("gmec.db.t").append()
+    assert(s.table("gmec.db.t").count() === 20L)
+    val p2 = graft.core.VersionLog.entryParses.get()
+    assert(p2 === p1 + 1, s"a new commit must parse only its own marker (parses went $p1 -> $p2)")
+    assert(s.table("gmec.db.t").count() === 20L)
+    assert(graft.core.VersionLog.entryParses.get() === p2,
       "the fresh marker must now be served from the cache")
   }
 }
