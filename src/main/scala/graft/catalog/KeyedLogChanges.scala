@@ -89,12 +89,12 @@ case class KeyedLogChangesScan(dir: String, startVersion: Option[Long],
   override def planInputPartitions(): Array[InputPartition] = {
     val start = startVersion.getOrElse(throw new IllegalArgumentException(
       s"changes($dir): t.changes needs .option(\"start_version\", v)"))
-    val committed = KeyedLogVersionLog.versions(dir, conf)
-    require(start == -1L || committed.contains(start),
+    val journaled = KeyedLogVersionLog.versions(dir, conf)
+    require(start == -1L || journaled.contains(start),
       s"start_version $start is not journaled under $dir " +
-        s"(journaled: ${committed.mkString(",")}) — compacted past the cursor?")
-    val end = endVersion.getOrElse(committed.lastOption.getOrElse(-1L))
-    require(end == -1L || committed.contains(end),
+        s"(journaled: ${journaled.mkString(",")}) — compacted past the cursor?")
+    val end = endVersion.getOrElse(journaled.lastOption.getOrElse(-1L))
+    require(end == -1L || journaled.contains(end),
       s"end_version $end is not journaled under $dir")
     require(end >= start,
       s"end_version $end precedes start_version $start")
@@ -268,11 +268,11 @@ class KeyedLogChangesMicroBatchStream(dir: String, startVersion: Long,
     val from = start.asInstanceOf[ManifestVersionOffset].v
     val to = end.asInstanceOf[ManifestVersionOffset].v
     if (to <= from) return Array.empty
-    val committed = KeyedLogVersionLog.versions(dir, conf)
-    require(from <= -1L || committed.contains(from),
+    val journaled = KeyedLogVersionLog.versions(dir, conf)
+    require(from <= -1L || journaled.contains(from),
       s"keyed_log change-stream offset $from is not journaled under $dir — " +
         "compacted past the checkpoint? restart from a full scan")
-    require(committed.contains(to),
+    require(journaled.contains(to),
       s"keyed_log change-stream end offset $to is not journaled under $dir")
     KeyedLogChanges.windowPartitions(dir, conf, from, to)
   }

@@ -86,12 +86,8 @@ case class ManifestChangesScan(dir: String, declared: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     val start = startVersion.getOrElse(throw new IllegalArgumentException(
       s"changes($dir): t.changes needs .option(\"start_version\", v)"))
-    val committed = ManifestTable.allVersions(dir)
-    require(committed.contains(start),
-      s"start_version $start is not committed under $dir " +
-        s"(committed: ${committed.mkString(",")}) — vacuumed past the cursor?")
-    val end = endVersion.getOrElse(committed.max)
-    require(committed.contains(end), s"end_version $end is not committed under $dir")
+    ManifestTable.resolve(dir, Some(start))
+    val end = ManifestTable.resolve(dir, endVersion).get
     require(end >= start,
       s"end_version $end precedes start_version $start")
     ManifestChanges.windowPartitions(dir, declared, start, end)
@@ -246,8 +242,7 @@ class ManifestChangesMicroBatchStream(dir: String, declared: StructType,
     val from = start.asInstanceOf[ManifestVersionOffset].v
     val to = end.asInstanceOf[ManifestVersionOffset].v
     if (to <= from) return Array.empty
-    require(from <= 0L || ManifestTable.allVersions(dir).contains(from),
-      s"change-stream offset $from is not committed under $dir — vacuumed past the checkpoint?")
+    if (from > 0L) ManifestTable.resolve(dir, Some(from))
     ManifestChanges.windowPartitions(dir, declared, from, to)
   }
 

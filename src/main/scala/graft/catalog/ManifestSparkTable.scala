@@ -136,23 +136,15 @@ class ManifestSparkTable(dir: String, declared: StructType,
     * deletion-vector attachments keyed dir-RELATIVE (what the row-address
     * readers look files up by). */
   private def snapshotState: (Seq[String], Map[String, graft.core.FileStats.Stats],
-      Map[String, graft.core.DeletionVectors.DvRef]) = {
-    val committed = ManifestTable.allVersions(logDir)
-    val v = asOf match {
-      case Some(req) =>
-        if (!committed.contains(req)) throw new IllegalStateException(
-          s"version $req is not committed under $logDir " +
-            s"(committed: ${committed.mkString(",")})")
-        req
-      case None =>
-        if (committed.isEmpty) return (Seq.empty, Map.empty, Map.empty)
-        else committed.max
+      Map[String, graft.core.DeletionVectors.DvRef]) =
+    ManifestTable.resolve(logDir, asOf) match {
+      case None => (Seq.empty, Map.empty, Map.empty)
+      case Some(v) =>
+        val st = ManifestTable.state(logDir, v)
+        (st.files.map(f => s"$dir/$f"),
+          st.stats.map { case (f, s) => s"$dir/$f" -> s },
+          st.dvs)
     }
-    val st = ManifestTable.state(logDir, v)
-    (st.files.map(f => s"$dir/$f"),
-      st.stats.map { case (f, s) => s"$dir/$f" -> s },
-      st.dvs)
-  }
 
   /** Incremental (CDC-style) reads:
     * `spark.read.option("start_version", v).table("cat.db.t")` serves ONLY
@@ -169,13 +161,8 @@ class ManifestSparkTable(dir: String, declared: StructType,
   private def incrementalEntries(startVersion: Long, endVersion: Option[Long])
       : (Seq[String], Map[String, graft.core.FileStats.Stats],
          Map[String, graft.core.DeletionVectors.DvRef]) = {
-    val committed = ManifestTable.allVersions(dir)
-    require(committed.contains(startVersion),
-      s"start_version $startVersion is not committed under $dir " +
-        s"(committed: ${committed.mkString(",")}) — vacuumed past the cursor?")
-    val end = endVersion.getOrElse(committed.max)
-    require(committed.contains(end),
-      s"end_version $end is not committed under $dir")
+    ManifestTable.resolve(dir, Some(startVersion))
+    val end = ManifestTable.resolve(dir, endVersion).get
     require(end >= startVersion,
       s"end_version $end precedes start_version $startVersion")
     // O(window delta) marker replay (ManifestTable.diff) — an incremental

@@ -236,8 +236,7 @@ class ManifestMicroBatchStream(dir: String, declared: StructType,
   override def reportLatestOffset(): Offset = latestOffset()
 
   private def requireCommitted(v: Long): Unit =
-    require(v <= 0L || ManifestTable.allVersions(dir).contains(v),
-      s"stream offset $v is not committed under $dir — vacuumed past the checkpoint?")
+    if (v > 0L) ManifestTable.resolve(dir, Some(v))
 
   /** A per-batch parquet scan over exactly the files the version window
     * added, pruned to the streaming query's required columns, with the

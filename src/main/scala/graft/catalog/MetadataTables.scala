@@ -55,24 +55,20 @@ object MetadataTables {
       val sizes = scala.collection.mutable.HashMap.empty[String, Long]
       def sized(f: String): Long =
         sizes.getOrElseUpdate(f, fs.getFileStatus(new Path(pools, f)).getLen)
-      val versions = ManifestTable.allVersions(dir)
+      val versions = ManifestTable.commitTimes(dir)
       var live = Set.empty[String]
       var bytes = 0L
-      versions.headOption.toSeq.flatMap { first =>
-        versions.map { v =>
-          val (_, vStats) = ManifestTable.addedEntriesAt(dir, v)
-          vStats.foreach { case (f, st) =>
-            st.sizeBytes.foreach(sizes.getOrElseUpdate(f, _))
-          }
-          val (added, removed) =
-            if (v == first) (ManifestTable.manifest(dir, v), Seq.empty[String])
-            else ManifestTable.diff(dir, v - 1, v)
-          live = live -- removed ++ added
-          bytes = bytes - removed.map(sized).sum + added.map(sized).sum
-          val mtime = fs.getFileStatus(
-            new Path(dir, f"_commit_$v%020d")).getModificationTime
-          Array[Any](v, mtime * 1000L, live.size.toLong, bytes, added.length.toLong)
+      versions.map { case (v, mtime) =>
+        val (_, vStats) = ManifestTable.addedEntriesAt(dir, v)
+        vStats.foreach { case (f, st) =>
+          st.sizeBytes.foreach(sizes.getOrElseUpdate(f, _))
         }
+        val (added, removed) =
+          if (v == versions.head._1) (ManifestTable.manifest(dir, v), Seq.empty[String])
+          else ManifestTable.diff(dir, v - 1, v)
+        live = live -- removed ++ added
+        bytes = bytes - removed.map(sized).sum + added.map(sized).sum
+        Array[Any](v, mtime * 1000L, live.size.toLong, bytes, added.length.toLong)
       }
     })
 
@@ -187,18 +183,20 @@ object MetadataTables {
     * (see [[graft.sources.KeyedLogVersionLog]]) — what each batch job or
     * streaming epoch added. Bytes count only files still present (a
     * compaction swaps the data out from under old journal entries; their
-    * rows remain as history with zero surviving bytes). */
+    * rows remain as history with zero surviving bytes). One listing of
+    * the table dir sizes every present file; the journal's own listing
+    * dates every version. */
   def keyedLogHistory(dir: String): Table =
     new VirtualRowsTable(s"history($dir)", KeyedLogHistorySchema, () => {
       val conf = LakeStorage.taskConf()
       val fs = LakeStorage.openFor(dir)
-      graft.sources.KeyedLogVersionLog.versions(dir, conf).map { v =>
+      val base = new Path(dir)
+      val present = if (!fs.exists(base)) Map.empty[String, Long]
+        else fs.listStatus(base).iterator.map(s => s.getPath.getName -> s.getLen).toMap
+      graft.sources.KeyedLogVersionLog.commitTimes(dir, conf).map { case (v, mtime) =>
         val names = graft.sources.KeyedLogVersionLog.read(dir, conf, v)
-        val present = names.map(new Path(dir, _)).filter(fs.exists)
-        val mtime = fs.getFileStatus(
-          new Path(dir, f"_klogv_$v%020d")).getModificationTime
         Array[Any](v, mtime * 1000L, names.length.toLong,
-          present.map(fs.getFileStatus(_).getLen).sum)
+          names.iterator.map(present.getOrElse(_, 0L)).sum)
       }
     })
 

@@ -125,8 +125,7 @@ object LakeCompaction {
       if (vs.isEmpty) Map.empty[String, Map[String, (Long, Long)]]
       else graft.sources.KeyedLogVersionLog.statsJournaled(tmp.toString, conf, vs)
     }
-    fs.listStatus(tmp).filter(s => s.isFile && s.getPath.getName.startsWith("_klogv_"))
-      .foreach(s => fs.delete(s.getPath, false))
+    graft.sources.KeyedLogVersionLog.drop(tmp.toString, conf)
     // carry metadata (e.g. the catalog's _graft_table.json descriptor and
     // the commit journal) into the compacted dir — the swap must replace
     // DATA, not identity

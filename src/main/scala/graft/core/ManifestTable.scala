@@ -93,8 +93,29 @@ object ManifestTable {
   def versionAsOfTimestamp(dir: String, tsMillis: Long): Option[Long] =
     markerLog(dir).asOfTimestamp(tsMillis)
 
-  /** All committed versions still present (ascending). */
+  /** The version a reader of `dir` sees: the head for `asOf = None` (None
+    * while nothing is committed), else `asOf` itself. The one rule: the
+    * head comes from the log's pointer ([[VersionLog.head]]), and a version
+    * is committed iff its marker exists. A resolution that succeeds never
+    * lists the directory; only a rejection lists, to name the versions
+    * still present. A version never committed, or vacuumed since, throws
+    * IllegalStateException. */
+  def resolve(dir: String, asOf: Option[Long]): Option[Long] = asOf match {
+    case None => markerLog(dir).head
+    case Some(v) if isCommitted(dir, v) => asOf
+    case Some(v) => throw new IllegalStateException(
+      s"version $v is not committed under $dir " +
+        s"(committed: ${markerLog(dir).listed.mkString(",")})")
+  }
+
+  /** Whether version `v`'s marker exists — one `exists` (see [[resolve]]). */
+  def isCommitted(dir: String, v: Long): Boolean = markerLog(dir).has(v)
+
+  /** All committed versions still present (ascending), by one listing. */
   def allVersions(dir: String): Seq[Long] = markerLog(dir).listed
+
+  /** [[allVersions]] with each marker's commit instant (modification time). */
+  def commitTimes(dir: String): Seq[(Long, Long)] = markerLog(dir).commitTimes
 
   // ---- marker encoding -------------------------------------------------
 
@@ -187,9 +208,6 @@ object ManifestTable {
     }
     TableState(files.result(), stats.result(), dvs.result())
   }
-
-  private def readCheckpoint(dir: String, version: Long): Seq[String] =
-    readCheckpointEntries(dir, version).files
 
   /** Write the checkpoint for `version` (temp file + atomic rename; a
     * concurrent duplicate writer loses the rename and cleans up — the
@@ -358,27 +376,14 @@ object ManifestTable {
   }
 
   /** The files version `v`'s commit ADDED (delta add-list, or the full
-    * list for a snapshot commit) — one marker read, no resolution. */
-  private[graft] def addedAt(dir: String, v: Long): Seq[String] =
-    addedEntriesAt(dir, v)._1
-
-  /** [[addedAt]] plus the marker's stats for those files — one marker
-    * read. The log-carried sizes let metadata tables and compaction
-    * size files without stat-ing them. */
+    * list for a snapshot commit) and the marker's stats for them — one
+    * marker read, no resolution. The log-carried sizes let metadata
+    * tables and compaction size files without stat-ing them. */
   private[graft] def addedEntriesAt(dir: String, v: Long)
       : (Seq[String], Map[String, FileStats.Stats]) =
     readMarkerData(dir, v) match {
       case DeltaMarker(add, _, st, _)   => (add, st)
       case SnapshotMarker(files, st, _) => (files, st)
-    }
-
-  /** The deletion-vector attachments version `v`'s commit wrote (empty
-    * for ordinary appends/rewrites) — one marker read; what the change
-    * feed turns into `delete` pre-images. */
-  private[graft] def dvsAt(dir: String, v: Long): Map[String, DeletionVectors.DvRef] =
-    readMarkerData(dir, v) match {
-      case d: DeltaMarker    => d.dvs
-      case s: SnapshotMarker => s.dvs
     }
 
   /** The files version `v`'s commit ADDED (a snapshot's full list) and
@@ -739,16 +744,8 @@ object ManifestTable {
     * any version not yet vacuumed stays readable; an uncommitted or
     * vacuumed version rejects rather than resolving to partial data). */
   def read(spark: SparkSession, dir: String, asOfVersion: Option[Long] = None): DataFrame = {
-    val committed = allVersions(dir)
-    if (committed.isEmpty)
-      throw new IllegalStateException(s"no committed version under $dir")
-    val v = asOfVersion match {
-      case None => committed.max
-      case Some(req) =>
-        if (!committed.contains(req)) throw new IllegalStateException(
-          s"version $req is not committed under $dir (committed: ${committed.mkString(",")})")
-        req
-    }
+    val v = resolve(dir, asOfVersion).getOrElse(
+      throw new IllegalStateException(s"no committed version under $dir"))
     val st = state(dir, v)
     if (st.files.isEmpty)
       throw new IllegalStateException(
@@ -1050,10 +1047,7 @@ object ManifestTable {
     * target version must still be present (not vacuumed). Returns the new
     * version. */
   def rollback(dir: String, toVersion: Long): Long = {
-    val committed = allVersions(dir)
-    require(committed.contains(toVersion),
-      s"version $toVersion is not committed under $dir " +
-        s"(committed: ${committed.mkString(",")})")
+    resolve(dir, Some(toVersion))
     val target = state(dir, toVersion)
     commitLoop(dir) { _ => Some(Snapshot(target.files, target.stats, target.dvs)) }
   }
@@ -1181,8 +1175,7 @@ object ManifestTable {
     require(branchHead(dir, name).isEmpty,
       s"a branch named '$name' already exists on $dir — tags and branches " +
         "share the VERSION AS OF namespace")
-    require(allVersions(dir).contains(version),
-      s"cannot tag version $version of $dir — not committed (or vacuumed)")
+    resolve(dir, Some(version))
     val fs = LakeStorage.openFor(dir)
     val out = fs.create(new Path(dir, s"$TagPrefix$name"), true)
     try out.write(version.toString.getBytes("UTF-8")) finally out.close()
@@ -1304,16 +1297,8 @@ object ManifestTable {
       s"a tag named '$name' already exists on $dir — tags and branches " +
         "share the VERSION AS OF namespace")
     require(branchHead(dir, name).isEmpty, s"branch '$name' already exists on $dir")
-    val head = currentVersion(dir).getOrElse(throw new IllegalStateException(
+    val forkV = resolve(dir, atVersion).getOrElse(throw new IllegalStateException(
       s"cannot branch $dir — no committed version to fork from"))
-    val forkV = atVersion match {
-      case None => head
-      case Some(v) =>
-        require(allVersions(dir).contains(v),
-          s"cannot branch $dir at version $v — not a committed version " +
-            s"(committed: ${allVersions(dir).mkString(",")})")
-        v
-    }
     val st = state(dir, forkV)
     val log = branchLogDir(dir, name)
     commitLoop(log) { base =>

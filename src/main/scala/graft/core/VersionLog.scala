@@ -60,6 +60,9 @@ final class VersionLog(val dir: String, val fs: FileSystem, prefix: String,
   /** Versions present (ascending), by one directory listing. */
   def listed: Seq[Long] = listing(fs, base, prefix).map(_._1)
 
+  /** The entries present, by one directory listing. */
+  def paths: Seq[Path] = listed.map(path)
+
   /** [[listed]] with each entry's stamp, which a following [[walkBack]]
     * can take instead of a `getFileStatus` per entry. */
   def listedStamps: scala.collection.immutable.SortedMap[Long, Stamp] =
@@ -67,9 +70,14 @@ final class VersionLog(val dir: String, val fs: FileSystem, prefix: String,
       case (v, st) => v -> ((st.getLen, st.getModificationTime))
     })
 
+  /** Versions present (ascending), each with its entry's modification
+    * time — the commit instant — by one listing. */
+  def commitTimes: Seq[(Long, Long)] =
+    listing(fs, base, prefix).map { case (v, st) => v -> st.getModificationTime }
+
   /** The newest version whose entry was modified at or before `ms`. */
   def asOfTimestamp(ms: Long): Option[Long] =
-    listing(fs, base, prefix).filter(_._2.getModificationTime <= ms).lastOption.map(_._1)
+    commitTimes.filter(_._2 <= ms).lastOption.map(_._1)
 
   /** The highest committed version, None for an empty log. */
   def head: Option[Long] = headProbed._1
@@ -77,14 +85,23 @@ final class VersionLog(val dir: String, val fs: FileSystem, prefix: String,
   /** [[head]] plus the filesystem operations it took (a listing counts
     * one per entry) — instrumentation for the O(1)-with-pointer claim. */
   def headProbed: (Option[Long], Int) = pointer.flatMap(readPointer) match {
-    case Some(v) if fs.exists(path(v)) =>
+    case Some(v) if has(v) =>
       var h = v
       var probes = 2 // pointer read + pointed-entry check
-      while (fs.exists(path(h + 1))) { h += 1; probes += 1 }
+      while (has(h + 1)) { h += 1; probes += 1 }
       (Some(h), probes + 1) // + the final miss
     case _ =>
       val vs = listed
       (vs.lastOption, 1 + vs.length)
+  }
+
+  /** Whether entry `v` exists: one existence check, no listing. */
+  def has(v: Long): Boolean = fs.exists(path(v))
+
+  /** Delete every entry and the head pointer, leaving an empty log. */
+  def clear(): Unit = {
+    paths.foreach(fs.delete(_, false))
+    pointer.foreach(p => fs.delete(new Path(base, p), false))
   }
 
   private def readPointer(name: String): Option[Long] =
@@ -224,8 +241,11 @@ object VersionLog {
     * empty when `dir` does not exist. */
   private def listing(fs: FileSystem, dir: Path, prefix: String): Seq[(Long, FileStatus)] =
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).iterator
-      .flatMap(s => version(prefix, s.getPath.getName).map(_ -> s)).toSeq.sortBy(_._1)
+    else {
+      listings.incrementAndGet()
+      fs.listStatus(dir).iterator
+        .flatMap(s => version(prefix, s.getPath.getName).map(_ -> s)).toSeq.sortBy(_._1)
+    }
 
   /** Thrown by an entry decoder; the log rethrows it naming the entry. */
   final class Corrupt(why: String) extends RuntimeException(why)
@@ -261,4 +281,7 @@ object VersionLog {
 
   /** Entries decoded past the cache (test instrumentation). */
   private[graft] val entryParses = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Directory listings any log has taken (test instrumentation). */
+  private[graft] val listings = new java.util.concurrent.atomic.AtomicLong(0L)
 }

@@ -896,13 +896,13 @@ object AdvancedQueries extends QueryModule {
       s.sql("INSERT INTO graft_kbf.db.docs SELECT lang, doc_id, n_chars " +
         "FROM qk13_documents WHERE n_chars >= 400")
       // manufacture the pre-stats state: strip every journal "st" field
-      val tdir = new java.io.File(s"$rootDir/db/docs")
-      tdir.listFiles().filter(_.getName.startsWith("_klogv_")).foreach { m =>
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(m.toPath), "UTF-8")
+      graft.sources.KeyedLogVersionLog.entryPaths(s"$rootDir/db/docs",
+          graft.core.LakeStorage.taskConf()).foreach { p =>
+        val m = java.nio.file.Paths.get(p.toUri.getPath)
+        val txt = new String(java.nio.file.Files.readAllBytes(m), "UTF-8")
         val j = org.json4s.jackson.JsonMethods.parse(txt)
           .removeField(_._1 == "st")
-        java.nio.file.Files.write(m.toPath,
+        java.nio.file.Files.write(m,
           org.json4s.jackson.JsonMethods.compact(
             org.json4s.jackson.JsonMethods.render(j)).getBytes("UTF-8"))
         ()

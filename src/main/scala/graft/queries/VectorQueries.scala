@@ -403,8 +403,8 @@ object VectorQueries extends QueryModule {
     * vectors cluster tightly, which gives the IVF range-search bound
     * something real to prune (the raw `embedding` column is isotropic —
     * no cluster structure, nothing any sound bound could skip).
-    * THE definition — the OperatorsSpec fixture and tools/RangeScale
-    * reference it, so formula tweaks can never desynchronize them from
+    * THE definition — the OperatorsSpec fixture references it, so
+    * formula tweaks can never desynchronize it from
     * the oracle CTE below (which must be edited in lockstep). Note the
     * noise has period 13 in vec_id: same-label vectors 13 apart are
     * EXACT duplicates (cosine 1.0) — tests rely on that orbit. */

@@ -684,6 +684,20 @@ private[graft] object KeyedLogVersionLog {
   private def upTo(head: Option[Long]): Seq[Long] =
     head.map(h => 0L to h: Seq[Long]).getOrElse(Seq.empty)
 
+  /** Every journal version with its commit instant, by one listing. */
+  def commitTimes(path: String,
+                  conf: org.apache.spark.util.SerializableConfiguration): Seq[(Long, Long)] =
+    log(path, conf).commitTimes
+
+  /** The paths of every journal entry present, by one listing. */
+  def entryPaths(path: String,
+                 conf: org.apache.spark.util.SerializableConfiguration): Seq[Path] =
+    log(path, conf).paths
+
+  /** Delete the whole journal — every entry and the head pointer. */
+  def drop(path: String, conf: org.apache.spark.util.SerializableConfiguration): Unit =
+    log(path, conf).clear()
+
   /** File names first journaled in versions (startExclusive, endInclusive];
     * endInclusive None = the journal head. */
   def filesInWindow(path: String,

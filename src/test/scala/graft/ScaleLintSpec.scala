@@ -19,7 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.core.LakeStorage.taskConf]] ships per-key gzipped sources.
   * And `LakeStorage.createExclusive` is called only by the versioned-log
   * core ([[graft.core.VersionLog]]) and the identity columns' slab
-  * reservation, so a hand-rolled log cannot come back.
+  * reservation, so a hand-rolled log cannot come back. Log entry names
+  * (`_commit_`, `_ckpt_`, `_klogv_`) are spelled only by the logs that own
+  * them, so no other module reads or deletes entries behind their back.
   */
 class ScaleLintSpec extends AnyFunSuite {
 
@@ -126,6 +128,36 @@ class ScaleLintSpec extends AnyFunSuite {
     assert(exclusiveCreate.findAllIn(mainSources.collectFirst {
       case (f, src) if f.getPath == "src/main/scala/graft/core/VersionLog.scala" => src
     }.get).size === 1, "VersionLog claims through one createExclusive call")
+  }
+
+  /** String and character literals, and comments: the alternation lets
+    * a `//` inside a string stay part of the string. */
+  private val literalOrComment =
+    """(?s)"{3}.*?"{3}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|/\*.*?\*/|//[^\n]*""".r
+
+  /** `src` with its comments blanked out. */
+  private def code(src: String): String =
+    literalOrComment.replaceAllIn(src, m =>
+      scala.util.matching.Regex.quoteReplacement(if (m.matched.startsWith("/")) " " else m.matched))
+
+  /** A log entry name in a literal: the prefix opens the literal or
+    * follows a path separator. */
+  private val logEntryName = """["/](?:_commit_|_ckpt_|_klogv_)""".r
+
+  test("src/main spells log entry names only in the logs that own them") {
+    Seq("\"_klogv_\"", "f\"_commit_$v%020d\"", "s\"$dir/_ckpt_1\"", "new Path(dir, \"_commit_\" + v)")
+      .foreach(s => assert(logEntryName.findFirstIn(code(s)).isDefined, s))
+    Seq("// drop dir/_commit_1", "/** `_klogv_<v>` */", "\"graft_ckpt_\"", "\"append_commit_sec\"",
+        "\"http://x\" // \"_ckpt_\"")
+      .foreach(s => assert(logEntryName.findFirstIn(code(s)).isEmpty, s))
+    // tools/MetaScale sizes checkpoints on purpose (ManifestTable cites it)
+    val allowed = Set("src/main/scala/graft/core/ManifestTable.scala",
+      "src/main/scala/graft/sources/KeyedLogSource.scala",
+      "src/main/scala/graft/tools/MetaScale.scala")
+    val offenders = mainSources.collect {
+      case (f, src) if !allowed(f.getPath) && logEntryName.findFirstIn(code(src)).isDefined => f.getPath }
+    assert(offenders.isEmpty,
+      s"log entry names spelled outside their logs: ${offenders.mkString(", ")}")
   }
 
   private val newSerializableConf = """\bnew\s+(?:[\w.]+\.)?SerializableConfiguration\s*\(""".r

@@ -421,6 +421,38 @@ class CatalogSpec extends AnyFunSuite {
     intercept[Exception](spark.sql("SELECT * FROM g.db.absent.history").collect())
   }
 
+  test("keyedlog t.history: one row per journal version, bytes of surviving files only") {
+    ensureDb()
+    spark.sql("CREATE TABLE g.db.klhist (key STRING, seq BIGINT, metric BIGINT) USING keyedlog")
+    val tableDir = new java.io.File(new java.net.URI(s"$root/db/klhist"))
+    def dataFiles: Map[String, Long] = tableDir.listFiles().toSeq
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map(f => f.getName -> f.length()).toMap
+    // the data files each statement wrote, read off the directory
+    val added = Seq.newBuilder[Set[String]]
+    Seq("('a', 1, 10), ('b', 2, 20)", "('c', 3, 30)", "('a', 4, 40), ('d', 5, 50)")
+      .foreach { rows =>
+        val before = dataFiles.keySet
+        spark.sql(s"INSERT INTO g.db.klhist VALUES $rows")
+        added += dataFiles.keySet -- before
+      }
+    spark.sql("CALL g.system.compact('db.klhist')")
+    val compacted = dataFiles
+    added += compacted.keySet
+    val expected = added.result()
+    val hist = spark.sql("SELECT version, committed_at, added_files, added_bytes " +
+      "FROM g.db.klhist.history ORDER BY version").collect()
+    assert(hist.map(_.getLong(0)).toSeq === expected.indices.map(_.toLong))
+    assert(hist.map(_.getLong(2)).toSeq === expected.map(_.size.toLong))
+    assert(expected.forall(_.nonEmpty))
+    // the compaction swapped every earlier file out: their rows stay as
+    // history with zero surviving bytes; the rewrite's row counts its own
+    assert(hist.init.map(_.getLong(3)).toSeq === Seq(0L, 0L, 0L))
+    assert(hist.last.getLong(3) === compacted.values.sum)
+    val times = hist.map(_.getTimestamp(1).getTime).toSeq
+    assert(times.forall(_ > 0L) && times === times.sorted, s"commit times: $times")
+  }
+
   test("TIMESTAMP AS OF resolves the version committed at that instant") {
     ensureDb()
     spark.sql("CREATE TABLE g.db.ts (id BIGINT) USING manifest")

@@ -130,6 +130,42 @@ class ManifestTableSpec extends AnyFunSuite {
     assert(ManifestTable.read(spark, dir, Some(2L)).count() === 25L)
   }
 
+  test("reads resolve through the log: no directory listing on any read path") {
+    val s = spark.newSession()
+    val root = Files.createTempDirectory("graft_resolve_root_").toString
+    graft.catalog.GraftCatalog.register(s, "gres", root)
+    s.sql("CREATE NAMESPACE IF NOT EXISTS gres.db")
+    s.sql("CREATE TABLE gres.db.t (id BIGINT) USING manifest")
+    val head = 2 * VersionLog.AnchorInterval + 2 // past two anchors
+    (1L to head).foreach(i => s.sql(s"INSERT INTO gres.db.t VALUES ($i)"))
+    val dir = s"$root/db/t"
+    assert(ManifestTable.currentVersionProbed(dir) === ((Some(head), 3)),
+      "the last commit must leave a fresh head pointer")
+    def listingsOf[T](what: String)(body: => T): T = {
+      val before = VersionLog.listings.get()
+      val out = body
+      assert(VersionLog.listings.get() === before, s"$what listed the table directory")
+      out
+    }
+    val sum = (1L to head).sum
+    assert(listingsOf("ManifestTable.read")(ManifestTable.read(s, dir).count()) === head)
+    assert(listingsOf("a catalog SELECT")(
+      s.sql("SELECT sum(id) FROM gres.db.t").head().getLong(0)) === sum)
+    assert(listingsOf("VERSION AS OF")(
+      s.sql("SELECT sum(id) FROM gres.db.t VERSION AS OF 3").head().getLong(0)) === 6L)
+    assert(listingsOf("a start_version read")(
+      s.read.option("start_version", (head - 2).toString).table("gres.db.t")
+        .agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0)) === 2 * head - 1)
+    // rejections still name the versions: vacuumed and never-committed
+    s.sql("CALL gres.system.vacuum('db.t', keep => 2, orphan_retain_ms => 0)")
+    Seq(1L, head + 1).foreach { v =>
+      val e = intercept[Exception] {
+        s.sql(s"SELECT * FROM gres.db.t VERSION AS OF $v").collect()
+      }
+      assert(e.getMessage.contains("not committed"), e.getMessage)
+    }
+  }
+
   test("an unreferenced data pool is invisible to readers") {
     val dir = freshDir()
     ManifestTable.write(df(10), dir)
