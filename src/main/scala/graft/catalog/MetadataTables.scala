@@ -58,14 +58,24 @@ object MetadataTables {
       val versions = ManifestTable.commitTimes(dir)
       var live = Set.empty[String]
       var bytes = 0L
+      var prev = Option.empty[Long]
       versions.map { case (v, mtime) =>
         val (_, vStats) = ManifestTable.addedEntriesAt(dir, v)
         vStats.foreach { case (f, st) =>
           st.sizeBytes.foreach(sizes.getOrElseUpdate(f, _))
         }
+        // each row diffs against the previous LISTED version: after a tag
+        // keeps an old version across a vacuum the versions have gaps, and
+        // the markers inside a gap are gone, so a gap (and the first row)
+        // compares resolved snapshots instead of replaying markers
         val (added, removed) =
-          if (v == versions.head._1) (ManifestTable.manifest(dir, v), Seq.empty[String])
-          else ManifestTable.diff(dir, v - 1, v)
+          if (prev.contains(v - 1)) ManifestTable.diff(dir, v - 1, v)
+          else {
+            val now = ManifestTable.manifest(dir, v)
+            val nowSet = now.toSet
+            (now.filterNot(live), live.filterNot(nowSet).toSeq)
+          }
+        prev = Some(v)
         live = live -- removed ++ added
         bytes = bytes - removed.map(sized).sum + added.map(sized).sum
         Array[Any](v, mtime * 1000L, live.size.toLong, bytes, added.length.toLong)

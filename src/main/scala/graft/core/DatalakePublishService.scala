@@ -1,5 +1,6 @@
 package graft.core
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.format.DateTimeFormatter
 import java.time.{LocalDate, LocalDateTime}
 import java.util.UUID
@@ -65,7 +66,7 @@ class DatalakePublishService(
         if (env.id == null || env.id.isEmpty) (false, true) // filtered, ref :61
         else {
           val rel = LakePath.fhirPath(env.resourceType, tenantId, date, env.id)
-          (true, LakeStorage.putWith(fs, new Path(root, rel), env.body, retryMs))
+          (true, LakeStorage.put(fs, new Path(root, rel), env.body.getBytes(UTF_8), retryMs))
         }
       }
     }
@@ -100,7 +101,8 @@ class DatalakePublishService(
     val allOk = ds.mapPartitions { iter =>
       val fs = LakeStorage.openFor(root)
       iter.map { case (id, body) =>
-        LakeStorage.putWith(fs, new Path(root, LakePath.binaryPath(tenantId, id)), body, retryMs)
+        LakeStorage.put(fs, new Path(root, LakePath.binaryPath(tenantId, id)), body.getBytes(UTF_8),
+          retryMs)
       }
     }.reduce(_ && _)
     if (!allOk) throw new IllegalStateException(writeFailureMessage)

@@ -36,34 +36,28 @@ class LakeStorage(val root: String, conf: Configuration, retryDelayMs: Long = 50
   private def path(fileName: String): Path = new Path(root, fileName)
 
   /** Write a document; true on success, single delayed retry on IO failure. */
-  def put(fileName: String, data: String): Boolean =
-    LakeStorage.putWith(fs, path(fileName), data, retryDelayMs)
+  def put(fileName: String, data: String): Boolean = putBytes(fileName, data.getBytes(UTF_8))
 
   /** Byte-stream upload (the reference's InputStream variant,
     * ref: OCIClient.kt:101-137). */
-  def putBytes(fileName: String, data: Array[Byte]): Boolean = {
-    def attempt(): Boolean = {
-      val out = fs.create(path(fileName), true)
-      try { out.write(data); true } finally out.close()
-    }
-    try attempt()
-    catch {
-      case _: IOException =>
-        Thread.sleep(retryDelayMs)
-        try attempt() catch { case _: IOException => false }
-    }
-  }
+  def putBytes(fileName: String, data: Array[Byte]): Boolean =
+    LakeStorage.put(fs, path(fileName), data, retryDelayMs)
 
-  /** Point read; None when missing (the reference's 404->null). */
+  /** Point read; None when missing (the reference's 404->null). Opens
+    * first and stats only on a miss, so a hit costs one `open`; a path
+    * that exists but cannot be read as an object (a directory) still
+    * throws. */
   def get(fileName: String): Option[String] = {
     val p = path(fileName)
-    if (!fs.exists(p)) None else Some(LakeStorage.readText(fs, p))
+    try Some(LakeStorage.readText(fs, p))
+    catch { case e: FileNotFoundException => if (fs.exists(p)) throw e else None }
   }
 
   def exists(fileName: String): Boolean = fs.exists(path(fileName))
 
   def status(fileName: String): Option[FileStatus] =
-    if (fs.exists(path(fileName))) Some(fs.getFileStatus(path(fileName))) else None
+    try Some(fs.getFileStatus(path(fileName)))
+    catch { case _: FileNotFoundException => None }
 
   /** Recursive listing of object names under `prefix`, relative to the
     * root; a missing prefix lists nothing. Callers pass the deepest prefix
@@ -149,11 +143,12 @@ object LakeStorage {
       : SerializableConfiguration =
     new SerializableConfiguration(shippable(conf))
 
-  /** Shared by driver-side puts and executor-side foreachPartition writers. */
-  def putWith(fs: FileSystem, p: Path, data: String, retryDelayMs: Long): Boolean = {
+  /** Write `data` to `p`, replacing any object there; true on success.
+    * Shared by driver-side puts and executor-side foreachPartition writers. */
+  def put(fs: FileSystem, p: Path, data: Array[Byte], retryDelayMs: Long): Boolean = {
     def attempt(): Boolean = {
       val out = fs.create(p, true)
-      try { out.write(data.getBytes(UTF_8)); true }
+      try { out.write(data); true }
       finally out.close()
     }
     try attempt()

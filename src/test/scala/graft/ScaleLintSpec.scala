@@ -22,6 +22,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * reservation, so a hand-rolled log cannot come back. Log entry names
   * (`_commit_`, `_ckpt_`, `_klogv_`) are spelled only by the logs that own
   * them, so no other module reads or deletes entries behind their back.
+  * And `src/main` spawns no processes: a fork from a multi-GB JVM costs
+  * milliseconds of child CPU, the floor the fork-free local store
+  * ([[graft.core.ForkFreeRawLocalFileSystem]]) removed.
   */
 class ScaleLintSpec extends AnyFunSuite {
 
@@ -171,5 +174,23 @@ class ScaleLintSpec extends AnyFunSuite {
       f.getPath -> newSerializableConf.findAllIn(src).size }.filter(_._2 > 0)
     assert(counts === Seq("src/main/scala/graft/core/LakeStorage.scala" -> 1),
       "construct SerializableConfiguration only in LakeStorage.taskConf")
+  }
+
+  /** A process spawn: `ProcessBuilder`, `Runtime.getRuntime.exec`,
+    * `scala.sys.process` or Hadoop's `Shell.execCommand`. */
+  private val processSpawn =
+    """\bProcessBuilder\b|\bRuntime\s*\.\s*getRuntime\s*(?:\(\s*\))?\s*\.\s*exec\b|\bsys\s*\.\s*process\b|\bShell\s*\.\s*exec(?:Command)?\b""".r
+
+  test("src/main spawns no processes") {
+    Seq("new ProcessBuilder(\"chmod\", \"644\", f)", "new java.lang.ProcessBuilder(cmd)",
+        "Runtime.getRuntime.exec(cmd)", "Runtime.getRuntime().exec(Array(\"ls\"))",
+        "import scala.sys.process._", "org.apache.hadoop.util.Shell.execCommand(\"ls\")")
+      .foreach(s => assert(processSpawn.findFirstIn(code(s)).isDefined, s))
+    Seq("// forks chmod through Shell.execCommand", "Runtime.getRuntime.availableProcessors",
+        "spark.sql.execution.arrow", "processBuilder.build()")
+      .foreach(s => assert(processSpawn.findFirstIn(code(s)).isEmpty, s))
+    val offenders = mainSources.collect {
+      case (f, src) if processSpawn.findFirstIn(code(src)).isDefined => f.getPath }
+    assert(offenders.isEmpty, s"process spawns in src/main: ${offenders.mkString(", ")}")
   }
 }

@@ -421,6 +421,25 @@ class CatalogSpec extends AnyFunSuite {
     intercept[Exception](spark.sql("SELECT * FROM g.db.absent.history").collect())
   }
 
+  test("t.history reads a log whose versions have gaps (a tag kept v1 across a vacuum)") {
+    ensureDb()
+    spark.sql("CREATE TABLE g.db.gaps (id BIGINT, v STRING) USING manifest")
+    spark.sql("INSERT INTO g.db.gaps SELECT /*+ REPARTITION(1) */ id, 'a' FROM range(10)") // v1
+    spark.sql("CALL g.system.tag('db.gaps', 'rel-1')")
+    Seq("b" -> 5, "c" -> 3, "d" -> 2).foreach { case (v, n) =>                       // v2..v4
+      spark.sql(s"INSERT OVERWRITE g.db.gaps SELECT /*+ REPARTITION(1) */ id, '$v' FROM range($n)")
+    }
+    spark.sql("CALL g.system.vacuum('db.gaps', keep => 2, orphan_retain_ms => 0)")
+    val hist = spark.sql(
+      "SELECT version, n_files, added_files FROM g.db.gaps.history ORDER BY version")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    // v3 is diffed against v1, the previous version still listed
+    assert(hist === Seq((1L, 1L, 1L), (3L, 1L, 1L), (4L, 1L, 1L)))
+    val bytes = spark.sql("SELECT total_bytes FROM g.db.gaps.history ORDER BY version")
+      .collect().map(_.getLong(0))
+    assert(bytes.forall(_ > 0L))
+  }
+
   test("keyedlog t.history: one row per journal version, bytes of surviving files only") {
     ensureDb()
     spark.sql("CREATE TABLE g.db.klhist (key STRING, seq BIGINT, metric BIGINT) USING keyedlog")

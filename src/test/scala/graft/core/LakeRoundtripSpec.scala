@@ -147,6 +147,19 @@ class LakeRoundtripSpec extends AnyFunSuite {
     assert(storage.status("bin.dat").exists(_.getLen === 3))
   }
 
+  test("point reads: a hit returns the object, a miss None, a directory throws") {
+    val (root, _) = freshLake()
+    val storage = new LakeStorage(root, new Configuration())
+    assert(storage.put("dir/doc.json", """{"id":"d"}"""))
+    assert(storage.get("dir/doc.json") === Some("""{"id":"d"}"""))
+    assert(storage.get("dir/absent.json") === None)
+    assert(storage.get("absent/doc.json") === None)
+    // a directory exists but is no object: the read fails as it always did
+    intercept[java.io.IOException](storage.get("dir"))
+    assert(storage.status("dir").exists(_.isDirectory))
+    assert(storage.status("dir/absent.json") === None)
+  }
+
   test("LakeReader preserves multi-line (pretty-printed) document bodies") {
     val (_, cfg) = freshLake()
     val pretty = "{\n  \"resourceType\": \"Patient\",\n  \"id\": \"p1\"\n}"
@@ -237,30 +250,19 @@ class LakeRoundtripSpec extends AnyFunSuite {
     assert(bodies(cfg, "Patient", Some("t1"), Some("2024-02-01")).size === 1)
   }
 
-  /** Reaped child CPU of this JVM in ms: `/proc/self/stat` fields 16-17
-    * (cutime, cstime), in clock ticks of 10 ms. */
-  private def childCpuMs(): Long = {
-    val stat = new String(Files.readAllBytes(java.nio.file.Paths.get("/proc/self/stat")), "UTF-8")
-    val fields = stat.substring(stat.lastIndexOf(')') + 2).split(" ")
-    (fields(13).toLong + fields(14).toLong) * 10L // field n sits at index n - 3
-  }
-
   test("listing a lake forks no child processes") {
-    assume(new java.io.File("/proc/self/stat").exists, "no /proc: child CPU is not observable")
+    assume(ChildCpu.observable, "no /proc: child CPU is not observable")
     val (root, cfg) = freshLake()
     publishOn(cfg, "Patient", "t1", 1, (1 to 120).map(i => s"p$i"))
     val storage = new LakeStorage(root, new Configuration())
     // The old listFiles walk cost about 3 ms of child CPU per entry (over
-    // 700 ms here). The best of three attempts keeps an unrelated fork
-    // elsewhere in the JVM from failing the check.
-    val costs = (1 to 3).map { _ =>
-      val before = childCpuMs()
+    // 700 ms here).
+    val cost = ChildCpu.bestOfThree {
       assert(storage.listRecursive().size === 120)
       assert(LakeReader.readFhir(spark, cfg, "Patient", Some("t1"), Some("2024-02-01")).count() === 120)
       assert(LakeReader.readFhir(spark, cfg, "Patient").count() === 120)
-      childCpuMs() - before
     }
-    assert(costs.min < 20, s"child CPU per listing pass (ms): ${costs.mkString(", ")}")
+    assert(cost < 20, s"child CPU per listing pass (ms, best of 3): $cost")
   }
 
   /** Spark jobs `body` launches. A sentinel job runs afterwards: a listener
