@@ -6,18 +6,19 @@ import java.time.{LocalDate, LocalDateTime}
 import java.util.UUID
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Bronze-layer publish surface (ref: DatalakePublishService.kt), re-expressed
   * as distributed Spark writes with the exact-filename document sink
   * (SURVEY.md §2 Part B "Exact-name document write").
   *
-  * Scale design: rows are partitioned (capped at `publishPoolMax`, mirroring
-  * the reference's min(10, n)-thread pool, ref :125-146) and each partition
-  * opens ONE FileSystem handle for all of its writes (the reference's
-  * dedicated-client-per-batch amortization, ref :63,104). Write results are
-  * aggregated in the same single pass that performs the writes — no second
-  * job, no driver-side row loop.
+  * Scale design: both batch publishes build their (path, body) pairs on the
+  * driver and hand them to one write path, [[writeAll]]: the pairs are
+  * sliced (capped at `publishPoolMax`, mirroring the reference's
+  * min(10, n)-thread pool, ref :125-146), each slice opens ONE FileSystem
+  * handle for all of its writes (the reference's dedicated-client-per-batch
+  * amortization, ref :63,104), and the per-slice outcomes come back in the
+  * same job — one Spark job per batch, no shuffle, no encoder.
   *
   * Error contract preserved exactly, including ordering (SURVEY.md §7.4):
   *  1. any write failed       -> IllegalStateException("One or more writes to datalake failed")
@@ -39,74 +40,42 @@ class DatalakePublishService(
     * ehr/<type>/fhir_tenant_id=<t>/_date=<date>/<id>.json. */
   def publishFhirR4(spark: SparkSession, tenantId: String, resources: Seq[FhirEnvelope]): Unit = {
     if (resources.isEmpty) return // ref :56-59 — zero storage interaction
-    import spark.implicits._
-    val n = resources.size
-    publishNonEmpty(
-      spark.createDataset(resources).repartition(math.min(cfg.publishPoolMax, n)),
-      tenantId)
-  }
-
-  /** Dataset variant for large publishes: single distributed pass that
-    * writes and aggregates (hadId, writeOk) counters. */
-  def publishFhirR4(resources: Dataset[FhirEnvelope], tenantId: String): Unit =
-    if (!resources.isEmpty) publishNonEmpty(resources, tenantId)
-
-  /** Shared body of both overloads; the caller has ruled out empty input
-    * (the `Seq` overload by its size, for free — `Dataset.isEmpty` would
-    * cost it two more jobs and a second run of the repartition shuffle). */
-  private def publishNonEmpty(resources: Dataset[FhirEnvelope], tenantId: String): Unit = {
-    val spark = resources.sparkSession
     val date = clock() // one snapshot per batch -> single _date (ref :60)
-    import spark.implicits._
-    val root = cfg.root
-    val retryMs = cfg.retryDelayMs
-    val outcomes: Dataset[(Boolean, Boolean)] = resources.mapPartitions { iter =>
-      val fs = LakeStorage.openFor(root)
-      iter.map { env =>
-        if (env.id == null || env.id.isEmpty) (false, true) // filtered, ref :61
-        else {
-          val rel = LakePath.fhirPath(env.resourceType, tenantId, date, env.id)
-          (true, LakeStorage.put(fs, new Path(root, rel), env.body.getBytes(UTF_8), retryMs))
-        }
-      }
-    }
-    val (total, withId, allOk) = outcomes
-      .toDF("had_id", "ok")
-      .groupBy()
-      .agg(
-        org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions.col("had_id").cast("long")),
-        org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col("ok")))
-      .as[(Long, Long, Boolean)]
-      .head()
+    val (withId, withoutId) = resources.partition(env => env.id != null && env.id.nonEmpty) // ref :61
+    val docs = withId.map(env => LakePath.fhirPath(env.resourceType, tenantId, date, env.id) -> env.body)
     // Ordering matters: write-failure check precedes missing-id check
     // (ref :79 before :83); successfully written docs stay written.
-    if (!allOk) throw new IllegalStateException(writeFailureMessage)
-    if (withId < total) throw new IllegalStateException(missingIdMessage(tenantId))
+    if (!writeAll(spark, docs)) throw new IllegalStateException(writeFailureMessage)
+    if (withoutId.nonEmpty) throw new IllegalStateException(missingIdMessage(tenantId))
   }
 
   /** Publish Binary payloads under ehr/Binary/fhir_tenant_id=<t>/<id>.json
     * (no date partition; "Binary" not lowercased, ref :100-120,148-153).
     * Empty input returns without any storage interaction — the reference has
     * no explicit short-circuit but its empty pool run uploads nothing, so
-    * this is behaviorally equivalent (and required here: `reduce` on an
-    * empty Dataset throws). */
-  def publishBinaryData(spark: SparkSession, tenantId: String, binaries: Seq[(String, String)]): Unit = {
-    if (binaries.isEmpty) return
-    import spark.implicits._
-    val root = cfg.root
-    val retryMs = cfg.retryDelayMs
-    val ds = spark.createDataset(binaries)
-      .repartition(math.min(cfg.publishPoolMax, binaries.size))
-    val allOk = ds.mapPartitions { iter =>
-      val fs = LakeStorage.openFor(root)
-      iter.map { case (id, body) =>
-        LakeStorage.put(fs, new Path(root, LakePath.binaryPath(tenantId, id)), body.getBytes(UTF_8),
-          retryMs)
-      }
-    }.reduce(_ && _)
-    if (!allOk) throw new IllegalStateException(writeFailureMessage)
-  }
+    * this is behaviorally equivalent. */
+  def publishBinaryData(spark: SparkSession, tenantId: String, binaries: Seq[(String, String)]): Unit =
+    if (!writeAll(spark, binaries.map { case (id, body) => LakePath.binaryPath(tenantId, id) -> body }))
+      throw new IllegalStateException(writeFailureMessage)
+
+  /** Writes each (lake-relative path, body) pair as one object in a single
+    * Spark job; true when every write succeeded. Every document is written
+    * even after another fails. No documents: no job, true. */
+  private def writeAll(spark: SparkSession, docs: Seq[(String, String)]): Boolean =
+    docs.isEmpty || {
+      val root = cfg.root
+      val retryMs = cfg.retryDelayMs
+      spark.sparkContext.parallelize(docs, math.min(cfg.publishPoolMax, docs.size))
+        .mapPartitions { iter =>
+          val fs = LakeStorage.openFor(root)
+          // put first: a failure must not skip the writes that follow it
+          Iterator.single(iter.foldLeft(true) { case (ok, (rel, body)) =>
+            LakeStorage.put(fs, new Path(root, rel), body.getBytes(UTF_8), retryMs) && ok
+          })
+        }
+        .collect()
+        .forall(identity)
+    }
 
   /** Wrap a raw API response and publish it as a single object at
     * raw_data_response/tenant_id=<t>/transaction_id/<uuid>; returns the full

@@ -3,6 +3,7 @@ package graft.core
 import java.net.URI
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
+import java.util.Locale
 
 /** Codec for the three lake path templates and the object-URL mapping.
   *
@@ -19,8 +20,13 @@ import java.time.format.DateTimeFormatter
 object LakePath {
   private val isoDate = DateTimeFormatter.ISO_LOCAL_DATE
 
+  /** `ehr/<type>`: the type lowercased locale-independently (the
+    * reference's Kotlin `lowercase()`), so `Immunization` maps to
+    * `immunization` under every default locale, `tr` included. */
+  def fhirTypeDir(resourceType: String): String = s"ehr/${resourceType.toLowerCase(Locale.ROOT)}"
+
   def fhirPath(resourceType: String, tenantId: String, date: LocalDate, id: String): String =
-    s"ehr/${resourceType.toLowerCase}/fhir_tenant_id=$tenantId/_date=${date.format(isoDate)}/$id.json"
+    s"${fhirTypeDir(resourceType)}/fhir_tenant_id=$tenantId/_date=${date.format(isoDate)}/$id.json"
 
   def binaryPath(tenantId: String, resourceId: String): String =
     s"ehr/Binary/fhir_tenant_id=$tenantId/$resourceId.json"

@@ -1,8 +1,14 @@
 package graft.core
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Partition-pruned scans over the bronze lake layout.
   *
@@ -54,7 +60,7 @@ object LakeReader {
       return emptyResult(spark, bodySchema)
     }
     val storage = new LakeStorage(cfg.root, LakeStorage.sharedHadoopConf, cfg.retryDelayMs)
-    val typeDir = s"ehr/${resourceType.toLowerCase}"
+    val typeDir = LakePath.fhirTypeDir(resourceType)
     val prefix = tenant.fold(typeDir) { t =>
       s"$typeDir/fhir_tenant_id=$t" + date.fold("")(d => s"/_date=$d")
     }
@@ -66,20 +72,36 @@ object LakeReader {
       return emptyResult(spark, bodySchema)
     }
     // wholetext: one row per OBJECT (the publish contract is one document
-    // per file) — line-based reading would shred pretty-printed JSON bodies
-    val raw = spark.read.option("wholetext", "true").text(files: _*)
-      .withColumnRenamed("value", "body")
-      .withColumn("_path", input_file_name())
-      .withColumn("fhir_tenant_id",
-        regexp_extract(col("_path"), "fhir_tenant_id=([^/]+)", 1))
-      .withColumn("_date", regexp_extract(col("_path"), "_date=([^/]+)", 1))
-      .drop("_path")
+    // per file) — line-based reading would shred pretty-printed JSON bodies.
+    // The relation is built over the listed files directly: `spark.read`
+    // would look the source up and check every path again, reading each as
+    // a glob pattern, so an id holding `[` or `{` failed the scan.
+    // One select names the columns, so the plan is analyzed once, not once
+    // per added column.
+    val index = new InMemoryFileIndex(spark, files.map(new Path(_)), Map.empty, None)
+    val text = HadoopFsRelation(index, new StructType(), new StructType().add("value", StringType),
+      None, new ShippedConfText, Map("wholetext" -> "true"))(spark)
+    val raw = spark.baseRelationToDataFrame(text).select(
+      col("value").as("body"),
+      regexp_extract(input_file_name(), "fhir_tenant_id=([^/]+)", 1).as("fhir_tenant_id"),
+      regexp_extract(input_file_name(), "_date=([^/]+)", 1).as("_date"))
     // PERMISSIVE + corrupt-record column: a structurally broken document
     // parses to a struct with only FhirSchemas.CorruptCol set (the raw
     // text) instead of failing the scan or silently nulling — include the
     // column in the schema (FhirSchemas.readSchema) to capture it
     bodySchema.fold(raw)(s => raw.withColumn("doc", from_json(col("body"), s,
       Map("columnNameOfCorruptRecord" -> FhirSchemas.CorruptCol))))
+  }
+
+  /** Spark's text format, handing its tasks the cheap copy of the scan's
+    * conf ([[LakeStorage.shippable]]) instead of the session conf it would
+    * otherwise broadcast in full with every scan. */
+  private class ShippedConfText extends TextFileFormat {
+    override def buildReader(spark: SparkSession, dataSchema: StructType,
+        partitionSchema: StructType, requiredSchema: StructType, filters: Seq[Filter],
+        options: Map[String, String], hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] =
+      super.buildReader(spark, dataSchema, partitionSchema, requiredSchema, filters, options,
+        LakeStorage.shippable(hadoopConf))
   }
 
   private def emptyResult(spark: SparkSession, bodySchema: Option[StructType]): DataFrame = {

@@ -118,8 +118,9 @@ object LakeStorage {
     * same key -> value pairs and no per-key sources, which they never
     * read. Every conf the engine ships goes through here: the manifest
     * scan builder ([[graft.catalog.ManifestFileIndex.scanBuilder]]), the
-    * manifest writer factories and the keyedlog plan nodes, the last two
-    * through [[taskConf]]. */
+    * bronze-lake text scan of [[LakeReader.readFhir]], the manifest writer
+    * factories and the keyedlog plan nodes, the last two through
+    * [[taskConf]]. */
   def shippable(conf: Configuration): Configuration = new ShippableConf(conf)
 
   private final class ShippableConf(conf: Configuration) extends Configuration(conf) {

@@ -37,18 +37,11 @@ import org.apache.spark.sql.DataFrame
 object Parallelism {
   def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val est = estimatedInputPartitions(df)
-    val wide = est match {
+    val wide = estimatedInputPartitions(df) match {
       case Some(n) => n >= target
       // unknown leaf shape: the old physical probe (rare — every current
       // call site is a file scan, a micro-batch RDD, or a cached frame)
       case None => df.rdd.getNumPartitions >= target
-    }
-    if (sys.env.getOrElse("SPARK_GRAFT_FANOUT_DEBUG", "0") == "1") {
-      val actual = df.rdd.getNumPartitions
-      System.err.println(s"[fanout] est=$est actual=$actual target=$target " +
-        s"wide=$wide leaves=" + df.queryExecution.withCachedData.collectLeaves()
-          .map(_.getClass.getSimpleName).mkString(","))
     }
     if (wide) df else df.repartition(target)
   }

@@ -232,6 +232,15 @@ class LakeRoundtripSpec extends AnyFunSuite {
     assert(bodies(cfg, "Patient", Some("org/t3"), Some("2024-02-02")) === published)
   }
 
+  test("LakeReader reads documents whose ids hold glob characters") {
+    val (_, cfg) = freshLake()
+    val ids = Seq("p[1]", "p{a,b}", "p*", "p?")
+    publishOn(cfg, "Patient", "t1", 2, ids)
+    val want = ids.map(id => s"""{"resourceType":"Patient","id":"$id","tenant":"t1","day":2}""").sorted
+    assert(bodies(cfg, "Patient", Some("t1"), Some("2024-02-02")) === want)
+    assert(bodies(cfg, "Patient", None, None) === want)
+  }
+
   test("LakeReader rejects a path-like resourceType and confines traversing tenants") {
     val (_, cfg) = freshLake()
     publishOn(cfg, "Patient", "t1", 1, Seq("a"))
@@ -292,16 +301,68 @@ class LakeRoundtripSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("an 8-document publish runs at most 3 Spark jobs") {
+  test("one Spark job per publish batch; none without ids") {
     val (root, cfg) = freshLake()
     val svc = new DatalakePublishService(cfg, clock = jan3_1990)
     val docs = (1 to 8).map(i => FhirEnvelope("Patient", s"p$i", s"""{"id":"p$i"}"""))
-    val jobs = jobsOf(svc.publishFhirR4(spark, "t1", docs))
-    assert(jobs <= 3, s"$jobs jobs")
-    assert(new LakeStorage(root, new Configuration()).listRecursive().size === 8)
-    // the Dataset overload keeps its empty-input short-circuit
-    import spark.implicits._
-    svc.publishFhirR4(spark.emptyDataset[FhirEnvelope], "t2")
-    assert(new LakeStorage(root, new Configuration()).listRecursive().size === 8)
+    assert(jobsOf(svc.publishFhirR4(spark, "t1", docs)) === 1)
+    assert(jobsOf(svc.publishBinaryData(spark, "t1", Seq("b1" -> "{}", "b2" -> "{}", "b3" -> "{}"))) === 1)
+    val storage = new LakeStorage(root, new Configuration())
+    assert(storage.listRecursive().size === 11)
+    val noIds = Seq(FhirEnvelope("Patient", "", "{}"), FhirEnvelope("Patient", null, "{}"))
+    val jobs = jobsOf {
+      val e = intercept[IllegalStateException](svc.publishFhirR4(spark, "t2", noIds))
+      assert(e.getMessage === DatalakePublishService.missingIdMessage("t2"))
+    }
+    assert(jobs === 0)
+    assert(storage.listRecursive().size === 11)
+  }
+
+  test("a failed write throws the write-failure message; the other documents stay written") {
+    val (root, cfg) = freshLake()
+    // one slice: every document of a batch is written by the same task
+    val svc = new DatalakePublishService(cfg.copy(publishPoolMax = 1), clock = jan3_1990)
+    val storage = new LakeStorage(root, new Configuration())
+    // a file where the patient type directory belongs: its writes fail
+    assert(storage.put("ehr/patient", "x"))
+    val e = intercept[IllegalStateException] {
+      svc.publishFhirR4(spark, "t", Seq(
+        FhirEnvelope("Patient", "p1", """{"id":"p1"}"""),
+        FhirEnvelope("Location", "l1", """{"id":"l1"}"""),
+        FhirEnvelope("Location", "", "{}"),
+        FhirEnvelope("Location", "l2", """{"id":"l2"}""")))
+    }
+    assert(e.getMessage === DatalakePublishService.writeFailureMessage)
+    assert(storage.listRecursive("ehr/location").sorted === Seq("l1", "l2").map(id =>
+      s"ehr/location/fhir_tenant_id=t/_date=1990-01-03/$id.json"))
+
+    // a Binary batch: a file at ehr/Binary fails it whole; a directory at
+    // one document's path fails that write alone, and the next still lands
+    assert(storage.put("ehr/Binary", "x"))
+    val eb = intercept[IllegalStateException](svc.publishBinaryData(spark, "t", Seq("b1" -> "{}")))
+    assert(eb.getMessage === DatalakePublishService.writeFailureMessage)
+    val (root2, cfg2) = freshLake()
+    val storage2 = new LakeStorage(root2, new Configuration())
+    assert(storage2.put("ehr/Binary/fhir_tenant_id=t/b2.json/blocker", "x"))
+    val eb2 = intercept[IllegalStateException] {
+      new DatalakePublishService(cfg2.copy(publishPoolMax = 1))
+        .publishBinaryData(spark, "t", Seq("b1" -> "{}", "b2" -> "{}", "b3" -> "{}"))
+    }
+    assert(eb2.getMessage === DatalakePublishService.writeFailureMessage)
+    assert(Seq("b1", "b3").map(id => storage2.get(s"ehr/Binary/fhir_tenant_id=t/$id.json")) ===
+      Seq(Some("{}"), Some("{}")))
+  }
+
+  test("resource types lowercase the same under a Turkish default locale") {
+    val (_, cfg) = freshLake()
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      assert(LakePath.fhirPath("Immunization", "t", jan3_1990(), "i1") ===
+        "ehr/immunization/fhir_tenant_id=t/_date=1990-01-03/i1.json")
+      publishOn(cfg, "Immunization", "t", 1, Seq("i1"))
+      assert(bodies(cfg, "Immunization", Some("t"), None) ===
+        Seq("""{"resourceType":"Immunization","id":"i1","tenant":"t","day":1}"""))
+    } finally java.util.Locale.setDefault(saved)
   }
 }
