@@ -54,8 +54,7 @@ object ScaleReplicate {
     def writeSingleFile(df: DataFrame, t: String): Unit = {
       val tmp = s"$outDir/__single_$t"
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(outDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = graft.core.LakeStorage.openFor(outDir)
       val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
         .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
       val dest = new org.apache.hadoop.fs.Path(s"$outDir/$t.parquet")

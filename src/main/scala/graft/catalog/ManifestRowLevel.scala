@@ -1011,7 +1011,7 @@ class ManifestPoolWriter(owf: OutputWriterFactory, poolPath: String,
     closeWriter()
     if (writer != null) {
       val p = new Path(s"$poolPath/$name")
-      p.getFileSystem(conf.value).delete(p, false)
+      LakeStorage.openFor(p, conf.value).delete(p, false)
       ()
     }
   }

@@ -244,7 +244,7 @@ class ManifestStreamingPoolWriter(owf: OutputWriterFactory, poolPath: String,
   override def commit(): WriterCommitMessage = {
     closeWriter()
     if (writer == null) return PoolFileCommit(None)
-    val fs = new Path(poolPath).getFileSystem(conf.value)
+    val fs = LakeStorage.openFor(poolPath, conf.value)
     val dest = new Path(poolPath, finalName)
     if (fs.exists(dest) && !fs.delete(dest, false))
       throw new java.io.IOException(s"manifest stream: could not replace $dest")
@@ -257,7 +257,7 @@ class ManifestStreamingPoolWriter(owf: OutputWriterFactory, poolPath: String,
     closeWriter()
     if (writer != null) {
       val p = new Path(poolPath, tmpName)
-      p.getFileSystem(conf.value).delete(p, false)
+      LakeStorage.openFor(p, conf.value).delete(p, false)
       ()
     }
   }

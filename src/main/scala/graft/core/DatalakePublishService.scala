@@ -84,7 +84,7 @@ class DatalakePublishService(
     val rel = LakePath.rawPath(tenantId, newTransactionId())
     val wrapped = rawJson(RawDataWrapper(
       url, timeClock().format(DateTimeFormatter.ISO_LOCAL_DATE_TIME), data))
-    val storage = new LakeStorage(cfg.root, LakeStorage.sharedHadoopConf, cfg.retryDelayMs)
+    val storage = new LakeStorage(cfg.root, retryDelayMs = cfg.retryDelayMs)
     if (!storage.put(rel, wrapped))
       throw new IllegalStateException(rawFailureMessage) // ref :191-193
     LakePath.fullUrl(cfg, rel) // ref :195, OCIClient.kt:94-95

@@ -22,9 +22,9 @@ import org.apache.hadoop.conf.Configuration
   */
 class DatalakeRetrieveService(cfg: LakeConfig) {
 
-  private val storage = new LakeStorage(cfg.root, LakeStorage.sharedHadoopConf, cfg.retryDelayMs)
+  private val storage = new LakeStorage(cfg.root, retryDelayMs = cfg.retryDelayMs)
   private lazy val registry =
-    new LakeStorage(cfg.resolvedRegistryRoot, LakeStorage.sharedHadoopConf, cfg.retryDelayMs)
+    new LakeStorage(cfg.resolvedRegistryRoot, retryDelayMs = cfg.retryDelayMs)
 
   /** Read a config/manifest object from the secondary registry store
     * (ref: OCIClient.kt:78-80 `getObjectFromINFX`). */

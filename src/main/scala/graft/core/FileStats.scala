@@ -187,7 +187,7 @@ object FileStats {
     * prune). */
   def fromFooter(conf: Configuration, file: Path): Option[Stats] =
     try {
-      val status = file.getFileSystem(conf).getFileStatus(file)
+      val status = LakeStorage.openFor(file, conf).getFileStatus(file)
       fromFooter(conf, status)
     } catch { case scala.util.control.NonFatal(_) => None }
 

@@ -1,10 +1,11 @@
 package graft.core
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex,
+  PartitionedFile}
 import org.apache.spark.sql.execution.datasources.text.TextFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.Filter
@@ -29,7 +30,7 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * given a date, tenant `a` no longer picks up the documents of a tenant
   * nested under it (`a/b`), which the substring filter matched.
   *
-  * Listing goes through [[LakeStorage.listRecursive]], which walks with
+  * Listing goes through [[LakeStorage.listStatuses]], which walks with
   * `listStatus`, not `listFiles`: on the local store `listFiles` forks an
   * `ls` per file to load permissions nobody reads, and that fork, not the
   * scan, was most of a small read's wall time.
@@ -59,15 +60,15 @@ object LakeReader {
     if (tenant.exists(unmatchable) || date.exists(unmatchable)) {
       return emptyResult(spark, bodySchema)
     }
-    val storage = new LakeStorage(cfg.root, LakeStorage.sharedHadoopConf, cfg.retryDelayMs)
+    val storage = new LakeStorage(cfg.root, retryDelayMs = cfg.retryDelayMs)
     val typeDir = LakePath.fhirTypeDir(resourceType)
     val prefix = tenant.fold(typeDir) { t =>
       s"$typeDir/fhir_tenant_id=$t" + date.fold("")(d => s"/_date=$d")
     }
-    val files = storage.listRecursive(prefix)
-      .filter(p => tenant.forall(t => p.contains(s"fhir_tenant_id=$t/")))
-      .filter(p => date.forall(dt => p.contains(s"_date=$dt/")))
-      .map(rel => s"${cfg.root}/$rel")
+    val files = storage.listStatuses(prefix).collect {
+      case (rel, st) if tenant.forall(t => rel.contains(s"fhir_tenant_id=$t/")) &&
+        date.forall(dt => rel.contains(s"_date=$dt/")) => st
+    }
     if (files.isEmpty) {
       return emptyResult(spark, bodySchema)
     }
@@ -77,8 +78,10 @@ object LakeReader {
     // would look the source up and check every path again, reading each as
     // a glob pattern, so an id holding `[` or `{` failed the scan.
     // One select names the columns, so the plan is analyzed once, not once
-    // per added column.
-    val index = new InMemoryFileIndex(spark, files.map(new Path(_)), Map.empty, None)
+    // per added column. The index takes the walk's statuses from a cache
+    // instead of listing every document again (above 32 paths, as a Spark
+    // job).
+    val index = new InMemoryFileIndex(spark, files.map(_.getPath), Map.empty, None, new Listed(files))
     val text = HadoopFsRelation(index, new StructType(), new StructType().add("value", StringType),
       None, new ShippedConfText, Map("wholetext" -> "true"))(spark)
     val raw = spark.baseRelationToDataFrame(text).select(
@@ -91,6 +94,14 @@ object LakeReader {
     // column in the schema (FhirSchemas.readSchema) to capture it
     bodySchema.fold(raw)(s => raw.withColumn("doc", from_json(col("body"), s,
       Map("columnNameOfCorruptRecord" -> FhirSchemas.CorruptCol))))
+  }
+
+  /** Answers the file index with the statuses the listing walk read. */
+  private final class Listed(files: Seq[FileStatus]) extends FileStatusCache {
+    private val byPath = files.map(st => st.getPath -> Array(st)).toMap
+    override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byPath.get(path)
+    override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = ()
   }
 
   /** Spark's text format, handing its tasks the cheap copy of the scan's

@@ -1,7 +1,6 @@
 package graft.core
 
 import java.io.{FileNotFoundException, IOException}
-import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
@@ -14,11 +13,11 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Replaces the reference's OCI client (ref: OCIClient.kt): `file://` for
   * local runs; s3a/abfs/gcs connectors on a cluster via the same API. All
-  * operations are point operations on exact paths — the distributed write
-  * path lives in [[DatalakePublishService]] (foreachPartition, one
-  * FileSystem handle per partition, mirroring the reference's
-  * one-dedicated-client-per-batch amortization,
-  * ref: DatalakePublishService.kt:63,104).
+  * operations are point operations on exact paths on the driver; the
+  * distributed write path in [[DatalakePublishService]] opens one handle
+  * per slice through [[LakeStorage.openFor]], mirroring the reference's
+  * one-dedicated-client-per-batch amortization
+  * (ref: DatalakePublishService.kt:63,104).
   *
   * Semantics preserved (SURVEY.md §7.4):
   *  - get: missing object -> None (404 -> null, ref: OCIClient.kt:182-187);
@@ -27,11 +26,10 @@ import org.apache.spark.util.SerializableConfiguration
   *    (ref: OCIClient.kt:139-161 — single retry, 5 s).
   *  - exists: HEAD-equivalent (ref: OCIClient.kt:231-247).
   */
-class LakeStorage(val root: String, conf: Configuration, retryDelayMs: Long = 5000L)
-    extends Serializable {
+class LakeStorage(val root: String, conf: Configuration = LakeStorage.defaultConf,
+    retryDelayMs: Long = 5000L) {
 
-  @transient private lazy val fs: FileSystem =
-    FileSystem.get(new URI(root), conf)
+  private lazy val fs: FileSystem = LakeStorage.openFor(root, conf)
 
   private def path(fileName: String): Path = new Path(root, fileName)
 
@@ -70,15 +68,19 @@ class LakeStorage(val root: String, conf: Configuration, retryDelayMs: Long = 50
     * file (about 5 ms wall and 3 ms child CPU each). `listStatus` returns
     * plain `FileStatus` objects that load them only on demand. The
     * checksum filesystem filters `.crc` sidecars out of both. */
-  def listRecursive(prefix: String = ""): Seq[String] = {
+  def listRecursive(prefix: String = ""): Seq[String] = listStatuses(prefix).map(_._1)
+
+  /** [[listRecursive]]'s names, each with the `FileStatus` the walk read
+    * for it, so a scan over them need not stat or list them again. */
+  private[core] def listStatuses(prefix: String): Seq[(String, FileStatus)] = {
     val base = if (prefix.isEmpty) new Path(root) else path(prefix)
     val rootUri = fs.makeQualified(new Path(root)).toUri.getPath
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, FileStatus)]
     def walk(p: Path): Unit = {
       val entries = try fs.listStatus(p) catch { case _: FileNotFoundException => Array.empty[FileStatus] }
       entries.foreach { st =>
         if (st.isDirectory) walk(st.getPath)
-        else buf += st.getPath.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
+        else buf += st.getPath.toUri.getPath.stripPrefix(rootUri).stripPrefix("/") -> st
       }
     }
     walk(base)
@@ -89,17 +91,19 @@ class LakeStorage(val root: String, conf: Configuration, retryDelayMs: Long = 50
 }
 
 object LakeStorage {
-  /** Process-wide default Hadoop configuration (optimization round 16).
-    * `new Configuration()` re-parses core-default.xml/core-site.xml from
-    * the classpath on first use of EVERY instance — driver stack samples
-    * during the catalog gates showed ~15-20% of wall inside that XML
-    * parse, because every metadata round-trip (`openFor`, the lake
-    * services, ad-hoc listings) built a fresh one. One lazily-built
-    * instance serves them all; callers treat it as IMMUTABLE (anything
-    * needing session overrides — `spark.hadoop.*` credentials etc. —
-    * must keep going through `sessionState.newHadoopConf()`, which
-    * copies parsed properties without re-parsing the XML). */
+  /** The Hadoop conf [[openFor]] falls back to where no usable session
+    * exists (an executor JVM, or before any session starts). One lazily
+    * built, immutable instance: `new Configuration()` re-parses the XML
+    * resources on first use of every instance (optimization round 16). */
   lazy val sharedHadoopConf: Configuration = new Configuration()
+
+  /** The Hadoop conf of the active (else the default) usable session, or
+    * [[sharedHadoopConf]]. The session's own instance, which carries the
+    * `spark.hadoop.*` settings, not a `newHadoopConf()` copy of ~1,100 keys
+    * per acquisition. A local-mode task sees the driver's conf. */
+  private def defaultConf: Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(sharedHadoopConf)(_.sparkContext.hadoopConfiguration)
 
   /** A copy of `conf` that is cheap to ship to tasks.
     *
@@ -164,8 +168,15 @@ object LakeStorage {
     }
   }
 
-  def openFor(root: String): FileSystem =
-    FileSystem.get(new URI(root), sharedHadoopConf)
+  /** The FileSystem for `root`, the one way the engine acquires one. Code
+    * holding a conf passes it (tasks their shipped conf, writers their job
+    * conf); the rest gets [[defaultConf]], so `spark.hadoop.*` settings
+    * such as object-store credentials reach driver-side metadata I/O. */
+  def openFor(root: String, conf: Configuration = defaultConf): FileSystem =
+    openFor(new Path(root), conf)
+
+  /** [[openFor]] for a `Path`, with the caller's conf. */
+  def openFor(p: Path, conf: Configuration): FileSystem = p.getFileSystem(conf)
 
   /** The whole object at `p` as UTF-8 text; a missing object raises
     * `FileNotFoundException`. */

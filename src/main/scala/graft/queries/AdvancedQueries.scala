@@ -629,7 +629,7 @@ object AdvancedQueries extends QueryModule {
         "SELECT lang, doc_id, n_chars FROM qk07_documents")
       val dir = s.sql("SHOW TBLPROPERTIES graft_kd.db.activity").collect()
         .find(_.getString(0) == "graft.location").get.getString(1)
-      val fs = new Path(dir).getFileSystem(s.sessionState.newHadoopConf())
+      val fs = graft.core.LakeStorage.openFor(dir)
       def files(): Map[String, Long] = fs.listStatus(new Path(dir))
         .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
           !st.getPath.getName.startsWith("."))
@@ -674,7 +674,7 @@ object AdvancedQueries extends QueryModule {
         "SELECT lang, doc_id, n_chars FROM qk08_documents")
       val dir = s.sql("SHOW TBLPROPERTIES graft_ku.db.activity").collect()
         .find(_.getString(0) == "graft.location").get.getString(1)
-      val fs = new Path(dir).getFileSystem(s.sessionState.newHadoopConf())
+      val fs = graft.core.LakeStorage.openFor(dir)
       def files(): Map[String, Long] = fs.listStatus(new Path(dir))
         .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
           !st.getPath.getName.startsWith("."))

@@ -1917,7 +1917,7 @@ object CoverageQueries extends QueryModule {
         graft.core.ManifestTable.currentVersion(dir).get)
       def hasBloom(f: String, colName: String): Boolean = {
         import scala.jdk.CollectionConverters._
-        val conf = graft.core.LakeStorage.sharedHadoopConf
+        val conf = graft.core.LakeStorage.openFor(dir).getConf
         val path = new org.apache.hadoop.fs.Path(s"$dir/$f")
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),

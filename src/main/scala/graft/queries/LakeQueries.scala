@@ -37,7 +37,7 @@ object LakeQueries extends QueryModule {
         FhirEnvelope("Location", "abc", """{"resourceType":"Location","id":"abc","name":"Location1"}"""),
         FhirEnvelope("Location", "def", """{"resourceType":"Location","id":"def","name":"Location2"}"""),
         FhirEnvelope("Practitioner", "abc", """{"resourceType":"Practitioner","id":"abc"}""")))
-      val paths = new LakeStorage(root, graft.core.LakeStorage.sharedHadoopConf).listRecursive()
+      val paths = new LakeStorage(root).listRecursive()
       import s.implicits._
       paths.toDF("path").orderBy("path")
     },
@@ -50,7 +50,7 @@ object LakeQueries extends QueryModule {
       svc.publishBinaryData(s, "tenant", Seq(
         "12345" -> """{"resourceType":"Binary","id":"12345","contentType":"1"}""",
         "67890" -> """{"resourceType":"Binary","id":"67890","contentType":"pdf"}"""))
-      val paths = new LakeStorage(root, graft.core.LakeStorage.sharedHadoopConf).listRecursive()
+      val paths = new LakeStorage(root).listRecursive()
       import s.implicits._
       paths.toDF("path").orderBy("path")
     },
@@ -143,7 +143,7 @@ object LakeQueries extends QueryModule {
           "no exception"
         } catch { case e: IllegalStateException => e.getMessage }
       // valid resources stay published even though the batch threw:
-      val published = new LakeStorage(root, graft.core.LakeStorage.sharedHadoopConf)
+      val published = new LakeStorage(root)
         .listRecursive().sorted.mkString(",")
       val emptyMsg =
         try { svc.publishFhirR4(s, "mockTenant", Seq.empty); "no exception" }

@@ -197,7 +197,7 @@ class KeyedLogReplaceWrite(op: KeyedLogRowLevelOperation, path: String,
     else KeyedLogWriterFactory(path, queryId, op.conf, stagePrefix(queryId), extras)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(op.conf.value)
+    val fs = LakeStorage.openFor(path, op.conf.value)
     val cms = messages.toSeq.collect { case c: KeyedLogCommit => c }
     val staged = cms.flatMap(_.fileNames).sorted
     val prefix = stagePrefix(queryId)
@@ -260,7 +260,7 @@ class KeyedLogReplaceWrite(op: KeyedLogRowLevelOperation, path: String,
     // nothing destructive happened yet (originals untouched until after
     // the journal commit): remove staged AND already-revealed output so
     // no journal-invisible garbage is left for listing-based consumers
-    val fs = new Path(path).getFileSystem(op.conf.value)
+    val fs = LakeStorage.openFor(path, op.conf.value)
     messages.toSeq.collect { case KeyedLogCommit(names, _) => names }.flatten
       .foreach(n => fs.delete(new Path(path, n), false))
     revealedNames.foreach(n => fs.delete(new Path(path, n), false))

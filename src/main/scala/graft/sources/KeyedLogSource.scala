@@ -96,7 +96,7 @@ object KeyedLogSource {
   private[graft] def listDataFiles(
       path: String, conf: org.apache.spark.util.SerializableConfiguration): Array[String] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf.value)
+    val fs = LakeStorage.openFor(p, conf.value)
     if (!fs.exists(p)) Array.empty
     else fs.listStatus(p).filter(s => s.isFile && !s.getPath.getName.startsWith("_")
         && !s.getPath.getName.startsWith("."))
@@ -123,7 +123,7 @@ object KeyedLogSource {
         // resolution modes, so an unqualified spelling here would make
         // every already-seen file look fresh after a dir gains a journal
         val base = new Path(path)
-        val fs = base.getFileSystem(conf.value)
+        val fs = LakeStorage.openFor(base, conf.value)
         names.map(n => fs.makeQualified(new Path(base, n)).toString).toArray
       case None => listDataFiles(path, conf)
     }
@@ -141,7 +141,7 @@ object KeyedLogSource {
   private[graft] def hideReplaced(
       path: String, conf: org.apache.spark.util.SerializableConfiguration,
       v: Long, names: Seq[String]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
+    val fs = LakeStorage.openFor(path, conf.value)
     names.foreach { n =>
       val src = new Path(path, n)
       try {
@@ -159,7 +159,7 @@ object KeyedLogSource {
   private[graft] def tombstonesOf(
       path: String, conf: org.apache.spark.util.SerializableConfiguration): Map[String, String] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf.value)
+    val fs = LakeStorage.openFor(p, conf.value)
     if (!fs.exists(p)) Map.empty
     else fs.listStatus(p).iterator
       .map(_.getPath.getName).filter(_.startsWith(".rm-v"))
@@ -188,7 +188,7 @@ object KeyedLogSource {
   private[graft] def restoreVersion(
       path: String, conf: org.apache.spark.util.SerializableConfiguration,
       v: Long): Long = {
-    val fs = new Path(path).getFileSystem(conf.value)
+    val fs = LakeStorage.openFor(path, conf.value)
     val target = KeyedLogVersionLog.liveSetAt(path, conf, v).getOrElse(
       throw new IllegalArgumentException(
         s"keyed_log($path): version $v is not journaled — journaled: " +
@@ -228,7 +228,7 @@ object KeyedLogSource {
       path: String, conf: org.apache.spark.util.SerializableConfiguration,
       retainMs: Long, dryRun: Boolean): Seq[String] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf.value)
+    val fs = LakeStorage.openFor(p, conf.value)
     if (!fs.exists(p)) return Nil
     val cutoff = System.currentTimeMillis() - retainMs
     val targets = fs.listStatus(p).filter { s =>
@@ -249,7 +249,7 @@ object KeyedLogSource {
   private[sources] def deleteCommitted(
       path: String, conf: org.apache.spark.util.SerializableConfiguration,
       messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
+    val fs = LakeStorage.openFor(path, conf.value)
     messages.foreach {
       case KeyedLogCommit(names, _) =>
         names.foreach(n => fs.delete(new Path(path, n), false))
@@ -668,7 +668,7 @@ private[graft] object KeyedLogVersionLog {
 
   private def log(path: String,
                   conf: org.apache.spark.util.SerializableConfiguration): VersionLog =
-    new VersionLog(path, new Path(path).getFileSystem(conf.value), "_klogv_",
+    new VersionLog(path, LakeStorage.openFor(path, conf.value), "_klogv_",
       Some("_klogv_head"), "keyed_log journal marker")
 
   /** The journal head version, O(1) object reads with a fresh pointer. */
@@ -1029,7 +1029,7 @@ case class KeyedLogWriterFactory(path: String, queryId: String,
 class KeyedLogWriter(dir: String, tmpName: String, finalName: String,
     conf: org.apache.spark.util.SerializableConfiguration,
     extras: Seq[org.apache.spark.sql.types.DataType] = Nil) extends DataWriter[InternalRow] {
-  private val fs = new Path(dir).getFileSystem(conf.value)
+  private val fs = LakeStorage.openFor(dir, conf.value)
   private val out = new java.io.BufferedWriter(
     new java.io.OutputStreamWriter(fs.create(new Path(dir, tmpName), true), "UTF-8"))
   private val stats = new KeyedLogFileStats(extras)
@@ -1104,7 +1104,7 @@ class KeyedLogClusteredWriter(dir: String, queryId: String, partitionId: Int,
     extras: Seq[org.apache.spark.sql.types.DataType] = Nil)
     extends DataWriter[InternalRow] {
 
-  private val fs = new Path(dir).getFileSystem(conf.value)
+  private val fs = LakeStorage.openFor(dir, conf.value)
   private var out: java.io.BufferedWriter = _
   private var currentKey: String = _
   private var started = false
@@ -1557,7 +1557,7 @@ case class KeyedLogScan(path: String, required: StructType,
     * built-in file sources before filter estimation). */
   override def estimateStatistics(): Statistics = new Statistics {
     private val bytes: Long = {
-      val fs = new Path(path).getFileSystem(conf.value)
+      val fs = LakeStorage.openFor(path, conf.value)
       // key-pruned: a point lookup on a clustered dir sizes as one file
       // group, so the planner can happily broadcast it
       allFiles.filter(fileMayMatch)
@@ -1703,7 +1703,7 @@ private[sources] class KeyedLogSeenLog(dir: String,
   import org.json4s._
   import graft.core.VersionLog
 
-  private val log = new VersionLog(dir, new Path(dir).getFileSystem(conf.value), "",
+  private val log = new VersionLog(dir, LakeStorage.openFor(dir, conf.value), "",
     None, "seen-log entry")
   private var latest: Long = -1L
   private val seenSet = scala.collection.mutable.HashSet.empty[String]
@@ -1990,7 +1990,7 @@ private[sources] class KeyedLogLines(files: Seq[String], pushed: Array[Filter],
         val f = fileIt.next()
         fileName = new Path(f).getName
         in = new java.io.BufferedReader(new java.io.InputStreamReader(
-          new Path(f).getFileSystem(conf.value).open(new Path(f)), "UTF-8"))
+          LakeStorage.openFor(f, conf.value).open(new Path(f)), "UTF-8"))
       }
       val line = in.readLine()
       if (line == null) { in.close(); in = null }

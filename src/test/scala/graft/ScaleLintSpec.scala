@@ -24,7 +24,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * them, so no other module reads or deletes entries behind their back.
   * And `src/main` spawns no processes: a fork from a multi-GB JVM costs
   * milliseconds of child CPU, the floor the fork-free local store
-  * ([[graft.core.ForkFreeRawLocalFileSystem]]) removed.
+  * ([[graft.core.ForkFreeRawLocalFileSystem]]) removed. And every Hadoop
+  * FileSystem is acquired through [[graft.core.LakeStorage.openFor]], the
+  * one place that picks the conf (the session's on the driver), so no call
+  * site opens a store with a conf missing `spark.hadoop.*` settings.
   */
 class ScaleLintSpec extends AnyFunSuite {
 
@@ -192,5 +195,26 @@ class ScaleLintSpec extends AnyFunSuite {
     val offenders = mainSources.collect {
       case (f, src) if processSpawn.findFirstIn(code(src)).isDefined => f.getPath }
     assert(offenders.isEmpty, s"process spawns in src/main: ${offenders.mkString(", ")}")
+  }
+
+  /** A Hadoop FileSystem acquisition, or a use of the session-less
+    * fallback conf. */
+  private val fsAcquisition =
+    """\bgetFileSystem\s*\(|\bFileSystem\s*\.\s*(?:get|newInstance|getLocal)\s*\(|\bsharedHadoopConf\b""".r
+
+  test("src/main acquires FileSystems only through LakeStorage.openFor") {
+    Seq("new Path(dir).getFileSystem(conf.value)", "p.getFileSystem (conf)",
+        "FileSystem.get(new URI(root), conf)", "org.apache.hadoop.fs.FileSystem.newInstance(uri, conf)",
+        "FileSystem.getLocal(conf)", "new LakeStorage(root, LakeStorage.sharedHadoopConf)")
+      .foreach(s => assert(fsAcquisition.findFirstIn(code(s)).isDefined, s))
+    Seq("LakeStorage.openFor(dir)", "LakeStorage.openFor(p, conf.value).delete(p, false)",
+        "openFor(dir).getConf", "// new Path(dir).getFileSystem(conf)",
+        "FileSystem.getFileSystemClass(\"file\", conf)", "/** [[LakeStorage.sharedHadoopConf]] */")
+      .foreach(s => assert(fsAcquisition.findFirstIn(code(s)).isEmpty, s))
+    val offenders = mainSources.collect {
+      case (f, src) if f.getPath != "src/main/scala/graft/core/LakeStorage.scala" &&
+          fsAcquisition.findFirstIn(code(src)).isDefined => f.getPath }
+    assert(offenders.isEmpty,
+      s"FileSystem acquisitions outside LakeStorage (use LakeStorage.openFor): ${offenders.mkString(", ")}")
   }
 }

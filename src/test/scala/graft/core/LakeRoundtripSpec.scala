@@ -7,6 +7,7 @@ import java.time.{LocalDate, LocalDateTime}
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.input_file_name
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Publish -> retrieve round-trips over a file:// lake, replacing the
@@ -241,6 +242,14 @@ class LakeRoundtripSpec extends AnyFunSuite {
     assert(bodies(cfg, "Patient", None, None) === want)
   }
 
+  test("LakeReader leaves out the document names Spark's file listing hides") {
+    val (_, cfg) = freshLake()
+    publishOn(cfg, "Patient", "t1", 2, Seq(".p1", "_p2", "_metadata", "p3"))
+    val shown = LakeReader.readFhir(spark, cfg, "Patient").select(input_file_name())
+      .collect().map(r => new org.apache.hadoop.fs.Path(r.getString(0)).getName).sorted
+    assert(shown.toSeq === Seq("p3.json"))
+  }
+
   test("LakeReader rejects a path-like resourceType and confines traversing tenants") {
     val (_, cfg) = freshLake()
     publishOn(cfg, "Patient", "t1", 1, Seq("a"))
@@ -316,6 +325,16 @@ class LakeRoundtripSpec extends AnyFunSuite {
     }
     assert(jobs === 0)
     assert(storage.listRecursive().size === 11)
+  }
+
+  test("a readFhir scan over 40 documents runs as many Spark jobs as one over 4") {
+    def scanJobs(n: Int): Int = {
+      val (_, cfg) = freshLake()
+      publishOn(cfg, "Patient", "t1", 1, (1 to n).map(i => s"p$i"))
+      jobsOf(assert(LakeReader.readFhir(spark, cfg, "Patient").count() === n))
+    }
+    // above 32 paths, a file index that lists them does so in a Spark job
+    assert(scanJobs(40) === scanJobs(4))
   }
 
   test("a failed write throws the write-failure message; the other documents stay written") {

@@ -1,0 +1,92 @@
+package graft.core
+
+import java.net.URI
+import java.nio.file.Files
+import java.time.LocalDate
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+/** A local store under the scheme `graftprobe`, known only to the
+  * session's Hadoop conf, that counts its `listStatus` calls. */
+class GraftProbeFileSystem extends ForkFreeRawLocalFileSystem {
+  override def getUri: URI = GraftProbeFileSystem.uri
+  override def getScheme: String = "graftprobe"
+  override def listStatus(f: Path): Array[FileStatus] = {
+    GraftProbeFileSystem.listings.incrementAndGet()
+    super.listStatus(f)
+  }
+}
+
+object GraftProbeFileSystem {
+  val uri: URI = URI.create("graftprobe:///")
+  val listings = new AtomicInteger()
+}
+
+/** [[LakeStorage.openFor]] opens driver-side metadata I/O with the
+  * session's Hadoop conf: a scheme registered only there is reachable by
+  * the bronze services and the manifest log alike. Hadoop's FileSystem
+  * cache is off for the scheme, so each acquisition shows which conf it
+  * used. */
+class SessionConfSpec extends AnyFunSuite {
+
+  private lazy val spark = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .getOrCreate()
+    Seq("fs.graftprobe.impl" -> classOf[GraftProbeFileSystem].getName,
+      "fs.graftprobe.impl.disable.cache" -> "true").foreach { case (k, v) =>
+      s.sparkContext.hadoopConfiguration.set(k, v)
+      s.conf.set(k, v)
+    }
+    s
+  }
+
+  private def probeRoot(): String =
+    "graftprobe://" + Files.createTempDirectory("graft_probe_").toString
+
+  test("the bronze services publish, retrieve and scan through a session-only scheme") {
+    val root = probeRoot()
+    val cfg = LakeConfig(root = root, retryDelayMs = 0L)
+    val svc = new DatalakePublishService(cfg, clock = () => LocalDate.of(2024, 2, 1))
+    svc.publishFhirR4(spark, "t1", Seq("a", "b").map(id =>
+      FhirEnvelope("Patient", id, s"""{"resourceType":"Patient","id":"$id"}""")))
+    svc.publishBinaryData(spark, "t1", Seq("x" -> """{"resourceType":"Binary","id":"x"}"""))
+    val retrieve = new DatalakeRetrieveService(cfg)
+    assert(retrieve.retrieveBinaryData("t1", "x").map(_.id) === Some("x"))
+    assert(retrieve.objectExists("ehr/patient/fhir_tenant_id=t1/_date=2024-02-01/a.json"))
+    assert(!retrieve.objectExists("ehr/patient/fhir_tenant_id=t1/_date=2024-02-01/z.json"))
+    val bodies = LakeReader.readFhir(spark, cfg, "Patient", Some("t1"))
+      .select("body").collect().map(_.getString(0)).sorted
+    assert(bodies.toSeq === Seq("a", "b").map(id => s"""{"resourceType":"Patient","id":"$id"}"""))
+  }
+
+  test("a manifest table appends, resolves and reads through a session-only scheme") {
+    val s = spark
+    import s.implicits._
+    val dir = probeRoot() + "/t"
+    ManifestTable.append(Seq(1L, 2L).toDF("k"), dir)
+    ManifestTable.append(Seq(3L).toDF("k"), dir)
+    assert(ManifestTable.resolve(dir, None) === Some(2L))
+    assert(ManifestTable.resolve(dir, Some(1L)) === Some(1L))
+    assert(ManifestTable.read(spark, dir).as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    assert(ManifestTable.read(spark, dir, Some(1L)).count() === 2)
+  }
+
+  test("readFhir lists each directory once and never lists its documents") {
+    val root = probeRoot()
+    val cfg = LakeConfig(root = root, retryDelayMs = 0L)
+    for (day <- Seq(1, 2))
+      new DatalakePublishService(cfg, clock = () => LocalDate.of(2024, 2, day))
+        .publishFhirR4(spark, "t1", (1 to 20).map(i => FhirEnvelope("Patient", s"p$day-$i", "{}")))
+    GraftProbeFileSystem.listings.set(0)
+    assert(LakeReader.readFhir(spark, cfg, "Patient", Some("t1")).count() === 40)
+    // the tenant directory and its two date directories
+    assert(GraftProbeFileSystem.listings.get === 3)
+  }
+}
