@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   * it replicas share the time axis, so density grows factor-x — the
   * "denser traffic" mode (and, for joins windowed purely on time, a
   * quadratically growing true result set).
-  * Scratch tooling for the scaling study in STATE.md — not part of the
-  * library surface; writes only under the given outDir.
+  * Runs on `SPARK_GRAFT_CPUS` cores, read as [[Verify]] and [[Bench]] read
+  * it (default here: all available), and writes that many part-files per
+  * replicated table. Scratch tooling for the scaling study in STATE.md — not part
+  * of the library surface; writes only under the given outDir.
   */
 object ScaleReplicate {
   def main(args: Array[String]): Unit = {
@@ -27,8 +29,9 @@ object ScaleReplicate {
         s"usage: <inDir> <outDir> <factor> [shift-events], got ${other.mkString(" ")}")
     }
     val factor = factorS.toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -44,7 +47,7 @@ object ScaleReplicate {
       reps.reduce(_ unionByName _)
     }
     def write(df: DataFrame, t: String): Unit = {
-      df.repartition(32).write.mode("overwrite").parquet(s"$outDir/$t.parquet")
+      df.repartition(cpus.toInt).write.mode("overwrite").parquet(s"$outDir/$t.parquet")
       println(s"[replicate] $t: ${spark.read.parquet(s"$outDir/$t.parquet").count()} rows")
     }
     /** The source testdata ships each table as ONE parquet FILE named

@@ -5,21 +5,19 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.{PartitioningAwareFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.core.{FileStats, LakeStorage}
+import graft.core.{FileStats, LakeStorage, ListedFileIndex}
 
-/** A [[PartitioningAwareFileIndex]] served entirely FROM THE MANIFEST LOG:
-  * the commit markers name every live file and (since stats were added)
-  * its length, so scan planning needs NO filesystem listing at all — the
-  * move that keeps planning O(matched files) when the table holds millions
-  * of files (an InMemoryFileIndex over the same paths stats every file,
-  * which on a loaded local[32] box already costs >1 s at 800 files and on
-  * an object store is a throttled LIST/HEAD storm). Delta/Iceberg readers
-  * are log-served for exactly this reason.
+/** The manifest log's file index: the commit markers name every live
+  * file and (since stats were added) its length, so scan planning needs NO
+  * filesystem listing at all ([[ListedFileIndex]] over the log's
+  * statuses) — the move that keeps planning O(matched files) when the
+  * table holds millions of files (on an object store, a listing is a
+  * throttled LIST/HEAD storm). Delta/Iceberg readers are log-served for
+  * exactly this reason.
   *
   * Files are immutable once a marker references them (the manifest's
   * visibility contract), so log-recorded lengths never go stale. A file
@@ -27,34 +25,6 @@ import graft.core.{FileStats, LakeStorage}
   * cost proportional to the legacy residue, not the table. Modification
   * times are served as 0 (only the `_metadata.file_modification_time`
   * pseudo-column would observe them; the data path never does). */
-class ManifestFileIndex(spark: SparkSession, statuses: Seq[FileStatus])
-    extends PartitioningAwareFileIndex(spark, Map.empty, None) {
-
-  override def partitionSpec(): PartitionSpec = PartitionSpec.emptySpec
-
-  override protected val leafFiles: scala.collection.mutable.LinkedHashMap[Path, FileStatus] = {
-    val m = scala.collection.mutable.LinkedHashMap.empty[Path, FileStatus]
-    statuses.foreach(s => m.put(s.getPath, s))
-    m
-  }
-
-  override protected val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
-    statuses.groupBy(_.getPath.getParent).map { case (d, fs) => d -> fs.toArray }
-
-  override val rootPaths: Seq[Path] =
-    statuses.map(_.getPath.getParent).distinct
-
-  override def refresh(): Unit = ()
-
-  // scan-reuse friendliness: equal iff the same file set (the same
-  // contract InMemoryFileIndex keys its equality on)
-  override def equals(other: Any): Boolean = other match {
-    case o: ManifestFileIndex => leafFiles.keySet == o.leafFiles.keySet
-    case _                    => false
-  }
-  override def hashCode(): Int = leafFiles.keySet.hashCode()
-}
-
 object ManifestFileIndex {
 
   /** FileStatus per dir-relative file: length from the log's stats when
@@ -105,7 +75,7 @@ object ManifestFileIndex {
                   withRowIndex: Boolean = false): ParquetScanBuilder = {
     val schema = if (withRowIndex) DvRead.withRowIndex(declared) else declared
     new ParquetScanBuilder(spark,
-        new ManifestFileIndex(spark, statuses(dir, files, stats)),
+        new ListedFileIndex(spark, statuses(dir, files, stats)),
         schema, schema, options) {
       override lazy val hadoopConf: Configuration = LakeStorage.shippable(
         sparkSession.sessionState.newHadoopConfWithOptions(

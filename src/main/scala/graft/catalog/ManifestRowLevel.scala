@@ -324,9 +324,9 @@ class ManifestScanBuilder(mkBuilder: (Seq[String], Boolean) => org.apache.spark.
     * jobs. The level above parquet's own aggregate pushdown (which still
     * opens every footer), and what keeps `SELECT count(*)` (or
     * `SELECT lang, count(*) ... GROUP BY lang` on a lang-clustered
-    * layout) instant on a 10⁵-file table. Partial-pushdown contract: the
-    * scan serves one row per group and Spark's final aggregate folds them
-    * (sum for counts, min/max idempotent).
+    * layout) instant on a 10⁵-file table. Complete-pushdown contract: the
+    * scan serves exactly one row per group holding the final answer, so
+    * Spark plans no aggregate (and no exchange) above it.
     *
     * Soundness rules:
     *  - GROUP BY columns must be FILE-CONSTANT in every (non-empty) file:
@@ -500,8 +500,26 @@ class ManifestScanBuilder(mkBuilder: (Seq[String], Boolean) => org.apache.spark.
     Some((StructType(keyFields ++ aggFields), rows.toArray))
   }
 
+  /** The aggregation Spark last offered, with its metadata answer: Spark
+    * asks [[supportCompletePushDown]] and then [[pushAggregation]] about
+    * the same object, and the fold over every file's stats runs once. */
+  private var offered: Option[(org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
+    Option[(StructType, Array[InternalRow])])] = None
+
+  private def metadataAnswer(aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Option[(StructType, Array[InternalRow])] =
+    offered match {
+      case Some((a, answer)) if a eq aggregation => answer
+      case _ =>
+        val answer = servableMetadataAgg(aggregation)
+        offered = Some((aggregation, answer))
+        answer
+    }
+
+  override def supportCompletePushDown(aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
+    metadataAnswer(aggregation).isDefined
+
   override def pushAggregation(aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    servableMetadataAgg(aggregation).foreach { agg =>
+    metadataAnswer(aggregation).foreach { agg =>
       metadataAgg = Some(agg)
       savedAgg = Some(aggregation)
       aggPushed = true

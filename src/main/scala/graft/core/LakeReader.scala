@@ -1,15 +1,21 @@
 package graft.core
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex,
-  PartitionedFile}
-import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
+import org.apache.spark.sql.connector.read.{LocalScan, PartitionReaderFactory, Scan, ScanBuilder,
+  SupportsPushDownAggregates, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.text.TextOptions
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.execution.datasources.v2.text.{TextPartitionReaderFactory, TextScan}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Partition-pruned scans over the bronze lake layout.
   *
@@ -34,6 +40,13 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * `listStatus`, not `listFiles`: on the local store `listFiles` forks an
   * `ls` per file to load permissions nobody reads, and that fork, not the
   * scan, was most of a small read's wall time.
+  *
+  * The documents are a DSv2 relation over the walk's statuses. Each object
+  * is one document, so the listing already knows how many rows a scan
+  * would return: `readFhir(...).count()`, with no filter or grouping in
+  * between, is answered from it in one one-row Spark job and opens no
+  * document. Every other action (a filtered or grouped count, a count of a
+  * column, any row-reading action) reads the documents.
   */
 object LakeReader {
 
@@ -74,20 +87,18 @@ object LakeReader {
     }
     // wholetext: one row per OBJECT (the publish contract is one document
     // per file) — line-based reading would shred pretty-printed JSON bodies.
-    // The relation is built over the listed files directly: `spark.read`
+    // The relation is built over the listed statuses directly: `spark.read`
     // would look the source up and check every path again, reading each as
-    // a glob pattern, so an id holding `[` or `{` failed the scan.
-    // One select names the columns, so the plan is analyzed once, not once
-    // per added column. The index takes the walk's statuses from a cache
-    // instead of listing every document again (above 32 paths, as a Spark
-    // job).
-    val index = new InMemoryFileIndex(spark, files.map(_.getPath), Map.empty, None, new Listed(files))
-    val text = HadoopFsRelation(index, new StructType(), new StructType().add("value", StringType),
-      None, new ShippedConfText, Map("wholetext" -> "true"))(spark)
-    val raw = spark.baseRelationToDataFrame(text).select(
-      col("value").as("body"),
-      regexp_extract(input_file_name(), "fhir_tenant_id=([^/]+)", 1).as("fhir_tenant_id"),
-      regexp_extract(input_file_name(), "_date=([^/]+)", 1).as("_date"))
+    // a glob pattern, so an id holding `[` or `{` failed the scan; and the
+    // index lists and stats no document again (above 32 paths, a Spark
+    // job). One select names the columns, so the plan is analyzed once,
+    // not once per added column.
+    val documents = new Documents(spark, prefix, new ListedFileIndex(spark, files))
+    val raw = DatasetBridge.ofRows(spark, DataSourceV2Relation.create(documents, None, None, WholeText))
+      .select(
+        col("value").as("body"),
+        regexp_extract(input_file_name(), "fhir_tenant_id=([^/]+)", 1).as("fhir_tenant_id"),
+        regexp_extract(input_file_name(), "_date=([^/]+)", 1).as("_date"))
     // PERMISSIVE + corrupt-record column: a structurally broken document
     // parses to a struct with only FhirSchemas.CorruptCol set (the raw
     // text) instead of failing the scan or silently nulling — include the
@@ -96,23 +107,78 @@ object LakeReader {
       Map("columnNameOfCorruptRecord" -> FhirSchemas.CorruptCol))))
   }
 
-  /** Answers the file index with the statuses the listing walk read. */
-  private final class Listed(files: Seq[FileStatus]) extends FileStatusCache {
-    private val byPath = files.map(st => st.getPath -> Array(st)).toMap
-    override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byPath.get(path)
-    override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
-    override def invalidateAll(): Unit = ()
+  private val ValueSchema = new StructType().add("value", StringType)
+  private val WholeText = new CaseInsensitiveStringMap(Map("wholetext" -> "true").asJava)
+
+  /** The listed documents as a DSv2 table of one `value` column. */
+  private final class Documents(spark: SparkSession, prefix: String, index: ListedFileIndex)
+      extends Table with SupportsRead {
+    override def name(): String = s"fhir documents $prefix"
+    override def schema(): StructType = ValueSchema
+    override def capabilities(): java.util.Set[TableCapability] =
+      java.util.EnumSet.of(TableCapability.BATCH_READ)
+    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+      new DocumentScanBuilder(spark, index, options)
   }
 
-  /** Spark's text format, handing its tasks the cheap copy of the scan's
+  /** Answers an ungrouped COUNT(*) with nothing between it and the scan
+    * from the listing: one document is one row, so the count is the number
+    * of files the text scan would open, after Spark's hidden-name filter
+    * and its skip of zero-length files. It is a complete pushdown: Spark
+    * plans no aggregate above the one-row scan. Any other query reads the
+    * documents. Filters are never taken, so a filtered count keeps its
+    * filter and reads. */
+  private final class DocumentScanBuilder(spark: SparkSession, index: ListedFileIndex,
+      options: CaseInsensitiveStringMap)
+      extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
+    private var required = ValueSchema
+    private var counted = false
+
+    private def countStar(agg: Aggregation): Boolean =
+      agg.groupByExpressions.isEmpty && (agg.aggregateExpressions match {
+        case Array(_: CountStar) => true
+        case _                   => false
+      })
+
+    override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
+    override def supportCompletePushDown(agg: Aggregation): Boolean = countStar(agg)
+    override def pushAggregation(agg: Aggregation): Boolean = {
+      counted = countStar(agg)
+      counted
+    }
+
+    override def build(): Scan = {
+      val text = new ShippedConfTextScan(spark, index, required, options)
+      if (!counted) text
+      else {
+        // the files the text scan would open, by Spark's own planning: it
+        // drops hidden names and skips zero-length files, and a wholetext
+        // file is never split
+        val n = text.planInputPartitions().iterator.map {
+          case p: FilePartition => p.files.length.toLong
+        }.sum
+        new LocalScan {
+          override def readSchema(): StructType =
+            new StructType().add("count(*)", LongType, nullable = false)
+          override def rows(): Array[InternalRow] = Array(InternalRow(n))
+        }
+      }
+    }
+  }
+
+  /** Spark's text scan, handing its tasks the cheap copy of the scan's
     * conf ([[LakeStorage.shippable]]) instead of the session conf it would
     * otherwise broadcast in full with every scan. */
-  private class ShippedConfText extends TextFileFormat {
-    override def buildReader(spark: SparkSession, dataSchema: StructType,
-        partitionSchema: StructType, requiredSchema: StructType, filters: Seq[Filter],
-        options: Map[String, String], hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] =
-      super.buildReader(spark, dataSchema, partitionSchema, requiredSchema, filters, options,
-        LakeStorage.shippable(hadoopConf))
+  private final class ShippedConfTextScan(spark: SparkSession, index: ListedFileIndex,
+      required: StructType, options: CaseInsensitiveStringMap)
+      extends TextScan(spark, index, ValueSchema, required, new StructType(), options) {
+    override def createReaderFactory(): PartitionReaderFactory = {
+      val conf = sparkSession.sessionState.newHadoopConfWithOptions(
+        options.asCaseSensitiveMap.asScala.toMap)
+      TextPartitionReaderFactory(sparkSession.sessionState.conf,
+        sparkSession.sparkContext.broadcast(LakeStorage.taskConf(conf)),
+        readDataSchema, readPartitionSchema, new TextOptions(options.asScala.toMap))
+    }
   }
 
   private def emptyResult(spark: SparkSession, bodySchema: Option[StructType]): DataFrame = {

@@ -2,14 +2,14 @@ package graft.catalog
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{expressions => E}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{FileStats, ManifestTable}
+import graft.core.{FileStats, ManifestTable, SparkJobs}
 
 /** Manifest data skipping: per-file min/max/nullCount stats harvested from
   * parquet footers at commit time, stored in the commit marker, and used
@@ -414,6 +414,46 @@ class StatsSkippingSpec extends AnyFunSuite {
       s"fully-vectored group must vanish, got ${gdvRows.toSeq}")
     assert(gdv.queryExecution.executedPlan.toString.contains("LocalTableScan"),
       "vectored grouped count must still serve from the log")
+  }
+
+  test("metadata-served aggregates finish in one Spark job; unservable ones keep Spark's aggregate") {
+    spark.sql("CREATE TABLE gk.db.mj (lang STRING, id BIGINT) USING manifest " +
+      "TBLPROPERTIES ('graft.dml.mode' = 'merge-on-read')")
+    Seq(("en", 0, 10), ("de", 100, 20)).foreach { case (l, base, n) =>
+      spark.sql(s"INSERT INTO gk.db.mj SELECT '$l', id + $base FROM range($n)")
+    }
+    spark.sql("CREATE TABLE gk.db.mje (lang STRING, id BIGINT) USING manifest")
+    // with AQE on, a partial pushdown's exchange would run as a job of its own
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try {
+      def served(sql: String): Seq[Seq[Any]] = {
+        val df = spark.sql(sql)
+        val (rows, jobs) = SparkJobs.counted(spark)(df.collect())
+        val plan = df.queryExecution.executedPlan.toString
+        assert(jobs === 1, s"$sql ran $jobs jobs:\n$plan")
+        assert(plan.contains("LocalTableScan") && !plan.contains("Exchange") &&
+          !plan.contains("HashAggregate"), s"$sql:\n$plan")
+        rows.toSeq.map(_.toSeq).sortBy(_.mkString(","))
+      }
+      assert(served("SELECT count(*) FROM gk.db.mj") === Seq(Seq(30L)))
+      assert(served("SELECT min(id), max(id) FROM gk.db.mj") === Seq(Seq(0L, 119L)))
+      assert(served("SELECT lang, count(*) FROM gk.db.mj GROUP BY lang") ===
+        Seq(Seq("de", 20L), Seq("en", 10L)))
+      assert(served("SELECT count(*) FROM gk.db.mje") === Seq(Seq(0L)))
+      assert(served("SELECT min(id), max(id) FROM gk.db.mje") === Seq(Seq(null, null)))
+      assert(served("SELECT lang, count(*) FROM gk.db.mje GROUP BY lang") === Seq.empty)
+      def aggregated(sql: String): Row = {
+        val df = spark.sql(sql)
+        val row = df.collect().head
+        val plan = df.queryExecution.executedPlan.toString
+        assert(plan.contains("HashAggregate") && plan.contains("BatchScan"), s"$sql:\n$plan")
+        row
+      }
+      assert(aggregated("SELECT sum(id) FROM gk.db.mj").getLong(0) === (0L until 10L).sum + (100L until 120L).sum)
+      spark.sql("DELETE FROM gk.db.mj WHERE id % 10 = 0")
+      assert(aggregated("SELECT count(id) FROM gk.db.mj").getLong(0) === 27L)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("streaming micro-batches skip files by stats and still answer exactly") {

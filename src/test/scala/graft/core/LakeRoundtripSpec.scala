@@ -5,9 +5,8 @@ import java.nio.file.Files
 import java.time.{LocalDate, LocalDateTime}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.input_file_name
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.functions.{col, count, input_file_name, length}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Publish -> retrieve round-trips over a file:// lake, replacing the
@@ -283,32 +282,8 @@ class LakeRoundtripSpec extends AnyFunSuite {
     assert(cost < 20, s"child CPU per listing pass (ms, best of 3): $cost")
   }
 
-  /** Spark jobs `body` launches. A sentinel job runs afterwards: a listener
-    * sees events in order, so when the sentinel's start arrives every job
-    * of `body` has been counted. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-of-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group-sentinel" => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-sentinel", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Spark jobs `body` launches. */
+  private def jobsOf(body: => Unit): Int = SparkJobs.counted(spark)(body)._2
 
   test("one Spark job per publish batch; none without ids") {
     val (root, cfg) = freshLake()
@@ -335,6 +310,67 @@ class LakeRoundtripSpec extends AnyFunSuite {
     }
     // above 32 paths, a file index that lists them does so in a Spark job
     assert(scanJobs(40) === scanJobs(4))
+    // a served count opens no document, so a re-listing index could hide
+    // behind it; an action that reads the rows still plans the file scan
+    def readJobs(n: Int): Int = {
+      val (_, cfg) = freshLake()
+      publishOn(cfg, "Patient", "t1", 1, (1 to n).map(i => s"p$i"))
+      jobsOf(assert(LakeReader.readFhir(spark, cfg, "Patient").select("body").collect().length === n))
+    }
+    assert(readJobs(40) === readJobs(4))
+  }
+
+  test("readFhir counts served from the listing equal the rows a scan reads") {
+    val (root, cfg) = freshLake()
+    publishOn(cfg, "Patient", "t1", 1, Seq("a", "b", "_x", ".x"))
+    publishOn(cfg, "Patient", "t1", 2, Seq("c"))
+    publishOn(cfg, "Patient", "t2", 1, Seq("d"))
+    publishOn(cfg, "Patient", "n", 1, Seq("e"))
+    publishOn(cfg, "Patient", "n/m", 1, Seq("f", "g"))
+    val storage = new LakeStorage(root, new Configuration())
+    val feb1 = LocalDate.of(2024, 2, 1)
+    assert(storage.put(LakePath.fhirPath("Patient", "t1", feb1, "empty"), ""))
+    assert(storage.put(LakePath.fhirPath("Patient", "t1", feb1, "short"), "{}"))
+    def plan(df: org.apache.spark.sql.DataFrame): String = {
+      df.collect()
+      df.queryExecution.executedPlan.toString
+    }
+    // the hidden names (_x, .x) and the zero-length object are no rows
+    val cases = Seq(
+      (None, None) -> 8L,
+      (Some("t1"), None) -> 4L,
+      (Some("t1"), Some("2024-02-01")) -> 3L,
+      (Some("n"), None) -> 3L,
+      (Some("n"), Some("2024-02-01")) -> 1L,
+      (Some("n/m"), Some("2024-02-01")) -> 2L)
+    for (((tenant, date), want) <- cases) {
+      val docs = LakeReader.readFhir(spark, cfg, "Patient", tenant, date)
+      val read = docs.select("body").collect().length
+      assert(read === want, s"tenant=$tenant date=$date")
+      assert(docs.count() === read, s"tenant=$tenant date=$date")
+      val served = plan(docs.groupBy().count())
+      assert(served.contains("LocalTableScan") && !served.contains("Exchange") &&
+        !served.contains("BatchScan"), s"tenant=$tenant date=$date:\n$served")
+    }
+    assert(jobsOf(LakeReader.readFhir(spark, cfg, "Patient").count()) === 1)
+    // anything but a bare COUNT(*) reads the documents
+    val docs = LakeReader.readFhir(spark, cfg, "Patient")
+    val rows = docs.select("body", "_date").collect().map(r => (r.getString(0), r.getString(1)))
+    val fallbacks = Seq(
+      docs.filter(length(col("body")) > 10).groupBy().count() ->
+        Seq(Row(rows.count(_._1.length > 10).toLong)),
+      docs.where(col("_date") === "2024-02-02").groupBy().count() ->
+        Seq(Row(rows.count(_._2 == "2024-02-02").toLong)),
+      docs.groupBy("_date").count() ->
+        rows.groupBy(_._2).map { case (d, rs) => Row(d, rs.length.toLong) }.toSeq,
+      docs.agg(count(col("body"))) -> Seq(Row(rows.length.toLong)))
+    for ((df, want) <- fallbacks) {
+      assert(df.collect().toSeq.sortBy(_.toString) === want.sortBy(_.toString))
+      val scanned = plan(df)
+      assert(scanned.contains("BatchScan"), scanned)
+    }
+    assert(docs.filter(length(col("body")) > 10).count() === 7)
+    assert(docs.where(col("_date") === "2024-02-02").count() === 1)
   }
 
   test("a failed write throws the write-failure message; the other documents stay written") {

@@ -13,6 +13,8 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.serializer.KryoSerializer
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.text.TextPartitionReaderFactory
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
@@ -21,7 +23,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.{GraftCatalog, ManifestFileIndex}
 
 /** The two Hadoop-conf floors of a lakehouse statement stay cut:
-  *  - every conf the engine ships to tasks is [[LakeStorage.shippable]]
+  *  - every conf the engine ships to tasks (manifest and bronze scans
+  *    included) is [[LakeStorage.shippable]]
   *    (no per-key gzipped source arrays on the wire) and still carries
   *    exactly the session's key -> value pairs;
   *  - the footer harvest reads with the caller's conf and yields the same
@@ -109,6 +112,24 @@ class ShippedConfSpec extends AnyFunSuite {
     assert(pairs(scan.hadoopConf) ===
       pairs(spark.sessionState.newHadoopConfWithOptions(options.asCaseSensitiveMap.asScala.toMap)))
     assert(scan.hadoopConf.get("fs.graft.probe.key") === "per-read")
+  }
+
+  test("bronze document scans carry a shippable conf with newHadoopConfWithOptions' pairs") {
+    val root = "file://" + Files.createTempDirectory("graft_ship_bronze_").toString
+    val cfg = LakeConfig(root = root, retryDelayMs = 0L)
+    new DatalakePublishService(cfg).publishFhirR4(spark, "t1",
+      Seq(FhirEnvelope("Patient", "p1", """{"resourceType":"Patient","id":"p1"}""")))
+    val docs = LakeReader.readFhir(spark, cfg, "Patient").select("body")
+    val scans = docs.queryExecution.sparkPlan.collect { case b: BatchScanExec => b.scan }
+    assert(scans.size === 1, docs.queryExecution.sparkPlan.toString)
+    val factory = scans.head.toBatch.createReaderFactory() match {
+      case f: TextPartitionReaderFactory => f
+      case other => fail(s"expected a text reader factory, got $other")
+    }
+    val shipped = factory.broadcastedConf.value.value
+    assert(sourcesOnWire(shipped) === 0)
+    assert(pairs(shipped) === pairs(spark.sessionState.newHadoopConfWithOptions(Map("wholetext" -> "true"))))
+    assert(docs.collect().map(_.getString(0)).toSeq === Seq("""{"resourceType":"Patient","id":"p1"}"""))
   }
 
   test("the keyedlog / procedure task conf is shippable and carries the session pairs") {
