@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Alias, BasePredicate, BindReferences, Expression, Predicate, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.Project
-import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{BooleanType, StructType}
@@ -197,10 +196,11 @@ object Constraints {
     * (streaming epochs, DML task writers). Built on the DRIVER (needs the
     * parser/analyzer), shipped serialized; predicates codegen lazily in
     * each task. */
-  class RowChecker(checks: Seq[(Check, Expression)]) extends Serializable {
+  class RowChecker(checks: Seq[(Check, Expression)])
+      extends (InternalRow => Unit) with Serializable {
     @transient private lazy val preds: Seq[(Check, BasePredicate)] =
       checks.map { case (c, e) => (c, Predicate.create(e)) }
-    def check(row: InternalRow): Unit =
+    def apply(row: InternalRow): Unit =
       preds.foreach { case (c, p) =>
         if (!p.eval(row))
           throw new IllegalStateException(
@@ -228,14 +228,5 @@ object Constraints {
       seen += 1
     }
     false
-  }
-
-  /** Decorator enforcing checks in front of any row-level writer. */
-  class CheckedWriter(inner: DataWriter[InternalRow], checker: RowChecker)
-      extends DataWriter[InternalRow] {
-    override def write(row: InternalRow): Unit = { checker.check(row); inner.write(row) }
-    override def commit(): WriterCommitMessage = inner.commit()
-    override def abort(): Unit = inner.abort()
-    override def close(): Unit = inner.close()
   }
 }

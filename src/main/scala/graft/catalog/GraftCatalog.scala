@@ -1652,7 +1652,7 @@ object GraftCatalog {
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     // NOTE timestamps: manifest DATA files are written as INT64 micros
-    // (see ManifestTable.microsTimestampJobConf) — the deprecated INT96
+    // (see graft.core.ManifestPoolWriter.prepare) — the deprecated INT96
     // default carries no usable min/max statistics, which would silently
     // blind data skipping and days()/hours() partition pruning. The
     // session default is left untouched so non-catalog writes keep their

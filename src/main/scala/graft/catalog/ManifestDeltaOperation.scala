@@ -3,7 +3,6 @@ package graft.catalog
 import java.util.UUID
 
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -11,13 +10,12 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{Filter, In}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.{DeletionVectors, LakeStorage, ManifestTable}
+import graft.core.{DeletionVectors, LakeStorage, ManifestPoolWriter, ManifestTable, PoolFileCommit}
 
 /** MERGE-ON-READ row-level DML (`'graft.dml.mode' = 'merge-on-read'`
   * tables): instead of rewriting every file that holds an affected row
@@ -256,13 +254,8 @@ class ManifestDeltaWrite(op: ManifestDeltaOperation, dir: String,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     val spark = SparkSession.active
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val owf = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, writeSchema)
-    // task-side writers read the timestamp type from the JOB conf —
-    // stamping it here forces INT64 MICROS without touching session state
-    graft.core.ManifestTable.microsTimestampJobConf(job.getConfiguration)
-    GraftCatalog.bloomWriteOptions(op.bloomColumns).foreach { case (k, v) =>
-      job.getConfiguration.set(k, v) }
+    val (owf, conf) = ManifestPoolWriter.prepare(spark, writeSchema,
+      GraftCatalog.bloomWriteOptions(op.bloomColumns))
     // CHECK constraints bind to the INSERT row shape (writeSchema): a
     // merge-on-read DML's freshly-inserted and updated rows re-validate.
     // A delete-only plan has an EMPTY write schema (it only vectors
@@ -272,8 +265,7 @@ class ManifestDeltaWrite(op: ManifestDeltaOperation, dir: String,
       else Constraints.rowChecker(spark, writeSchema, op.checkList)
     ManifestDeltaWriterFactory(owf, dir, s"$dir/$insertPool", insertPool,
       dvPool, writeSchema, rowIdSchema,
-      op.snapshotState.dvs.map { case (f, ref) => f -> ref.path },
-      LakeStorage.taskConf(job.getConfiguration), checker)
+      op.snapshotState.dvs.map { case (f, ref) => f -> ref.path }, conf, checker)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -341,7 +333,7 @@ class ManifestDeltaTaskWriter(f: ManifestDeltaWriterFactory,
 
   private val deletes =
     scala.collection.mutable.Map.empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-  private var insertWriter: graft.catalog.ManifestPoolWriter = _
+  private var insertWriter: ManifestPoolWriter = _
 
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
     val rel = id.getUTF8String(fileOrd).toString
@@ -351,10 +343,9 @@ class ManifestDeltaTaskWriter(f: ManifestDeltaWriterFactory,
   }
 
   override def insert(row: InternalRow): Unit = {
-    f.checker.foreach(_.check(row))
     if (insertWriter == null)
       insertWriter = new ManifestPoolWriter(f.owf, f.insertPoolPath,
-        f.writeSchema, f.conf, partitionId, taskId)
+        f.writeSchema, f.conf, partitionId, taskId, f.checker)
     insertWriter.write(row)
   }
 

@@ -3,25 +3,21 @@ package graft.catalog
 import java.util.UUID
 
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsRuntimeFiltering}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-import org.apache.spark.sql.execution.datasources.{FilePartition, OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.{Filter, In}
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.{LakeStorage, ManifestTable}
+import graft.core.{ManifestPoolWriter, ManifestPoolWriterFactory, ManifestTable, PoolFileCommit}
 
 /** Group-based row-level DML (SQL `DELETE FROM` / `UPDATE` / `MERGE INTO`)
   * over a [[graft.core.ManifestTable]] — the copy-on-write model of
@@ -40,7 +36,7 @@ import graft.core.{LakeStorage, ManifestTable}
   *    to AFFECTED FILES ONLY — an UPDATE touching one file of a 100 TB
   *    table scans-and-rewrites that one file, not the table.
   *  - '''Write''': a DSv2 [[BatchWrite]] whose tasks stream rows through
-  *    Spark's own parquet [[OutputWriterFactory]] into a fresh
+  *    the engine's [[graft.core.ManifestPoolWriter]] into a fresh
   *    uncommitted pool; the job commit is one
   *    [[ManifestTable.commitRewrite]] — current manifest minus the
   *    scanned (affected) files plus the rewritten ones, with optimistic
@@ -948,18 +944,12 @@ class ManifestReplaceWrite(op: ManifestRowLevelOperation, dir: String,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val spark = SparkSession.active
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val owf = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
-    // task-side writers read the timestamp type from the JOB conf —
-    // stamping it here forces INT64 MICROS without touching session state
-    graft.core.ManifestTable.microsTimestampJobConf(job.getConfiguration)
-    GraftCatalog.bloomWriteOptions(op.bloomColumns).foreach { case (k, v) =>
-      job.getConfiguration.set(k, v) }
+    val (owf, conf) = ManifestPoolWriter.prepare(spark, schema,
+      GraftCatalog.bloomWriteOptions(op.bloomColumns))
     // CHECK constraints: every rewritten row (survivors + updated/merged)
     // re-validates in the task writer — the same contract Delta's
     // CheckInvariant enforces on CoW DML output
-    ManifestPoolWriterFactory(owf, s"$dir/$poolName", schema,
-      LakeStorage.taskConf(job.getConfiguration),
+    ManifestPoolWriterFactory(owf, s"$dir/$poolName", schema, conf,
       Constraints.rowChecker(spark, schema, op.checkList))
   }
 
@@ -979,63 +969,4 @@ class ManifestReplaceWrite(op: ManifestRowLevelOperation, dir: String,
     fs.delete(new Path(dir, poolName), true)
     ()
   }
-}
-
-case class PoolFileCommit(fileName: Option[String]) extends WriterCommitMessage
-
-case class ManifestPoolWriterFactory(owf: OutputWriterFactory, poolPath: String,
-                                     schema: StructType,
-                                     conf: SerializableConfiguration,
-                                     checker: Option[Constraints.RowChecker] = None)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val inner = new ManifestPoolWriter(owf, poolPath, schema, conf, partitionId, taskId)
-    checker.fold(inner: DataWriter[InternalRow])(
-      new Constraints.CheckedWriter(inner, _))
-  }
-}
-
-/** Opens the parquet writer lazily on the first row — empty partitions
-  * commit nothing. The task-unique file name means a retried task commits
-  * a different name and only the reported one enters the manifest. */
-class ManifestPoolWriter(owf: OutputWriterFactory, poolPath: String,
-                         schema: StructType, conf: SerializableConfiguration,
-                         partitionId: Int, taskId: Long)
-    extends DataWriter[InternalRow] {
-
-  private val name = f"part-$partitionId%05d-$taskId.parquet"
-  private var writer: OutputWriter = _
-  private var closed = false
-
-  private def ensureOpen(): OutputWriter = {
-    if (writer == null) {
-      val attempt = new TaskAttemptID(
-        new TaskID(new JobID("graft-rewrite", 0), TaskType.MAP, partitionId),
-        taskId.toInt)
-      writer = owf.newInstance(s"$poolPath/$name", schema,
-        new TaskAttemptContextImpl(conf.value, attempt))
-    }
-    writer
-  }
-
-  override def write(row: InternalRow): Unit = ensureOpen().write(row)
-
-  override def commit(): WriterCommitMessage = {
-    closeWriter()
-    PoolFileCommit(Option(writer).map(_ => name))
-  }
-
-  override def abort(): Unit = {
-    closeWriter()
-    if (writer != null) {
-      val p = new Path(s"$poolPath/$name")
-      LakeStorage.openFor(p, conf.value).delete(p, false)
-      ()
-    }
-  }
-
-  override def close(): Unit = closeWriter()
-
-  private def closeWriter(): Unit =
-    if (writer != null && !closed) { closed = true; writer.close() }
 }

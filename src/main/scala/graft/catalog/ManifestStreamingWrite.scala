@@ -1,18 +1,15 @@
 package graft.catalog
 
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.{LakeStorage, ManifestTable}
+import graft.core.{LakeStorage, ManifestPoolWriter, ManifestTable, PoolFileCommit}
 
 /** Structured-Streaming sink for manifest tables
   * (`df.writeStream.toTable("catalog.db.t")`): every micro-batch becomes
@@ -63,18 +60,12 @@ class ManifestStreamingWrite(dir: String, schema: StructType, queryId: String,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     val spark = SparkSession.active
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val owf = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
-    // task-side writers read the timestamp type from the JOB conf —
-    // stamping it here forces INT64 MICROS without touching session state
-    graft.core.ManifestTable.microsTimestampJobConf(job.getConfiguration)
-    GraftCatalog.bloomWriteOptions(bloomCols).foreach { case (k, v) =>
-      job.getConfiguration.set(k, v) }
+    val (owf, conf) = ManifestPoolWriter.prepare(spark, schema,
+      GraftCatalog.bloomWriteOptions(bloomCols))
     // CHECK constraints: bound on the driver (needs the analyzer), the
     // codegen'd predicates evaluate per row inside each epoch's task
     // writers — a violating micro-batch fails BEFORE its epoch commits
-    ManifestStreamingWriterFactory(owf, dir, queryId, schema,
-      LakeStorage.taskConf(job.getConfiguration),
+    ManifestStreamingWriterFactory(owf, dir, queryId, schema, conf,
       Constraints.rowChecker(spark, schema, checks),
       identity, identitySlab)
   }
@@ -131,11 +122,9 @@ case class ManifestStreamingWriterFactory(owf: OutputWriterFactory, dir: String,
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] = {
-    val inner = new ManifestStreamingPoolWriter(owf,
+    val checked = new ManifestStreamingPoolWriter(owf,
       s"$dir/${ManifestStreamingWrite.poolName(queryId, epochId)}",
-      schema, conf, partitionId, taskId)
-    val checked = checker.fold(inner: DataWriter[InternalRow])(
-      new Constraints.CheckedWriter(inner, _))
+      schema, conf, partitionId, taskId, checker)
     // identity fill wraps OUTSIDE the checks: a CHECK may reference the
     // identity column, so it must see the filled value
     if (identity.isEmpty) checked
@@ -221,49 +210,19 @@ class IdentityEpochFillWriter(inner: DataWriter[InternalRow],
   * partitions leave no file. */
 class ManifestStreamingPoolWriter(owf: OutputWriterFactory, poolPath: String,
     schema: StructType, conf: SerializableConfiguration,
-    partitionId: Int, taskId: Long) extends DataWriter[InternalRow] {
+    partitionId: Int, taskId: Long, checker: Option[InternalRow => Unit])
+    extends ManifestPoolWriter(owf, poolPath, schema, conf, partitionId, taskId, checker,
+      name = Some(f".tmp-part-$partitionId%05d-t$taskId.parquet")) {
 
-  private val finalName = f"part-$partitionId%05d.parquet"
-  private val tmpName = f".tmp-part-$partitionId%05d-t$taskId.parquet"
-  private var writer: OutputWriter = _
-  private var closed = false
-
-  private def ensureOpen(): OutputWriter = {
-    if (writer == null) {
-      val attempt = new TaskAttemptID(
-        new TaskID(new JobID("graft-stream", 0), TaskType.MAP, partitionId),
-        taskId.toInt)
-      writer = owf.newInstance(s"$poolPath/$tmpName", schema,
-        new TaskAttemptContextImpl(conf.value, attempt))
-    }
-    writer
+  override def commit(): WriterCommitMessage = super.commit() match {
+    case PoolFileCommit(Some(tmpName)) =>
+      val fs = LakeStorage.openFor(poolPath, conf.value)
+      val dest = new Path(poolPath, f"part-$partitionId%05d.parquet")
+      if (fs.exists(dest) && !fs.delete(dest, false))
+        throw new java.io.IOException(s"manifest stream: could not replace $dest")
+      if (!fs.rename(new Path(poolPath, tmpName), dest))
+        throw new java.io.IOException(s"manifest stream: rename failed for $tmpName")
+      PoolFileCommit(Some(dest.getName))
+    case nothing => nothing
   }
-
-  override def write(row: InternalRow): Unit = ensureOpen().write(row)
-
-  override def commit(): WriterCommitMessage = {
-    closeWriter()
-    if (writer == null) return PoolFileCommit(None)
-    val fs = LakeStorage.openFor(poolPath, conf.value)
-    val dest = new Path(poolPath, finalName)
-    if (fs.exists(dest) && !fs.delete(dest, false))
-      throw new java.io.IOException(s"manifest stream: could not replace $dest")
-    if (!fs.rename(new Path(poolPath, tmpName), dest))
-      throw new java.io.IOException(s"manifest stream: rename failed for $tmpName")
-    PoolFileCommit(Some(finalName))
-  }
-
-  override def abort(): Unit = {
-    closeWriter()
-    if (writer != null) {
-      val p = new Path(poolPath, tmpName)
-      LakeStorage.openFor(p, conf.value).delete(p, false)
-      ()
-    }
-  }
-
-  override def close(): Unit = closeWriter()
-
-  private def closeWriter(): Unit =
-    if (writer != null && !closed) { closed = true; writer.close() }
 }

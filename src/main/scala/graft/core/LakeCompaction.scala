@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Bronze compaction (the north-star's OPTIMIZE/rewrite-files action,
@@ -51,7 +51,9 @@ object LakeCompaction {
       if (clusterBy.isEmpty) df.coalesce(nOut)
       else df.repartitionByRange(nOut, clusterBy.map(col): _*)
         .sortWithinPartitions(clusterBy.map(col): _*)
-    rewritten.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    if (fs.exists(tmp) && !fs.delete(tmp, true))
+      throw new IllegalStateException(s"compaction: failed to clear stale $tmp")
+    ManifestPoolWriter.write(rewritten, tmp.toString)
     swapDirs(fs, path, tmp)
     val after = fs.listStatus(path).filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     (before.length.toLong, after.length.toLong)
@@ -109,9 +111,8 @@ object LakeCompaction {
     // back to the 3-column core
     val reader = spark.read.format("graft.sources.KeyedLogSource")
     declared.foreach(reader.schema)
-    reader.load(dir)
-      .write.format("graft.sources.KeyedLogSource")
-      .option("clusterByKey", "true").mode(SaveMode.Append).save(tmp.toString)
+    graft.sources.KeyedLogSource.append(reader.load(dir), tmp.toString,
+      Map("clusterByKey" -> "true"))
     // the rewrite's own commit journaled the compacted files as the tmp
     // dir's version 0 — drop that: the journal entry must continue the
     // TABLE's version line, which is carried over next

@@ -122,9 +122,11 @@ object LakeStorage {
     * same key -> value pairs and no per-key sources, which they never
     * read. Every conf the engine ships goes through here: the manifest
     * scan builder ([[graft.catalog.ManifestFileIndex.scanBuilder]]), the
-    * bronze-lake text scan of [[LakeReader.readFhir]], the manifest writer
-    * factories and the keyedlog plan nodes, the last two through
-    * [[taskConf]]. */
+    * bronze-lake text scan of [[LakeReader.readFhir]], every manifest
+    * data-file write ([[ManifestPoolWriter.prepare]]: batch pool writes
+    * such as INSERT, CTAS, compaction and [[ManifestTable.append]], DML
+    * and streaming epochs) and the keyedlog plan nodes, the last two
+    * through [[taskConf]]. */
   def shippable(conf: Configuration): Configuration = new ShippableConf(conf)
 
   private final class ShippableConf(conf: Configuration) extends Configuration(conf) {

@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** File-manifest-committed table versions: the transaction-log pattern at
   * the heart of Delta/Iceberg, on plain parquet (no table-format jars ship
@@ -9,7 +9,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Layout:
   * {{{
-  *   dir/d-<writeId>/part-*.parquet         data-file pools, one per write
+  *   dir/d-<writeId>/part-<partition>-<taskId>.parquet
+  *                                          data-file pools, one per write
   *   dir/_commit_00000000000000000001       commit marker (JSON, see below)
   *   dir/_commit_00000000000000000002
   *   dir/_ckpt_00000000000000000010         checkpoint: full file list at v10
@@ -31,8 +32,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * only until the nearest snapshot marker or checkpoint (≤ interval
   * markers), then replays deltas forward — never the whole history.
   *
-  * A version becomes visible through ONE atomic object creation
-  * (`create(overwrite = false)` of its marker), written only after every
+  * Each data file is written once, under its final task-unique name
+  * ([[ManifestPoolWriter]]): no `_temporary` directory, no rename, no
+  * `_SUCCESS` file. A version becomes visible through ONE atomic object
+  * creation (`create(overwrite = false)` of its marker), written only after every
   * data file it references is fully written — so a reader concurrent with
   * any writer sees either the old or the new version, never a missing or
   * half-written file. A crash before the marker leaves an invisible orphan
@@ -437,7 +440,7 @@ object ManifestTable {
     * when no LIVE file references that pool, so a micro-batch that
     * re-runs after a failure (same batchId, same re-derived rows) lands
     * as a no-op instead of duplicating. A crashed half-stage is safely
-    * overwritten (the pool write is SaveMode.Overwrite and an uncommitted
+    * replaced (the pool is cleared before the write, and an uncommitted
     * pool is invisible); losing the commit race to one's own earlier
     * attempt resolves to that attempt's version.
     *
@@ -458,6 +461,10 @@ object ManifestTable {
     def committedIn(v: Long): Boolean =
       state(dir, v).files.exists(_.startsWith(pool + "/"))
     currentVersion(dir).filter(committedIn).getOrElse {
+      // clear a crashed attempt's files: pool files are created, never
+      // overwritten, and task ids restart with each application, so a
+      // rerun after a driver crash can pick a crashed file's name
+      LakeStorage.openFor(dir).delete(new Path(dir, pool), true)
       val files = writePool(df, dir, pool)
       if (files.isEmpty) return currentVersion(dir).getOrElse(0L)
       val st = collectStats(dir, files, ndvCols)
@@ -497,8 +504,8 @@ object ManifestTable {
 
   /** Stage `df` BUCKET-CLUSTERED: rows are hash-repartitioned into
     * `numBuckets` by `keyCol` (Spark's murmur3 partitioning, so the shuffle
-    * partition index IS the bucket id, which parquet bakes into the
-    * `part-<index>-...` file names) into a pool named
+    * partition index IS the bucket id, which the pool writer bakes into
+    * the `part-<index>-<taskId>.parquet` file names) into a pool named
     * `d-bucketed-<numBuckets>-<uuid>`. A table whose every pool carries
     * the same bucket tag can be scanned with key-grouped (storage-
     * partitioned) splits — see the catalog's bucketed scan. */
@@ -519,7 +526,7 @@ object ManifestTable {
     }
 
   /** The bucket id a data file holds (its shuffle partition index, baked
-    * into the parquet task file name `part-<index>-...`). */
+    * into the task file name `part-<index>-...`). */
   def bucketOfFile(fileName: String): Option[Int] = {
     val m = BucketFilePattern.matcher(fileName)
     if (m.matches()) Some(m.group(1).toInt) else None
@@ -1600,92 +1607,13 @@ object ManifestTable {
     removed
   }
 
-  /** Write `df`'s files into a fresh uniquely-named pool directory and
-    * return their dir-relative paths. The pool is invisible until some
-    * manifest references it. */
+  /** Write `df`'s files into the pool directory `poolName` (a fresh
+    * uniquely-named one by default) and return their dir-relative paths.
+    * The pool is invisible until some manifest references it. */
   private def writePool(df: DataFrame, dir: String,
-      writeOptions: Map[String, String]): Seq[String] =
-    writePool(df, dir, DataDirPrefix + java.util.UUID.randomUUID().toString,
-      writeOptions)
-
-  /** Manifest data files write timestamps as INT64 MICROS, whatever the
-    * session default: the INT96 default carries no usable footer min/max,
-    * which would silently blind data skipping and days()/hours()
-    * partition pruning on every timestamp column.
-    *
-    * The key is applied WITHOUT touching the caller's session conf — a
-    * scoped set/restore on the shared session races with the user's own
-    * concurrent writes (they'd observe MICROS mid-window, and two
-    * overlapping wrapped writes clobber each other's restore). Parquet's
-    * write support reads the key from the JOB configuration task-side, so
-    * DSv2 writer factories stamp it there post-`prepareWrite`
-    * ([[microsTimestampJobConf]]); [[writePool]]'s `df.write` goes through
-    * a dedicated cloned session ([[microsWriterSession]]) whose own
-    * SQLConf carries the key permanently. */
-  private[graft] def microsTimestampJobConf(
-      conf: org.apache.hadoop.conf.Configuration): Unit =
-    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-
-  /** A cached `newSession()` clone that executes pool writes: shares the
-    * SparkContext (and global temp views) with the parent but owns its
-    * SQLConf, so forcing MICROS here never leaks into the parent's writes.
-    * The parent's runtime confs are re-synced on EVERY call (the caller's
-    * current AQE / shuffle-partition settings must govern the pool write;
-    * static confs skipped — they are context-global anyway), and sessions
-    * are cached PER THREAD so concurrent pool writes with divergent parent
-    * conf snapshots never clobber each other. */
-  // Per-thread bounded LRU keyed by the parent session: at most 2 clones
-  // per live thread, all dropped when the thread dies. (A global map keyed
-  // by (session, threadId) pinned every micro-batch / pool thread's clone —
-  // and stopped parent sessions — for the driver's whole lifetime; weak
-  // keys don't work here because a clone strongly references its parent
-  // through the inherited SessionState.)
-  private val writerSessions =
-    new ThreadLocal[java.util.LinkedHashMap[SparkSession, SparkSession]] {
-      override def initialValue() =
-        new java.util.LinkedHashMap[SparkSession, SparkSession](4, 0.75f, true) {
-          override protected def removeEldestEntry(
-              e: java.util.Map.Entry[SparkSession, SparkSession]): Boolean =
-            size() > 2
-        }
-    }
-  private def microsWriterSession(parent: SparkSession): SparkSession = {
-    val perThread = writerSessions.get()
-    var s = perThread.get(parent)
-    if (s == null) { s = parent.newSession(); perThread.put(parent, s); () }
-    parent.conf.getAll.foreach { case (k, v) =>
-      try { if (s.conf.getOption(k) != Some(v)) s.conf.set(k, v) }
-      catch { case _: Exception => () }
-    }
-    s.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    s
-  }
-
-  private def writePool(df: DataFrame, dir: String, poolName: String,
-      writeOptions: Map[String, String] = Map.empty): Seq[String] = {
-    val poolPath = s"$dir/$poolName"
-    val parent = df.sparkSession
-    val writer = microsWriterSession(parent)
-    // rebind the (already-analyzed) plan into the writer session via a
-    // uniquely-named global temp view — the only public cross-session
-    // plan hand-off; dropped immediately after the write
-    val view = "graft_pool_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    df.createOrReplaceGlobalTempView(view)
-    try {
-      val gdb = parent.conf.get("spark.sql.globalTempDatabase", "global_temp")
-      // per-write options ride into the job's hadoop conf (e.g. the
-      // parquet bloom-filter keys of declared index columns)
-      writer.table(s"$gdb.$view").write.options(writeOptions)
-        .mode(SaveMode.Overwrite).parquet(poolPath)
-    } finally {
-      parent.catalog.dropGlobalTempView(view); ()
-    }
-    val fs = LakeStorage.openFor(dir)
-    fs.listStatus(new Path(poolPath))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => s"$poolName/${s.getPath.getName}")
-      .toSeq.sorted
-  }
+      poolName: String = DataDirPrefix + java.util.UUID.randomUUID().toString,
+      writeOptions: Map[String, String] = Map.empty): Seq[String] =
+    ManifestPoolWriter.write(df, s"$dir/$poolName", writeOptions).map(n => s"$poolName/$n")
 
   // ---- commit protocol -------------------------------------------------
 

@@ -5,7 +5,9 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.AppendData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.NamedReference
@@ -14,6 +16,8 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftbridge.{DatasetBridge, SchemaBridge}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -53,7 +57,8 @@ import graft.core.LakeStorage
   *
   * Usage: `spark.read.format("graft.sources.KeyedLogSource").load(dir)` /
   * `df.write.format(...).mode("append").save(dir)` (class-name
-  * registration — no service-loader file needed).
+  * registration — no service-loader file needed); inside the engine,
+  * [[KeyedLogSource.append]].
   */
 class KeyedLogSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -88,6 +93,21 @@ object KeyedLogSource {
     Array(
       Expressions.sort(Expressions.identity("key"), SortDirection.ASCENDING),
       Expressions.sort(Expressions.identity("seq"), SortDirection.ASCENDING))
+  }
+
+  /** Append `df` to the keyed-log directory `dir` through the connector's
+    * batch write: the `AppendData` plan a DataFrameWriter `save(dir)` in
+    * append mode builds, with `options` as its write options. */
+  private[graft] def append(df: DataFrame, dir: String,
+                            options: Map[String, String] = Map.empty): Unit = {
+    val opts = options + ("path" -> dir)
+    val table = new KeyedLogSource().getTable(SchemaBridge.asNullable(df.schema),
+      Array.empty, opts.asJava)
+    val relation = DataSourceV2Relation.create(table, None, None,
+      new CaseInsensitiveStringMap(opts.asJava))
+    DatasetBridge.ofRows(df.sparkSession,
+      AppendData.byName(relation, df.queryExecution.analyzed, opts))
+    ()
   }
 
   /** Visible data files under `path` (hidden/_staging names excluded) —

@@ -23,3 +23,10 @@ object ExtensionsBridge {
   def optimizerRules(ext: SparkSessionExtensions, spark: SparkSession) =
     ext.buildOptimizerRules(spark)
 }
+
+/** `StructType.asNullable` is `private[spark]`: the all-nullable schema
+  * Spark's own file writes use. */
+object SchemaBridge {
+  def asNullable(schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    schema.asNullable
+}

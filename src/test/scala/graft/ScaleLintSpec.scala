@@ -28,6 +28,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * FileSystem is acquired through [[graft.core.LakeStorage.openFor]], the
   * one place that picks the conf (the session's on the driver), so no call
   * site opens a store with a conf missing `spark.hadoop.*` settings.
+  * And the engine writes data files only through
+  * [[graft.core.ManifestPoolWriter]]: no DataFrameWriter (with its
+  * rename-based output committer and full-session-conf tasks) in core,
+  * catalog, sources or operators, so a second write path cannot return.
   */
 class ScaleLintSpec extends AnyFunSuite {
 
@@ -216,5 +220,37 @@ class ScaleLintSpec extends AnyFunSuite {
           fsAcquisition.findFirstIn(code(src)).isDefined => f.getPath }
     assert(offenders.isEmpty,
       s"FileSystem acquisitions outside LakeStorage (use LakeStorage.openFor): ${offenders.mkString(", ")}")
+  }
+
+  /** `src` with its comments and string literals blanked out. */
+  private def codeOnly(src: String): String = literalOrComment.replaceAllIn(src, " ")
+
+  /** A DataFrameWriter in use: `SaveMode`, the writer types, a `.write.`
+    * chain (not `connector.write.`, a package), `writeTo`, or a writer's
+    * terminal `.save(`, `.saveAsTable(` or `.insertInto(`. A writer's
+    * `.parquet(` follows a `.write.` chain, or a held writer's type. */
+  private val dataFrameWrite =
+    """\bSaveMode\b|\bDataFrameWriter(?:V2)?\b|(?<!connector)\.write\s*\.|\.writeTo\s*\(|\.(?:save|saveAsTable|insertInto)\s*\(""".r
+
+  test("core, catalog, sources and operators write data files only through the pool writer") {
+    Seq("df.write.mode(SaveMode.Overwrite).parquet(p)",
+        "rows\n  .write\n  .format(\"graft.sources.KeyedLogSource\").save(tmp)",
+        "import org.apache.spark.sql.{DataFrame, SaveMode}", "df.write.options(o).parquet(pool)",
+        "val w: DataFrameWriter[Row] = df.write", "w.save(dir)", "df.writeTo(\"t\").append()")
+      .foreach(s => assert(dataFrameWrite.findFirstIn(codeOnly(s)).isDefined, s))
+    Seq("out.write(bytes)", "rows.foreach(writer.write)",
+        "import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}",
+        "org.apache.spark.sql.connector.write.RowLevelOperation.Command",
+        "spark.read.parquet(paths: _*)", "conf.set(\"spark.sql.parquet.fieldId.write.enabled\", \"true\")",
+        "// df.write.mode(SaveMode.Append).save(p)", "ManifestTable.writeToBranch(df, dir, b)",
+        "ManifestPoolWriter.write(df, pool, options)")
+      .foreach(s => assert(dataFrameWrite.findFirstIn(codeOnly(s)).isEmpty, s))
+    val scoped = Seq("core", "catalog", "sources", "operators").map(p => s"src/main/scala/graft/$p/")
+    val offenders = mainSources.collect {
+      case (f, src) if scoped.exists(f.getPath.startsWith) &&
+          dataFrameWrite.findFirstIn(codeOnly(src)).isDefined => f.getPath }
+    assert(mainSources.count(f => scoped.exists(f._1.getPath.startsWith)) > 40)
+    assert(offenders.isEmpty,
+      s"DataFrameWriter writes (stage through ManifestPoolWriter): ${offenders.mkString(", ")}")
   }
 }

@@ -620,4 +620,66 @@ class ManifestTableSpec extends AnyFunSuite {
       ManifestTable.appendIdempotent(batch, dir, "../escape")
     }
   }
+
+  test("an empty write reads back with 0 rows and its schema") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("v", StringType)))
+    // no partitions at all, and four partitions that are all empty
+    val noPartitions = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    assert(noPartitions.rdd.getNumPartitions === 0)
+    Seq(noPartitions, df(0)).foreach { empty =>
+      val dir = freshDir()
+      assert(ManifestTable.write(empty, dir) === 1L)
+      assert(ManifestTable.state(dir, 1L).files.size === 1,
+        "an empty write stages one file that carries the schema")
+      val back = ManifestTable.read(spark, dir)
+      assert(back.count() === 0L)
+      assert(back.schema.map(f => (f.name, f.dataType, f.nullable)) ===
+        schema.map(f => (f.name, f.dataType, true)))
+    }
+  }
+
+  test("a pool write stages as many files as df.write does: repartition(12), empty partition 0") {
+    // one row in each of partitions 1..11: partition 0 still writes a file
+    val sparse = spark.range(0, 12, 1, 12).filter("id > 0").toDF()
+    Seq(df(100, 12), sparse).foreach { data =>
+      val plain = freshDir() + "/plain"
+      data.write.parquet(plain)
+      val expected = new java.io.File(plain.stripPrefix("file://")).list()
+        .count(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      val dir = freshDir()
+      ManifestTable.write(data, dir)
+      assert(ManifestTable.state(dir, 1L).files.size === expected)
+    }
+    Seq(df(100, 12), sparse).foreach { data =>
+      val dir = freshDir()
+      ManifestTable.write(data, dir)
+      assert(ManifestTable.state(dir, 1L).files.size === 12)
+    }
+  }
+
+  test("appendIdempotent clears a crashed attempt's tag pool: one landing, none of its files") {
+    import spark.implicits._
+    val dir = freshDir()
+    ManifestTable.write(df(10), dir)                              // v1
+    // a crashed attempt left readable parquet and a _SUCCESS marker in
+    // the tag's pool; committing any of it would add 7 duplicate rows
+    val pool = new java.io.File(dir.stripPrefix("file://"), "d-tag-crash")
+    df(7, 2).write.parquet(pool.toString)
+    val crashed = pool.list().toSet
+    assert(crashed.exists(_.endsWith(".parquet")))
+    val batch = (100 to 104).map(i => (i.toLong, s"b$i")).toDF("id", "v")
+    val v = ManifestTable.appendIdempotent(batch, dir, "crash")
+    assert(v === 2L)
+    assert(ManifestTable.read(spark, dir).count() === 15L)
+    val committed = ManifestTable.state(dir, v).files.filter(_.startsWith("d-tag-crash/"))
+    assert(committed.nonEmpty)
+    assert(committed.map(_.stripPrefix("d-tag-crash/")).toSet.intersect(crashed).isEmpty)
+    assert(pool.list().toSet.intersect(crashed).isEmpty, "the crashed files were cleared")
+    // the rerun resolves to the landed version and writes nothing
+    assert(ManifestTable.appendIdempotent(batch, dir, "crash") === v)
+    assert(ManifestTable.read(spark, dir).count() === 15L)
+  }
 }

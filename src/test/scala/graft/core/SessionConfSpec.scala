@@ -9,8 +9,11 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.catalog.GraftCatalog
+
 /** A local store under the scheme `graftprobe`, known only to the
-  * session's Hadoop conf, that counts its `listStatus` calls. */
+  * session's Hadoop conf, that counts its `listStatus` calls and the
+  * renames that touch a manifest data pool. */
 class GraftProbeFileSystem extends ForkFreeRawLocalFileSystem {
   override def getUri: URI = GraftProbeFileSystem.uri
   override def getScheme: String = "graftprobe"
@@ -18,11 +21,20 @@ class GraftProbeFileSystem extends ForkFreeRawLocalFileSystem {
     GraftProbeFileSystem.listings.incrementAndGet()
     super.listStatus(f)
   }
+  override def rename(src: Path, dst: Path): Boolean = {
+    if (GraftProbeFileSystem.inPool(src) || GraftProbeFileSystem.inPool(dst))
+      GraftProbeFileSystem.poolRenames.incrementAndGet()
+    super.rename(src, dst)
+  }
 }
 
 object GraftProbeFileSystem {
   val uri: URI = URI.create("graftprobe:///")
   val listings = new AtomicInteger()
+  val poolRenames = new AtomicInteger()
+
+  /** Whether `p` lies in a manifest data pool (a `d-*` directory). */
+  def inPool(p: Path): Boolean = p.toUri.getPath.split('/').exists(_.startsWith("d-"))
 }
 
 /** [[LakeStorage.openFor]] opens driver-side metadata I/O with the
@@ -88,5 +100,34 @@ class SessionConfSpec extends AnyFunSuite {
     assert(LakeReader.readFhir(spark, cfg, "Patient", Some("t1")).count() === 40)
     // the tenant directory and its two date directories
     assert(GraftProbeFileSystem.listings.get === 3)
+  }
+
+  test("pool writes rename nothing and leave only part files: append, INSERT, CTAS, compact") {
+    val s = spark
+    import s.implicits._
+    val root = probeRoot()
+    GraftCatalog.register(spark, "gprobe", root)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gprobe.db")
+    spark.sql("CREATE TABLE gprobe.db.t (k BIGINT, s STRING) USING manifest")
+    GraftProbeFileSystem.poolRenames.set(0)
+    ManifestTable.append(Seq((1L, "a"), (2L, "b")).toDF("k", "s").repartition(2), root + "/plain")
+    spark.sql("INSERT INTO gprobe.db.t SELECT id, concat('v', id) FROM range(0, 100, 1, 4)")
+    spark.sql("CREATE TABLE gprobe.db.c USING manifest AS SELECT id FROM range(10)")
+    spark.sql("CALL gprobe.system.compact('db.t')")
+    assert(GraftProbeFileSystem.poolRenames.get === 0, "renames under a d-* pool")
+    assert(spark.table("gprobe.db.t").count() === 100L)
+    def pools(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.filter(_.isDirectory).flatMap { f =>
+        if (f.getName.startsWith("d-")) Seq(f) else pools(f) }
+    val local = new java.io.File(URI.create(root).getPath)
+    val all = pools(local)
+    // the append's pool, the CTAS pool, and the INSERT's and compact's pools of t
+    assert(all.map(_.getParentFile.getName).groupBy(identity).map { case (k, v) => k -> v.size } ===
+      Map("plain" -> 1, "c" -> 1, "t" -> 2), all.mkString(", "))
+    all.foreach { pool =>
+      val names = pool.list().toSeq
+      assert(names.nonEmpty && names.forall(_.matches("""\.?part-\d{5}-\d+\.parquet(\.crc)?""")),
+        s"$pool: ${names.mkString(", ")}")
+    }
   }
 }

@@ -132,6 +132,24 @@ class ShippedConfSpec extends AnyFunSuite {
     assert(docs.collect().map(_.getString(0)).toSeq === Seq("""{"resourceType":"Patient","id":"p1"}"""))
   }
 
+  test("pool writes ship a shippable job conf with MICROS timestamps and the bloom keys") {
+    val bloom = "parquet.bloom.filter.enabled#k"
+    val key = "spark.sql.parquet.outputTimestampType"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "INT96")
+    val factory =
+      try ManifestPoolWriter.batchFactory(spark, "file:///unused/d-probe",
+        StructType(Seq(StructField("k", IntegerType))), Map(bloom -> "true"))
+      finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val shipped = factory.conf.value
+    assert(sourcesOnWire(shipped) === 0)
+    assert(shipped.get(key) === "TIMESTAMP_MICROS")
+    assert(shipped.get(bloom) === "true")
+    assert(factory.schemaFile, "batch writes stage a schema file for partition 0")
+    val (_, readBack) = javaRoundTrip(factory.conf)
+    assert(pairs(readBack) === pairs(shipped))
+  }
+
   test("the keyedlog / procedure task conf is shippable and carries the session pairs") {
     val conf = LakeStorage.taskConf().value
     assert(sourcesOnWire(conf) === 0)
