@@ -14,9 +14,22 @@ i with seed --seed + i on both sides.
 
 For every metric of the result lines it prints both medians, both sides'
 interquartile ranges and in how many pairs the change was better, by the
-metric's direction in BENCHMARK.json. Every result line is appended to
-<work>/results.jsonl. To measure uncommitted work, stage it with `git add`
-and pass `--change $(git stash create)`.
+metric's direction in BENCHMARK.json. Each end-to-end metric also gets a
+verdict against its bound in BENCHMARK.json:
+
+    gain          the change won at least 9 in 10 pairs (ties count for
+                  neither) and the medians differ, in the change's favour,
+                  by more than the base's interquartile range;
+    worse         the change's median is worse than the base's by more
+                  than the bound (a fraction of the base's median);
+    unresolved    either side's interquartile range, as a fraction of its
+                  median, is wider than the bound, and not every change
+                  run is better than every base run;
+    within bound  anything else.
+
+Every result line is appended to <work>/results.jsonl. To measure
+uncommitted work, stage it with `git add` and pass
+`--change $(git stash create)`.
 """
 import argparse
 import json
@@ -61,10 +74,13 @@ def run(d, workload, seed, seconds, trace):
     return json.loads(lines[-1])
 
 
-def directions():
+def spec():
+    """BENCHMARK.json's metrics: ({name: better}, {end-to-end name: bound})."""
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-        spec = json.load(fh)
-    return {m["name"]: m["better"] for m in spec.get("end_to_end", []) + spec.get("per_layer", [])}
+        s = json.load(fh)
+    e2e = s.get("end_to_end", [])
+    return ({m["name"]: m["better"] for m in e2e + s.get("per_layer", [])},
+            {m["name"]: m["bound"] for m in e2e})
 
 
 def main():
@@ -96,26 +112,46 @@ def main():
                                      "seed": seed, "seconds": a.seconds, "trace": a.trace,
                                      "result": r}) + "\n")
         print(f"[ab] pair {i + 1}/{a.pairs} (seed {seed}) done", file=sys.stderr, flush=True)
-    report(results, directions(), a)
+    report(results, *spec(), a)
 
 
-def report(results, better, a):
+def report(results, better, bounds, a):
     base, change = results["base"], results["change"]
     print(f"workload={a.workload} pairs={a.pairs} seeds={a.seed}..{a.seed + a.pairs - 1} "
           f"seconds={a.seconds} trace={a.trace}")
     print(f"failed runs: base {sum(r['failed'] > 0 for r in base)}, "
           f"change {sum(r['failed'] > 0 for r in change)}")
     print(f"{'metric':48} {'base':>12} {'change':>12} {'delta':>8} {'base IQR':>10} "
-          f"{'change IQR':>10} {'wins':>6}")
+          f"{'change IQR':>10} {'wins':>6}  verdict")
     for m in sorted(base[0]["metrics"]):
         b = [r["metrics"][m]["value"] for r in base]
         c = [r["metrics"][m]["value"] for r in change]
         mb, mc = statistics.median(b), statistics.median(c)
         way = better.get(m)
-        wins = "-" if way is None else str(sum(
-            (y < x) if way == "lower" else (y > x) for x, y in zip(b, c)))
+        wins = "-" if way is None else str(sum(improved(x, y, way) for x, y in zip(b, c)))
         delta = f"{(mc - mb) / mb:+.1%}" if mb else "-"
-        print(f"{m:48} {mb:12.4g} {mc:12.4g} {delta:>8} {iqr(b):10.4g} {iqr(c):10.4g} {wins:>6}")
+        v = verdict(b, c, way, bounds[m]) if m in bounds and way else ""
+        print(f"{m:48} {mb:12.4g} {mc:12.4g} {delta:>8} {iqr(b):10.4g} {iqr(c):10.4g} {wins:>6}  {v}")
+
+
+def verdict(b, c, way, bound):
+    """The end-to-end verdict on base runs `b` and change runs `c` (paired by
+    index) for a metric whose better direction is `way`, with its bound."""
+    sign = 1 if way == "higher" else -1
+    mb, mc = statistics.median(b), statistics.median(c)
+    if sum(improved(x, y, way) for x, y in zip(b, c)) >= 0.9 * len(b) and sign * (mc - mb) > iqr(b):
+        return "gain"
+    if mb and sign * (mb - mc) / abs(mb) > bound:
+        return "worse"
+    spread = max(iqr(xs) / abs(med) if med else 0.0 for xs, med in ((b, mb), (c, mc)))
+    if spread > bound and not all(improved(x, y, way) for x in b for y in c):
+        return "unresolved"
+    return "within bound"
+
+
+def improved(x, y, way):
+    """Whether the change's value `y` is better than the base's `x`."""
+    return y < x if way == "lower" else y > x
 
 
 def iqr(xs):

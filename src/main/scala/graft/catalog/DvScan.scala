@@ -1,10 +1,12 @@
 package graft.catalog
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.execution.datasources.{FilePartition, FileFormat}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
+import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetPartitionReaderFactory, ParquetScan}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -54,11 +56,13 @@ object DvRead {
   // long-lived executor scanning MANY tables from accumulating forever
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
 
-  private[catalog] def positions(dir: String, dvPath: String): Array[Long] = {
+  /** The positions of the vector at `dvPath`, read with `conf` (the conf
+    * the caller's plan shipped) on a cache miss. */
+  private[catalog] def positions(dir: String, dvPath: String, conf: Configuration): Array[Long] = {
     val key = s"$dir $dvPath"
     val hit = cache.get(key)
     if (hit != null) return hit
-    val loaded = DeletionVectors.read(LakeStorage.openFor(dir), dir, dvPath)
+    val loaded = DeletionVectors.read(LakeStorage.openFor(new Path(dir), conf), dir, dvPath)
     if (cache.size > 64) cache.clear()
     cache.put(key, loaded)
     loaded
@@ -195,6 +199,13 @@ case class RowAddressReaderFactory(inner: PartitionReaderFactory, dir: String,
 
   private val posOrdinal = innerSchema.fieldIndex(DvRead.RowIndexCol)
 
+  // vectors are read with the conf the parquet scan already broadcasts
+  // to its readers, never with an executor's default conf
+  private def conf: Configuration = inner match {
+    case p: ParquetPartitionReaderFactory => p.broadcastedConf.value.value
+    case other => throw new IllegalStateException(s"expected a parquet reader factory, got $other")
+  }
+
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[RowAddressPartition]
     val reader = inner.createReader(p.inner)
@@ -202,15 +213,15 @@ case class RowAddressReaderFactory(inner: PartitionReaderFactory, dir: String,
     // drop mode (live reads) keeps the reject set — both sorted arrays
     val (accept: Option[Array[Long]], deleted: Array[Long]) = p.keepOnly match {
       case Some(keep) =>
-        val kept = DvRead.positions(dir, keep)
-        val excl = p.keepExclude.map(DvRead.positions(dir, _))
+        val kept = DvRead.positions(dir, keep, conf)
+        val excl = p.keepExclude.map(DvRead.positions(dir, _, conf))
           .getOrElse(Array.emptyLongArray)
         val acc =
           if (excl.isEmpty) kept
           else kept.filter(java.util.Arrays.binarySearch(excl, _) < 0)
         (Some(acc), Array.emptyLongArray)
       case None =>
-        (None, p.drop.map(DvRead.positions(dir, _)).getOrElse(Array.emptyLongArray))
+        (None, p.drop.map(DvRead.positions(dir, _, conf)).getOrElse(Array.emptyLongArray))
     }
     // zero-copy facade hiding the row-index column when _pos is not asked
     val projected: Option[ProjectingInternalRow] =

@@ -360,11 +360,12 @@ class ManifestDeltaTaskWriter(f: ManifestDeltaWriterFactory,
     val insertMsg = Option(insertWriter).map(_.commit()).collect {
       case PoolFileCommit(Some(name)) => name
     }
-    val fs = LakeStorage.openFor(f.dir)
+    val conf = f.conf.value
+    val fs = LakeStorage.openFor(new Path(f.dir), conf)
     val dvs = deletes.iterator.map { case (rel, buf) =>
       val fresh = buf.toArray.sorted.distinct
       val merged = f.existingDvs.get(rel) match {
-        case Some(prev) => DeletionVectors.merge(DvRead.positions(f.dir, prev), fresh)
+        case Some(prev) => DeletionVectors.merge(DvRead.positions(f.dir, prev, conf), fresh)
         case None       => fresh
       }
       val safeName = rel.replace('/', '_')

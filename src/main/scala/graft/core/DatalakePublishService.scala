@@ -4,21 +4,24 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.time.format.DateTimeFormatter
 import java.time.{LocalDate, LocalDateTime}
 import java.util.UUID
+import java.util.concurrent.{Callable, ExecutionException, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.Try
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Bronze-layer publish surface (ref: DatalakePublishService.kt), re-expressed
-  * as distributed Spark writes with the exact-filename document sink
+  * over a Hadoop FileSystem with the exact-filename document sink
   * (SURVEY.md §2 Part B "Exact-name document write").
   *
-  * Scale design: both batch publishes build their (path, body) pairs on the
-  * driver and hand them to one write path, [[writeAll]]: the pairs are
-  * sliced (capped at `publishPoolMax`, mirroring the reference's
-  * min(10, n)-thread pool, ref :125-146), each slice opens ONE FileSystem
-  * handle for all of its writes (the reference's dedicated-client-per-batch
-  * amortization, ref :63,104), and the per-slice outcomes come back in the
-  * same job — one Spark job per batch, no shuffle, no encoder.
+  * Both batch publishes build their (path, body) pairs on the driver and
+  * hand them to one write path, [[writeAll]], which writes them from the
+  * driver the way the reference's client does: one FileSystem handle per
+  * batch (the reference's dedicated client per batch, ref :63,104) and a
+  * bounded pool of min(`publishPoolMax`, n) concurrent writers (the
+  * reference's min(10, n)-thread pool, ref :125-146). No Spark job runs.
   *
   * Error contract preserved exactly, including ordering (SURVEY.md §7.4):
   *  1. any write failed       -> IllegalStateException("One or more writes to datalake failed")
@@ -31,8 +34,7 @@ class DatalakePublishService(
     cfg: LakeConfig,
     clock: () => LocalDate = () => LocalDate.now(),
     timeClock: () => LocalDateTime = () => LocalDateTime.now(),
-    newTransactionId: () => String = () => UUID.randomUUID().toString)
-    extends Serializable {
+    newTransactionId: () => String = () => UUID.randomUUID().toString) {
 
   import DatalakePublishService._
 
@@ -58,23 +60,28 @@ class DatalakePublishService(
     if (!writeAll(spark, binaries.map { case (id, body) => LakePath.binaryPath(tenantId, id) -> body }))
       throw new IllegalStateException(writeFailureMessage)
 
-  /** Writes each (lake-relative path, body) pair as one object in a single
-    * Spark job; true when every write succeeded. Every document is written
-    * even after another fails. No documents: no job, true. */
+  /** Writes each (lake-relative path, body) pair as one object; true when
+    * every write succeeded. The pairs are cut into min(`publishPoolMax`, n)
+    * contiguous slices written at once, one by the calling thread and the
+    * rest by [[Writers]], all through one handle opened with the session's
+    * Hadoop conf (its `spark.hadoop.*` settings reach every put). Every
+    * document is written even after another fails. A store error other
+    * than an `IOException` (which [[LakeStorage.put]] turns into false)
+    * reaches the caller as itself, once every slice has finished. No
+    * documents: no storage interaction, true. */
   private def writeAll(spark: SparkSession, docs: Seq[(String, String)]): Boolean =
     docs.isEmpty || {
-      val root = cfg.root
-      val retryMs = cfg.retryDelayMs
-      spark.sparkContext.parallelize(docs, math.min(cfg.publishPoolMax, docs.size))
-        .mapPartitions { iter =>
-          val fs = LakeStorage.openFor(root)
-          // put first: a failure must not skip the writes that follow it
-          Iterator.single(iter.foldLeft(true) { case (ok, (rel, body)) =>
-            LakeStorage.put(fs, new Path(root, rel), body.getBytes(UTF_8), retryMs) && ok
-          })
+      val root = new Path(cfg.root)
+      val fs = LakeStorage.openFor(root, spark.sparkContext.hadoopConfiguration)
+      val all = docs.toIndexedSeq
+      val n = math.min(cfg.publishPoolMax, all.size)
+      Writers.run(n) { slice =>
+        // put first: a failure must not skip the writes that follow it
+        all.slice(slice * all.size / n, (slice + 1) * all.size / n).foldLeft(true) {
+          case (ok, (rel, body)) =>
+            LakeStorage.put(fs, new Path(root, rel), body.getBytes(UTF_8), cfg.retryDelayMs) && ok
         }
-        .collect()
-        .forall(identity)
+      }
     }
 
   /** Wrap a raw API response and publish it as a single object at
@@ -102,17 +109,59 @@ object DatalakePublishService {
   val rawFailureMessage = "Raw data publication failed"
 
   /** RawDataWrapper JSON shape: {"url":...,"time":...,"body":...}
-    * (ref :182-188,198). */
+    * (ref :182-188,198), built in one pass over the three strings. */
   def rawJson(w: RawDataWrapper): String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
+    val out = new java.lang.StringBuilder(w.url.length + w.time.length + w.body.length + 32)
+    def esc(s: String): Unit = {
+      var i = 0
+      while (i < s.length) {
+        s.charAt(i) match {
+          case '"' => out.append("\\\"")
+          case '\\' => out.append("\\\\")
+          case '\n' => out.append("\\n")
+          case '\r' => out.append("\\r")
+          case '\t' => out.append("\\t")
+          case c if c < ' ' => out.append(f"\\u${c.toInt}%04x")
+          case c => out.append(c)
+        }
+        i += 1
+      }
     }
-    s"""{"url":"${esc(w.url)}","time":"${esc(w.time)}","body":"${esc(w.body)}"}"""
+    out.append("{\"url\":\"")
+    esc(w.url)
+    out.append("\",\"time\":\"")
+    esc(w.time)
+    out.append("\",\"body\":\"")
+    esc(w.body)
+    out.append("\"}").toString
+  }
+
+  /** The daemon threads that write a batch's slices beside its calling
+    * thread, shared by every batch. The pool holds at most as many
+    * threads as the widest batch has asked for (`publishPoolMax` - 1);
+    * a thread idle for a minute exits. */
+  private object Writers {
+    private val pool = {
+      val made = new AtomicInteger()
+      val p = new ThreadPoolExecutor(0, Int.MaxValue, 60L, TimeUnit.SECONDS,
+        new LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
+          val t = new Thread(r, s"graft-publish-${made.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        })
+      p.allowCoreThreadTimeOut(true)
+      p
+    }
+
+    /** `slice(0)` on the calling thread and `slice(1)` .. `slice(n - 1)` on
+      * the pool; true when all of them returned true. Waits for every
+      * slice, then throws the first slice's exception, if any, unwrapped. */
+    def run(n: Int)(slice: Int => Boolean): Boolean = {
+      pool.synchronized { if (pool.getCorePoolSize < n - 1) pool.setCorePoolSize(n - 1) }
+      val others = (1 until n).map(i => pool.submit(new Callable[Boolean] { def call(): Boolean = slice(i) }))
+      val outcomes = Try(slice(0)) +: others.map(f =>
+        Try(try f.get() catch { case e: ExecutionException => throw e.getCause }))
+      outcomes.map(_.get).forall(identity)
+    }
   }
 }

@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.io.{Text, WritableUtils}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 
@@ -13,9 +14,10 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Replaces the reference's OCI client (ref: OCIClient.kt): `file://` for
   * local runs; s3a/abfs/gcs connectors on a cluster via the same API. All
-  * operations are point operations on exact paths on the driver; the
-  * distributed write path in [[DatalakePublishService]] opens one handle
-  * per slice through [[LakeStorage.openFor]], mirroring the reference's
+  * operations are point operations on exact paths on the driver; the batch
+  * publishes of [[DatalakePublishService]] open one handle per batch
+  * through [[LakeStorage.openFor]] and share it between the bounded pool of
+  * threads that write the batch, mirroring the reference's
   * one-dedicated-client-per-batch amortization
   * (ref: DatalakePublishService.kt:63,104).
   *
@@ -100,9 +102,13 @@ object LakeStorage {
   /** The Hadoop conf of the active (else the default) usable session, or
     * [[sharedHadoopConf]]. The session's own instance, which carries the
     * `spark.hadoop.*` settings, not a `newHadoopConf()` copy of ~1,100 keys
-    * per acquisition. A local-mode task sees the driver's conf. */
+    * per acquisition. Inside a task it is always [[sharedHadoopConf]],
+    * even in local mode where the driver's session is at hand: on a
+    * cluster executor no session exists, so task code must pass the conf
+    * its plan shipped, and a local run shows where it does not. */
   private def defaultConf: Configuration =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    if (TaskContext.get != null) sharedHadoopConf
+    else SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .fold(sharedHadoopConf)(_.sparkContext.hadoopConfiguration)
 
   /** A copy of `conf` that is cheap to ship to tasks.
@@ -151,7 +157,7 @@ object LakeStorage {
     new SerializableConfiguration(shippable(conf))
 
   /** Write `data` to `p`, replacing any object there; true on success.
-    * Shared by driver-side puts and executor-side foreachPartition writers. */
+    * Shared by single-object puts and the batch publishes' writer threads. */
   def put(fs: FileSystem, p: Path, data: Array[Byte], retryDelayMs: Long): Boolean = {
     def attempt(): Boolean = {
       val out = fs.create(p, true)

@@ -5,6 +5,8 @@ import java.nio.file.Files
 import java.time.{LocalDate, LocalDateTime}
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, input_file_name, length}
 import org.scalatest.funsuite.AnyFunSuite
@@ -285,12 +287,12 @@ class LakeRoundtripSpec extends AnyFunSuite {
   /** Spark jobs `body` launches. */
   private def jobsOf(body: => Unit): Int = SparkJobs.counted(spark)(body)._2
 
-  test("one Spark job per publish batch; none without ids") {
+  test("publish batches run no Spark job, with or without ids") {
     val (root, cfg) = freshLake()
     val svc = new DatalakePublishService(cfg, clock = jan3_1990)
     val docs = (1 to 8).map(i => FhirEnvelope("Patient", s"p$i", s"""{"id":"p$i"}"""))
-    assert(jobsOf(svc.publishFhirR4(spark, "t1", docs)) === 1)
-    assert(jobsOf(svc.publishBinaryData(spark, "t1", Seq("b1" -> "{}", "b2" -> "{}", "b3" -> "{}"))) === 1)
+    assert(jobsOf(svc.publishFhirR4(spark, "t1", docs)) === 0)
+    assert(jobsOf(svc.publishBinaryData(spark, "t1", Seq("b1" -> "{}", "b2" -> "{}", "b3" -> "{}"))) === 0)
     val storage = new LakeStorage(root, new Configuration())
     assert(storage.listRecursive().size === 11)
     val noIds = Seq(FhirEnvelope("Patient", "", "{}"), FhirEnvelope("Patient", null, "{}"))
@@ -408,6 +410,73 @@ class LakeRoundtripSpec extends AnyFunSuite {
       Seq(Some("{}"), Some("{}")))
   }
 
+  test("a failed write in a middle slice fails the batch; every other document lands") {
+    val (root, cfg) = freshLake()
+    val storage = new LakeStorage(root, new Configuration())
+    // 25 documents in 10 slices: document 12 opens the sixth slice (12-14),
+    // and a directory at its path fails that write alone
+    val ids = (0 until 25).map(i => f"b$i%02d")
+    assert(storage.put(s"ehr/Binary/fhir_tenant_id=t/${ids(12)}.json/blocker", "x"))
+    val e = intercept[IllegalStateException] {
+      new DatalakePublishService(cfg.copy(publishPoolMax = 10))
+        .publishBinaryData(spark, "t", ids.map(id => id -> s"""{"id":"$id"}"""))
+    }
+    assert(e.getMessage === DatalakePublishService.writeFailureMessage)
+    assert(ids.filter(_ != ids(12)).map(id => storage.get(s"ehr/Binary/fhir_tenant_id=t/$id.json")) ===
+      ids.filter(_ != ids(12)).map(id => Some(s"""{"id":"$id"}""")))
+  }
+
+  test("the publish writer threads stay within publishPoolMax over many batches") {
+    val (_, cfg) = freshLake()
+    val svc = new DatalakePublishService(cfg, clock = jan3_1990)
+    for (b <- 1 to 50)
+      svc.publishBinaryData(spark, "t", (1 to 25).map(i => s"b$b-$i" -> "{}"))
+    val live = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .count(t => t.isAlive && t.getName.startsWith("graft-publish-"))
+    assert(live > 0 && live <= cfg.publishPoolMax, s"$live publish threads")
+  }
+
+  test("a store error that is no IOException reaches the caller unwrapped") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftboom.impl", classOf[BoomFileSystem].getName)
+    conf.set("fs.graftboom.impl.disable.cache", "true")
+    val dir = Files.createTempDirectory("graft_spec_").toString
+    val cfg = LakeConfig(root = "graftboom://" + dir, retryDelayMs = 0L, publishPoolMax = 3)
+    // "boom" is alone in the second of three slices, written off the calling thread
+    val e = intercept[RuntimeException] {
+      new DatalakePublishService(cfg).publishBinaryData(spark, "t", Seq("a", "boom", "c").map(_ -> "{}"))
+    }
+    assert(e.getClass === classOf[RuntimeException] && e.getMessage === "boom.json", e.toString)
+    val storage = new LakeStorage("file://" + dir, new Configuration())
+    assert(storage.listRecursive().sorted === Seq("a", "c").map(id => s"ehr/Binary/fhir_tenant_id=t/$id.json"))
+  }
+
+  test("rawJson escapes exactly as the character-by-character reference") {
+    def reference(w: RawDataWrapper): String = {
+      def esc(s: String) = s.flatMap {
+        case '"' => "\\\""
+        case '\\' => "\\\\"
+        case '\n' => "\\n"
+        case '\r' => "\\r"
+        case '\t' => "\\t"
+        case c if c < ' ' => f"\\u${c.toInt}%04x"
+        case c => c.toString
+      }
+      s"""{"url":"${esc(w.url)}","time":"${esc(w.time)}","body":"${esc(w.body)}"}"""
+    }
+    val every = (0 until 0x80).map(_.toChar).mkString + "\u00e9\u2028" + new String(Character.toChars(0x1F600))
+    val cases = Seq(
+      RawDataWrapper("https://h/x?a=\"b\"", "2024-01-01T00:00:00", every),
+      RawDataWrapper(every, every.take(40), ""),
+      RawDataWrapper("", "", "MSH|^~\\&|\r\nPID|\u0001\u001f\u007f"))
+    for (w <- cases) {
+      val got = DatalakePublishService.rawJson(w)
+      assert(got.getBytes("UTF-8").toSeq === reference(w).getBytes("UTF-8").toSeq)
+    }
+    assert(DatalakePublishService.rawJson(RawDataWrapper("\u0001", "\"", "\\")) ===
+      "{\"url\":\"\\u0001\",\"time\":\"\\\"\",\"body\":\"\\\\\"}")
+  }
+
   test("resource types lowercase the same under a Turkish default locale") {
     val (_, cfg) = freshLake()
     val saved = java.util.Locale.getDefault
@@ -420,4 +489,15 @@ class LakeRoundtripSpec extends AnyFunSuite {
         Seq("""{"resourceType":"Immunization","id":"i1","tenant":"t","day":1}"""))
     } finally java.util.Locale.setDefault(saved)
   }
+}
+
+/** A local store under the scheme `graftboom` whose creates of a file
+  * named `boom.json` fail with a plain `RuntimeException`. */
+class BoomFileSystem extends ForkFreeRawLocalFileSystem {
+  override def getUri: URI = URI.create("graftboom:///")
+  override def getScheme: String = "graftboom"
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream =
+    if (f.getName == "boom.json") throw new RuntimeException(f.getName)
+    else super.create(f, overwrite, bufferSize, replication, blockSize, progress)
 }

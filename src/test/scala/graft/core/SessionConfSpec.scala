@@ -102,6 +102,26 @@ class SessionConfSpec extends AnyFunSuite {
     assert(GraftProbeFileSystem.listings.get === 3)
   }
 
+  test("merge-on-read UPDATE, DELETE and reads open the store with the conf their plan shipped") {
+    val root = probeRoot()
+    GraftCatalog.register(spark, "gmor", root)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gmor.db")
+    spark.sql("CREATE TABLE gmor.db.t (k BIGINT, s STRING) USING manifest " +
+      "TBLPROPERTIES ('graft.dml.mode' = 'merge-on-read')")
+    spark.sql("INSERT INTO gmor.db.t SELECT id, concat('v', id) FROM range(0, 10, 1, 2)")
+    // the UPDATE writes the first file's vector; the DELETE reads it back
+    // in its scan and merges it with new positions in its task writer
+    spark.sql("UPDATE gmor.db.t SET s = 'u' WHERE k < 3")
+    spark.sql("DELETE FROM gmor.db.t WHERE k = 4 OR k = 9")
+    def files(d: java.io.File): Seq[java.io.File] = Option(d.listFiles()).toSeq.flatten.flatMap(f =>
+      if (f.isDirectory) files(f) else Seq(f))
+    assert(files(new java.io.File(URI.create(root).getPath)).exists(_.getName.endsWith(".dv")),
+      "no deletion vector written")
+    val rows = spark.table("gmor.db.t").collect().map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1)
+    assert(rows.toSeq === Seq(0L -> "u", 1L -> "u", 2L -> "u", 3L -> "v3", 5L -> "v5",
+      6L -> "v6", 7L -> "v7", 8L -> "v8"))
+  }
+
   test("pool writes rename nothing and leave only part files: append, INSERT, CTAS, compact") {
     val s = spark
     import s.implicits._
