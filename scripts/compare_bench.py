@@ -2,9 +2,19 @@
 """Compare two self-bench artifacts per query (min-vs-min).
 
 Usage: compare_bench.py OLD.json NEW.json [topN]
+
+Each gate's wall-time ratio is also printed normalised by the median ratio
+of the control gates (CONTROLS), which a change to the engine's operators
+or formats leaves alone: on a host whose speed drifts, a normalised ratio
+near 1 means the gate moved with the host. When both artifacts carry
+`queries_counters` (the job census per gate), the jobs, tasks and
+task-second deltas ride along.
 """
 import json
+import statistics
 import sys
+
+CONTROLS = ("qh01", "qh02", "qm01", "q05", "q15", "q29")
 
 
 def load(p):
@@ -30,6 +40,34 @@ def main():
     print("--- biggest regressions ---")
     for k, o, n, d in rows[-10:]:
         print(f"{d:+7.2f}  {o:7.2f} -> {n:7.2f}  {k}")
+
+    controls = [n / o for k, o, n, d in rows if k.split("_")[0] in CONTROLS]
+    co, cn = old.get("queries_counters"), new.get("queries_counters")
+    base = statistics.median(controls) if controls else 1.0
+    print(f"--- per gate: ratio normalised by the control median {base:.3f}"
+          f" ({len(controls)} of {len(CONTROLS)} control gates) ---")
+    counted = co is not None and cn is not None
+    head = "  d_jobs  d_tasks  d_task_s" if counted else ""
+    print(f"   norm   ratio{head}  gate")
+    for k, o, n, d in sorted(rows, key=lambda r: r[2] / r[1]):
+        line = f"{n / o / base:7.3f} {n / o:7.3f}"
+        if counted:
+            a, b = co.get(k), cn.get(k)
+            if a and b:
+                line += (f" {b['jobs'] - a['jobs']:+7d} {b['tasks'] - a['tasks']:+8d}"
+                         f" {b['task_s'] - a['task_s']:+9.3f}")
+            else:
+                line += f" {'-':>7} {'-':>8} {'-':>9}"
+        print(f"{line}  {k}")
+    if counted:
+        both = sorted(set(co) & set(cn))
+        moved = [k for k in both
+                 if any(co[k][f] != cn[k][f] for f in ("jobs", "stages", "tasks"))]
+        print(f"--- counters: {len(both)} gates in both, jobs/stages/tasks differ in"
+              f" {len(moved)} ---")
+        for f in ("jobs", "stages", "tasks", "task_s"):
+            print(f"total {f}: {sum(co[k][f] for k in both):.6g} ->"
+                  f" {sum(cn[k][f] for k in both):.6g}")
 
 
 if __name__ == "__main__":

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.JobCensus
+
 /** Driver-run benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -22,6 +24,11 @@ import org.apache.spark.sql.SparkSession
   *  - recorded rounds dropped 3 -> 2 (SPARK_GRAFT_ROUNDS overrides): with
   *    222+ gates the 4-pass suite no longer fits the driver budget
   *    (r13 green at 3098 s / 213 gates; r14 killed mid final pass).
+  *
+  * Each gate's Spark jobs, stages, tasks, task seconds, job wall time and
+  * per-label jobs ([[graft.core.JobCensus]]) ride along as
+  * `queries_counters`, read between gates so the clock never waits on
+  * the listener bus.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -65,6 +72,12 @@ object Bench {
       }
     }
 
+    def countersJson(c: JobCensus.Counts): String =
+      s"""{"jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},""" +
+        s""""task_s":${c.taskMs / 1e3},"job_ms":${c.jobMs},""" +
+        c.labels.toSeq.sorted.map { case (l, n) => "\"" + l + "\":" + n }
+          .mkString("\"labels\":{", ",", "}}")
+
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       // Force FULL evaluation of the executed plan. A plain .count() lets
@@ -77,11 +90,11 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // SPARK_GRAFT_FILTER: optional name-substring filter for local iteration
-    // (the driver leaves it unset and benches everything)
-    val nameFilter = sys.env.getOrElse("SPARK_GRAFT_FILTER", "")
+    // SPARK_GRAFT_FILTER: optional comma-separated name substrings for
+    // local iteration; unset benches every gate
+    val wanted = sys.env.getOrElse("SPARK_GRAFT_FILTER", "").split(",")
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(_._1.contains(nameFilter))
+      .filter { case (name, _) => wanted.exists(name.contains) }
     // Recorded rounds are INTERLEAVED: the whole suite runs once as warmup
     // (JIT + codegen + file-index warm, unrecorded), then `rounds` full
     // recorded passes, keeping each query's minimum. Interleaving separates
@@ -103,6 +116,9 @@ object Bench {
     val failed = scala.collection.mutable.Set.empty[String]
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     val warmups = scala.collection.mutable.Map.empty[String, Double]
+    // each gate's job census in its latest completed round (warmup until
+    // a recorded round lands)
+    val counters = scala.collection.mutable.Map.empty[String, JobCensus.Counts]
     @volatile var roundsDone = -1
 
     def emitJson(partial: Boolean): String = lock.synchronized {
@@ -161,8 +177,11 @@ object Bench {
           }.mkString("[", ",", "]")
           "\"" + name + "\":" + items
         }.mkString("{", ",", "}")
+      val queriesCounters = selected.collect { case (k, _) if counters.contains(k) =>
+        "\"" + k + "\":" + countersJson(counters(k)) }.mkString("{", ",", "}")
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(times)},""" +
         s""""queries_min":${obj(mins)},"queries_median":${obj(medians)},""" +
+        s""""queries_counters":$queriesCounters,""" +
         s""""stream_batches":$streamBatches,"sf":"$sfDir","env":$env}"""
     }
 
@@ -180,32 +199,29 @@ object Bench {
       }
     Runtime.getRuntime.addShutdownHook(new Thread(() => emit(partial = true)))
 
+    // the job census is read between gates, after the listener bus has
+    // delivered every event, so the timed action itself is unchanged
+    val census = JobCensus.of(spark.sparkContext)
+    def settled(): JobCensus.Counts = { JobCensus.drain(spark.sparkContext); census.counts }
     for (round <- 0 to rounds) {
       for ((name, fn) <- selected if !failed(name)) {
+        val before = settled()
         try {
           val t = once(fn)
+          val c = settled() - before
           lock.synchronized {
+            counters(name) = c
             if (round > 0) samples(name) = t :: samples.getOrElse(name, Nil)
             else warmups(name) = t
           }
           // per-measurement forensic trail: survives even SIGKILL
-          System.err.println(
-            s"""[bench-progress] {"name":"$name","round":$round,"sec":${math.rint(t * 1000) / 1000}}""")
+          System.err.println(s"""[bench-progress] {"name":"$name","round":$round,""" +
+            s""""sec":${math.rint(t * 1000) / 1000},"counters":${countersJson(c)}}""")
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed (round $round): ${e.getMessage}")
           lock.synchronized { failed += name }
         }
-        // post-condition: no gate may leave a streaming query running — a
-        // leaked stream would burn budget under every later measurement and
-        // tear down noisily at exit (the r14 forensics alternative this
-        // guard permanently rules out). StreamingQueryManager is
-        // per-session, so the tracked isolated sessions are swept too.
-        (spark +: graft.queries.QueryModule.trackedSessions).foreach { sess =>
-          sess.streams.active.foreach { q =>
-            System.err.println(s"[bench] WARNING: $name leaked active stream ${q.name}; stopping it")
-            try q.stop() catch { case _: Throwable => () }
-          }
-        }
+        graft.queries.QueryModule.stopLeakedStreams(spark, "bench", name)
       }
       roundsDone = round
     }

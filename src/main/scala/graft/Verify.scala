@@ -26,16 +26,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // post-condition: no gate may leave a streaming query running (the
-      // Bench loop carries the same guard — see r14 forensics in STATE.md);
-      // isolated gate sessions have their own StreamingQueryManager, so
-      // sweep the tracked ones too
-      (spark +: graft.queries.QueryModule.trackedSessions).foreach { sess =>
-        sess.streams.active.foreach { q =>
-          System.err.println(s"[verify] WARNING: $name leaked active stream ${q.name}; stopping it")
-          try q.stop() catch { case _: Throwable => () }
-        }
-      }
+      graft.queries.QueryModule.stopLeakedStreams(spark, "verify", name)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

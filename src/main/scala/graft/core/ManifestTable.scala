@@ -465,7 +465,9 @@ object ManifestTable {
       // overwritten, and task ids restart with each application, so a
       // rerun after a driver crash can pick a crashed file's name
       LakeStorage.openFor(dir).delete(new Path(dir, pool), true)
-      val files = writePool(df, dir, pool)
+      val files = JobCensus.labeled(df.sparkSession, "core.manifest.append_idempotent") {
+        writePool(df, dir, pool)
+      }
       if (files.isEmpty) return currentVersion(dir).getOrElse(0L)
       val st = collectStats(dir, files, ndvCols)
       try commitLoop(dir) { base =>

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.JobCensus
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -538,6 +539,7 @@ object Dedup {
                               n: Int, threshold: Double,
                               numBands: Int = 16, rowsPerBand: Int = 4): (DataFrame, DataFrame) = {
     val numHashes = numBands * rowsPerBand
+    val spark = batch.sparkSession
     def jaccardOf(inter: Column, n1: Column, n2: Column): Column =
       inter.cast("double") / (n1 + n2 - inter)
     val arr = shingleArrays(batch, idCol, textCol, n).persist()
@@ -558,66 +560,72 @@ object Dedup {
         .persist()
       try {
         // --- intra-batch near-dup drop (minhashLshPairs verify algebra) ---
-        val intraCand = bands.as("x").join(bands.as("y"),
-            col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-          .distinct().persist()
-        val dupIds = try {
-          val candDocs = intraCand.select(col("d1").as("doc_id"))
-            .union(intraCand.select(col("d2")))
-          val candArr = arr.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-          val candSh = candArr.select(col("doc_id"), explode(col("_shs")).as("s"))
-          val sizes = candArr.select(col("doc_id"),
-            size(col("_shs")).cast("long").as("n_sh"))
-          val inter = candSh.as("a").join(candSh.as("b"),
-              col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-            .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-            .agg(count(lit(1)).as("inter"))
-          intraCand.join(inter, Seq("d1", "d2"))
-            .join(sizes.as("s1"), col("d1") === col("s1.doc_id"))
-            .join(sizes.as("s2"), col("d2") === col("s2.doc_id"))
-            .filter(jaccardOf(col("inter"), col("s1.n_sh"), col("s2.n_sh")) >= threshold)
-            .select(col("d2").as("doc_id")).distinct().localCheckpoint()
-        } finally intraCand.unpersist()
+        val dupIds = JobCensus.labeled(spark, "operators.dedup.intra_drop") {
+          val intraCand = bands.as("x").join(bands.as("y"),
+              col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
+                col("x.doc_id") < col("y.doc_id"))
+            .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
+            .distinct().persist()
+          try {
+            val candDocs = intraCand.select(col("d1").as("doc_id"))
+              .union(intraCand.select(col("d2")))
+            val candArr = arr.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
+            val candSh = candArr.select(col("doc_id"), explode(col("_shs")).as("s"))
+            val sizes = candArr.select(col("doc_id"),
+              size(col("_shs")).cast("long").as("n_sh"))
+            val inter = candSh.as("a").join(candSh.as("b"),
+                col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
+              .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+              .agg(count(lit(1)).as("inter"))
+            intraCand.join(inter, Seq("d1", "d2"))
+              .join(sizes.as("s1"), col("d1") === col("s1.doc_id"))
+              .join(sizes.as("s2"), col("d2") === col("s2.doc_id"))
+              .filter(jaccardOf(col("inter"), col("s1.n_sh"), col("s2.n_sh")) >= threshold)
+              .select(col("d2").as("doc_id")).distinct().localCheckpoint()
+          } finally intraCand.unpersist()
+        }
         // --- stored-index decontamination of the survivors (the
         //     minhashLshPairsAgainstIndex algebra; the delta's bands are
         //     the batch's bands minus the intra dups) ---
-        val keptBands = bands.join(dupIds, Seq("doc_id"), "left_anti")
-        val crossCand = corpusIndex.as("x").join(keptBands.as("y"),
-            col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
-          .select(col("x.doc_id").as("corpus_id"), col("y.doc_id").as("delta_id"))
-          .distinct().persist()
-        val contaminated = try {
-          // corpus text is touched only for candidate docs; NOT persisted,
-          // so the explode stays inline (see the shingleArrays hazard note)
-          val corpusCandDocs = corpus.join(
-            broadcast(crossCand.select(col("corpus_id").as(idCol))),
-            Seq(idCol), "left_semi")
-          val candCo = shingleSet(corpusCandDocs, idCol, textCol, n)
-          val sizesCo = candCo.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-          val candDeArr = arr.join(
-            broadcast(crossCand.select(col("delta_id").as("doc_id"))),
-            Seq("doc_id"), "left_semi")
-          val candDe = candDeArr.select(col("doc_id"), explode(col("_shs")).as("s"))
-          val sizesDe = candDeArr.select(col("doc_id"),
-            size(col("_shs")).cast("long").as("n_sh"))
-          val inter = candCo.as("a").join(candDe.as("b"), col("a.s") === col("b.s"))
-            .groupBy(col("a.doc_id").as("corpus_id"), col("b.doc_id").as("delta_id"))
-            .agg(count(lit(1)).as("inter"))
-          crossCand.join(inter, Seq("corpus_id", "delta_id"))
-            .join(sizesCo.as("s1"), col("corpus_id") === col("s1.doc_id"))
-            .join(sizesDe.as("s2"), col("delta_id") === col("s2.doc_id"))
-            .filter(jaccardOf(col("inter"), col("s1.n_sh"), col("s2.n_sh")) >= threshold)
-            .select(col("delta_id").as("doc_id")).distinct().localCheckpoint()
-        } finally crossCand.unpersist()
+        val contaminated = JobCensus.labeled(spark, "operators.dedup.index_probe") {
+          val keptBands = bands.join(dupIds, Seq("doc_id"), "left_anti")
+          val crossCand = corpusIndex.as("x").join(keptBands.as("y"),
+              col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
+            .select(col("x.doc_id").as("corpus_id"), col("y.doc_id").as("delta_id"))
+            .distinct().persist()
+          try {
+            // corpus text is touched only for candidate docs; NOT persisted,
+            // so the explode stays inline (see the shingleArrays hazard note)
+            val corpusCandDocs = corpus.join(
+              broadcast(crossCand.select(col("corpus_id").as(idCol))),
+              Seq(idCol), "left_semi")
+            val candCo = shingleSet(corpusCandDocs, idCol, textCol, n)
+            val sizesCo = candCo.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+            val candDeArr = arr.join(
+              broadcast(crossCand.select(col("delta_id").as("doc_id"))),
+              Seq("doc_id"), "left_semi")
+            val candDe = candDeArr.select(col("doc_id"), explode(col("_shs")).as("s"))
+            val sizesDe = candDeArr.select(col("doc_id"),
+              size(col("_shs")).cast("long").as("n_sh"))
+            val inter = candCo.as("a").join(candDe.as("b"), col("a.s") === col("b.s"))
+              .groupBy(col("a.doc_id").as("corpus_id"), col("b.doc_id").as("delta_id"))
+              .agg(count(lit(1)).as("inter"))
+            crossCand.join(inter, Seq("corpus_id", "delta_id"))
+              .join(sizesCo.as("s1"), col("corpus_id") === col("s1.doc_id"))
+              .join(sizesDe.as("s2"), col("delta_id") === col("s2.doc_id"))
+              .filter(jaccardOf(col("inter"), col("s1.n_sh"), col("s2.n_sh")) >= threshold)
+              .select(col("delta_id").as("doc_id")).distinct().localCheckpoint()
+          } finally crossCand.unpersist()
+        }
         // --- survivors + their index rows, straight off the cached bands ---
-        val rejected = dupIds.unionByName(contaminated).localCheckpoint()
-        val accepted = batch.join(rejected.select(col("doc_id").as(idCol)),
-          Seq(idCol), "left_anti").localCheckpoint()
-        val indexRows = bands.join(rejected, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        (accepted, indexRows)
+        JobCensus.labeled(spark, "operators.dedup.accept_rows") {
+          val rejected = dupIds.unionByName(contaminated).localCheckpoint()
+          val accepted = batch.join(rejected.select(col("doc_id").as(idCol)),
+            Seq(idCol), "left_anti").localCheckpoint()
+          val indexRows = bands.join(rejected, Seq("doc_id"), "left_anti")
+            .localCheckpoint()
+          (accepted, indexRows)
+        }
       } finally bands.unpersist()
     } finally arr.unpersist()
   }

@@ -40,8 +40,8 @@ object QueryModule {
     s
   }
 
-  /** Every live isolated session (for the harness guards). */
-  def trackedSessions: Seq[SparkSession] = {
+  /** Every live isolated session. */
+  private def trackedSessions: Seq[SparkSession] = {
     val it = tracked.iterator()
     val out = scala.collection.mutable.ArrayBuffer.empty[SparkSession]
     while (it.hasNext) {
@@ -51,4 +51,17 @@ object QueryModule {
     }
     out.toSeq
   }
+
+  /** The harnesses' post-gate guard: stops, with a `[tag]` warning, every
+    * streaming query `gate` left running on `spark` or on a tracked
+    * isolated session (`StreamingQueryManager` is per-session). A leaked
+    * stream would burn budget under every later measurement and tear down
+    * noisily at exit (the r14 bench forensics in STATE.md). */
+  def stopLeakedStreams(spark: SparkSession, tag: String, gate: String): Unit =
+    (spark +: trackedSessions).foreach { sess =>
+      sess.streams.active.foreach { q =>
+        System.err.println(s"[$tag] WARNING: $gate leaked active stream ${q.name}; stopping it")
+        try q.stop() catch { case _: Throwable => () }
+      }
+    }
 }

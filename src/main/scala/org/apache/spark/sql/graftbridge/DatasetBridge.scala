@@ -30,3 +30,10 @@ object SchemaBridge {
   def asNullable(schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
     schema.asNullable
 }
+
+/** `SparkContext.listenerBus` is `private[spark]`: waiting for it to
+  * deliver every posted event lets a listener's counts be read without
+  * sleeping. */
+object ListenerBusBridge {
+  def waitUntilEmpty(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

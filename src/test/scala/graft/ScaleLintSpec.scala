@@ -32,6 +32,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.core.ManifestPoolWriter]]: no DataFrameWriter (with its
   * rename-based output committer and full-session-conf tasks) in core,
   * catalog, sources or operators, so a second write path cannot return.
+  * The engine's jobs are counted by one listener,
+  * [[graft.core.JobCensus]], and sessions are built only by the mains
+  * that own one (`Bench`, `Verify`, `ScaleReplicate`, `tools/MetaScale`),
+  * so ad hoc probe mains with copied builders and listeners stay gone.
   */
 class ScaleLintSpec extends AnyFunSuite {
 
@@ -252,5 +256,40 @@ class ScaleLintSpec extends AnyFunSuite {
     assert(mainSources.count(f => scoped.exists(f._1.getPath.startsWith)) > 40)
     assert(offenders.isEmpty,
       s"DataFrameWriter writes (stage through ManifestPoolWriter): ${offenders.mkString(", ")}")
+  }
+
+  /** A Spark listener type or its registration. */
+  private val sparkListener = """\bSparkListener|\baddSparkListener\b""".r
+
+  test("src/main counts Spark jobs only through JobCensus") {
+    Seq("sc.addSparkListener(census)", "new SparkListener {",
+        "import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}",
+        "override def onTaskEnd(e: SparkListenerTaskEnd): Unit")
+      .foreach(s => assert(sparkListener.findFirstIn(code(s)).isDefined, s))
+    Seq("// registers a SparkListener", "/** [[SparkListener]] events */",
+        "JobCensus.of(spark.sparkContext)", "sc.listenerBus.waitUntilEmpty()")
+      .foreach(s => assert(sparkListener.findFirstIn(code(s)).isEmpty, s))
+    val offenders = mainSources.collect {
+      case (f, src) if f.getPath != "src/main/scala/graft/core/JobCensus.scala" &&
+          sparkListener.findFirstIn(code(src)).isDefined => f.getPath }
+    assert(offenders.isEmpty,
+      s"Spark listeners outside graft.core.JobCensus: ${offenders.mkString(", ")}")
+  }
+
+  private val sessionBuilder = """\bSparkSession\s*\.\s*builder\b""".r
+
+  test("src/main builds sessions only in the mains that own one") {
+    Seq("SparkSession.builder()", "org.apache.spark.sql.SparkSession.builder()\n  .master(m)",
+        "SparkSession\n  .builder()")
+      .foreach(s => assert(sessionBuilder.findFirstIn(code(s)).isDefined, s))
+    Seq("// SparkSession.builder()", "SparkSession.active", "SparkSession.getActiveSession",
+        "s0.newSession()", "/** a SparkSession. builder-free */")
+      .foreach(s => assert(sessionBuilder.findFirstIn(code(s)).isEmpty, s))
+    val owners = Set("Bench", "Verify", "ScaleReplicate", "tools/MetaScale")
+      .map(m => s"src/main/scala/graft/$m.scala")
+    val offenders = mainSources.collect {
+      case (f, src) if !owners(f.getPath) && sessionBuilder.findFirstIn(code(src)).isDefined => f.getPath }
+    assert(offenders.isEmpty,
+      s"SparkSession.builder outside Bench, Verify, ScaleReplicate, MetaScale: ${offenders.mkString(", ")}")
   }
 }

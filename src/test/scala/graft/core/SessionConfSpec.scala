@@ -122,6 +122,30 @@ class SessionConfSpec extends AnyFunSuite {
       6L -> "v6", 7L -> "v7", 8L -> "v8"))
   }
 
+  test("a keyedlog table inserts, reads a key and appends a streaming epoch through a session-only scheme") {
+    val s = spark
+    import s.implicits._
+    val root = probeRoot()
+    GraftCatalog.register(spark, "gklog", root)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gklog.db")
+    spark.sql("CREATE TABLE gklog.db.t (key STRING, seq BIGINT, metric BIGINT) USING keyedlog")
+    spark.sql("INSERT INTO gklog.db.t VALUES ('a', 1, 10), ('b', 2, 20), ('a', 3, 30)")
+    def keyA(): Seq[(Long, Long)] = spark.sql("SELECT seq, metric FROM gklog.db.t WHERE key = 'a'")
+      .as[(Long, Long)].collect().toSeq.sorted
+    assert(keyA() === Seq(1L -> 10L, 3L -> 30L))
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, Long)]
+    val q = source.toDF().toDF("key", "seq", "metric").writeStream
+      .option("checkpointLocation", Files.createTempDirectory("graft_probe_ck_").toString)
+      .toTable("gklog.db.t")
+    try {
+      source.addData(("a", 4L, 40L), ("c", 5L, 50L))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(keyA() === Seq(1L -> 10L, 3L -> 30L, 4L -> 40L))
+    assert(spark.table("gklog.db.t").count() === 5L)
+  }
+
   test("pool writes rename nothing and leave only part files: append, INSERT, CTAS, compact") {
     val s = spark
     import s.implicits._

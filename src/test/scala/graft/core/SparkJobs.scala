@@ -1,35 +1,17 @@
 package graft.core
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** The Spark jobs a piece of driver code launches. */
 object SparkJobs {
 
-  /** `body`'s result and the number of jobs it launched. A sentinel job
-    * runs afterwards: a listener sees events in order, so when the
-    * sentinel's start arrives every job of `body` has been counted. */
+  /** `body`'s result and the number of jobs it launched, counted by the
+    * engine's [[JobCensus]] under a label of this call's own. */
   def counted[T](spark: SparkSession)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"jobs-of-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group-sentinel" => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val result = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-sentinel", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      (result, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val census = JobCensus.of(spark.sparkContext)
+    val label = s"jobs-of-${System.nanoTime()}"
+    val result = JobCensus.labeled(spark, label)(body)
+    JobCensus.drain(spark.sparkContext)
+    (result, census.counts.labels.getOrElse(label, 0L).toInt)
   }
 }
