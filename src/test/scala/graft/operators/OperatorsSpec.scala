@@ -2,8 +2,9 @@ package graft.operators
 
 import java.sql.Timestamp
 
+import graft.core.{JobCensus, SparkJobs}
 import graft.queries.TextQueries
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -298,6 +299,51 @@ class OperatorsSpec extends AnyFunSuite {
     // and the index is read from its stored parquet files, not recomputed
     assert(scansFile(lazyPlan, "graft_lshidx_spec_"),
       "plan does not scan the stored index")
+  }
+
+  test("dedup operators: Spark jobs per call are pinned (sf0.001)") {
+    // Each call's jobs: its eager persist/localCheckpoint work plus one
+    // collect of the result. A count that falls updates its pin; a rise
+    // is a regression.
+    val docs = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+    val corpus = docs.filter(col("doc_id") % 5 =!= 4)
+    val delta = docs.filter(col("doc_id") % 5 === 4)
+    val idx = Dedup.lshIndex(corpus, "doc_id", "text", 3).localCheckpoint()
+    def jobs(call: => DataFrame): Int = SparkJobs.counted(spark)(call.collect())._2
+    val got = Seq(
+      "ngramJaccardPairs" -> jobs(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.8)),
+      "ngramJaccardPairs capped" -> jobs(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3,
+        0.8, maxShingleDocFreq = Some(50))),
+      "minhashLshPairs" -> jobs(Dedup.minhashLshPairs(docs, "doc_id", "text", 3, 0.8)),
+      "minhashLshPairsAgainst" -> jobs(Dedup.minhashLshPairsAgainst(corpus, delta,
+        "doc_id", "text", 3, 0.8)),
+      "minhashLshPairsAgainstIndex" -> jobs(Dedup.minhashLshPairsAgainstIndex(corpus, idx,
+        delta, "doc_id", "text", 3, 0.8)),
+      "acceptBatchAgainstIndex" -> {
+        // its phases run under their own operators.dedup.* labels
+        val census = JobCensus.of(spark.sparkContext)
+        JobCensus.drain(spark.sparkContext)
+        val before = census.counts
+        val own = SparkJobs.counted(spark) {
+          val (accepted, indexRows) = Dedup.acceptBatchAgainstIndex(corpus, idx, delta,
+            "doc_id", "text", 3, 0.8)
+          (accepted.collect(), indexRows.collect())
+        }._2
+        val phases = (census.counts - before).labels
+          .filter(_._1.startsWith("operators.dedup."))
+        own + phases.values.sum.toInt
+      },
+      "simhashPairs" -> jobs(Dedup.simhashPairs(docs, "doc_id", "text")),
+      "duplicatedSpanOffsets" -> jobs(Dedup.duplicatedSpanOffsets(docs, "doc_id", "text", 8)))
+    assert(got === Seq(
+      "ngramJaccardPairs" -> 11,
+      "ngramJaccardPairs capped" -> 16,
+      "minhashLshPairs" -> 26,
+      "minhashLshPairsAgainst" -> 23,
+      "minhashLshPairsAgainstIndex" -> 21,
+      "acceptBatchAgainstIndex" -> 57,
+      "simhashPairs" -> 6,
+      "duplicatedSpanOffsets" -> 8))
   }
 
   test("stop-shingle cap never invents pairs") {
