@@ -8,7 +8,8 @@ of the control gates (CONTROLS), which a change to the engine's operators
 or formats leaves alone: on a host whose speed drifts, a normalised ratio
 near 1 means the gate moved with the host. When both artifacts carry
 `queries_counters` (the job census per gate), the jobs, tasks and
-task-second deltas ride along.
+task-second deltas ride along, and the last line names every common gate
+whose job count rose; the script exits 1 if any did.
 """
 import json
 import statistics
@@ -68,7 +69,13 @@ def main():
         for f in ("jobs", "stages", "tasks", "task_s"):
             print(f"total {f}: {sum(co[k][f] for k in both):.6g} ->"
                   f" {sum(cn[k][f] for k in both):.6g}")
+        rose = [f"{k} {co[k]['jobs']}->{cn[k]['jobs']}" for k in both
+                if cn[k]["jobs"] > co[k]["jobs"]]
+        print(f"jobs rose in {len(rose)} of {len(both)} gates: {', '.join(rose) or 'none'}")
+        return 1 if rose else 0
+    print("jobs not compared: an artifact has no queries_counters")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -19,6 +19,17 @@ import org.apache.spark.sql.functions._
   *    the standard skew guard for this workload.
   *  - All hashing is Spark's codegen'd xxhash64/md5 — no UDFs, no
   *    per-row JVM allocation beyond the arrays themselves.
+  *  - The LSH/Jaccard family shares one signature kernel
+  *    ([[signatureBands]]) and one exact verify ([[verifyJaccard]]).
+  *
+  * Materialization: the pair and span operators persist the intermediates
+  * they consume more than once for the duration of the call, compute their
+  * (small) result eagerly via localCheckpoint, and release every cache
+  * before returning — no cached-block accumulation in a long-lived
+  * session (AQE materializes stages one at a time, so the first consumer
+  * fills a cache for the rest). The caveat: localCheckpoint blocks are
+  * executor-local and unreplicated, so on executor loss the truncated
+  * lineage cannot recompute them; rerun the operator.
   */
 object Dedup {
 
@@ -119,31 +130,24 @@ object Dedup {
     * it can be a large fraction of the shingle vocabulary).
     *
     * The n-gram occurrence table feeds BOTH the duplicate detection and
-    * the offset probe; with `materialize = true` (default) it is
-    * persisted for the duration of the call and the (much smaller,
-    * duplication-bounded) result is snapshotted via localCheckpoint
-    * before the cache is released — one explosion instead of two, the
-    * same scoped-persist contract (and executor-loss caveat) as
-    * [[ngramJaccardPairs]]. Pass false for a fully lazy, composable
-    * plan. */
+    * the offset probe: it is persisted for the duration of the call and
+    * the (much smaller, duplication-bounded) result is snapshotted via
+    * localCheckpoint before the cache is released — one explosion instead
+    * of two (see the materialization note on [[Dedup]]). */
   def duplicatedSpanOffsets(docs: DataFrame, idCol: String, textCol: String,
-                            n: Int, minDocs: Int = 2,
-                            materialize: Boolean = true): DataFrame = {
-    val occ0 = graft.core.Parallelism.fanOut(docs) // heavy n-gram explosion
+                            n: Int, minDocs: Int = 2): DataFrame = {
+    val occ = graft.core.Parallelism.fanOut(docs) // heavy n-gram explosion
       .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("_toks"))
       .where(size(col("_toks")) >= n)
       .select(col("doc_id"),
         posexplode(ngrams(col("_toks"), n)).as(Seq("start_token", "span")))
-    val occ = if (materialize) occ0.persist() else occ0
-    val dup = occ.groupBy("span")
-      .agg(countDistinct(col("doc_id")).as("n_docs"))
-      .where(col("n_docs") >= minDocs).select("span")
-    val out = occ.join(dup, Seq("span")).select("doc_id", "start_token", "span")
-    if (materialize) {
-      val snap = out.localCheckpoint()
-      occ.unpersist()
-      snap
-    } else out
+      .persist()
+    try {
+      val dup = occ.groupBy("span")
+        .agg(countDistinct(col("doc_id")).as("n_docs"))
+        .where(col("n_docs") >= minDocs).select("span")
+      occ.join(dup, Seq("span")).select("doc_id", "start_token", "span").localCheckpoint()
+    } finally occ.unpersist()
   }
 
   /** KEEP-FIRST removal over duplicated spans: every occurrence of a
@@ -196,175 +200,51 @@ object Dedup {
   /** Exact n-gram Jaccard similarity for every pair sharing >= 1 shingle.
     * jaccard = |A ∩ B| / (|A| + |B| - |A ∩ B|).
     *
-    * With `materialize = true` (default) the shingle table — consumed by
-    * three operators (sizes, both self-join sides), with interpreted HOF
-    * generation — is persisted for the duration of the call, the small
-    * above-threshold pair result is computed eagerly via localCheckpoint,
-    * and the cache is released before returning (no cached-block
-    * accumulation in a long-lived session; AQE materializes stages one at
-    * a time, so the first consumer fills the cache for the rest).
-    * Tradeoff: localCheckpoint blocks are executor-local and unreplicated —
-    * on executor loss the truncated lineage cannot recompute them; rerun
-    * the operator. Pass `materialize = false` for a fully lazy,
-    * lineage-complete, composable plan (shingles recomputed per consumer)
-    * and manage caching yourself — the right choice when writing the
-    * result straight to storage on a cluster. */
+    * The shingle table feeds three operators (sizes, both self-join
+    * sides) and is persisted for the call; the above-threshold pairs are
+    * localCheckpoint'ed (see the materialization note on [[Dedup]]). */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         n: Int, threshold: Double,
-                        maxShingleDocFreq: Option[Int] = None,
-                        materialize: Boolean = true): DataFrame = {
-    def result(sh: DataFrame, sizes: DataFrame): DataFrame = {
-      val pairs = sh.as("a").join(sh.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-        .agg(count(lit(1)).as("inter"))
-      pairs
-        .join(sizes.as("s1"), col("d1") === col("s1.doc_id"))
-        .join(sizes.as("s2"), col("d2") === col("s2.doc_id"))
-        .withColumn("jaccard",
-          col("inter").cast("double") / (col("s1.n_sh") + col("s2.n_sh") - col("inter")))
-        .filter(col("jaccard") >= threshold)
-        .select(col("d1"), col("d2"), round(col("jaccard"), 4).as("jaccard"))
-    }
-    maxShingleDocFreq match {
-      case Some(_) =>
-        // the doc-frequency cap filters EXPLODED rows, so set sizes must
-        // be counted post-filter — the one shape that still needs the
-        // groupBy count
-        val shPlan = shingleSet(docs, idCol, textCol, n, maxShingleDocFreq)
-        def sized(sh: DataFrame) =
-          result(sh, sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh")))
-        if (!materialize) sized(shPlan)
-        else {
-          val sh = shPlan.persist()
-          try sized(sh).localCheckpoint()
-          finally sh.unpersist()
-        }
-      case None if materialize =>
-        // set sizes are per-row array lengths — no counting aggregation
-        // (the un-persisted sizes subtree used to re-execute per
-        // reference: joined as s1 AND s2). Array explode is safe here
-        // BECAUSE the arrays are persisted first — see [[shingleArrays]].
-        val arr = shingleArrays(docs, idCol, textCol, n).persist()
-        try result(
-            arr.select(col("doc_id"), explode(col("_shs")).as("s")),
-            arr.select(col("doc_id"), size(col("_shs")).cast("long").as("n_sh")))
-          .localCheckpoint()
-        finally arr.unpersist()
-      case None =>
-        // fully lazy: inline-exploded shingles + counted sizes (the
-        // array-attribute explode is reserved for the persisted path)
-        val sh = shingleSet(docs, idCol, textCol, n)
-        result(sh, sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh")))
-    }
+                        maxShingleDocFreq: Option[Int] = None): DataFrame = {
+    // the doc-frequency cap filters EXPLODED rows, so capped set sizes are
+    // counted post-filter; uncapped sizes are the persisted arrays' lengths
+    val cached = (if (maxShingleDocFreq.isDefined)
+      shingleSet(docs, idCol, textCol, n, maxShingleDocFreq)
+    else shingleArrays(docs, idCol, textCol, n)).persist()
+    val side = if (maxShingleDocFreq.isDefined) countedSide(cached) else arraySide(cached)
+    try verifyJaccard(side, side, None, threshold)
+      .select(col("d1"), col("d2"), round(col("jaccard"), 4).as("jaccard"))
+      .localCheckpoint()
+    finally cached.unpersist()
   }
 
   /** MinHash + banded LSH near-dup detection, verified with EXACT Jaccard.
     *
     * Pipeline (every stage whole-stage-codegen'd, no array lambdas):
-    *  1. signatures: ONE hash-aggregate pass over the exploded (doc, shingle)
-    *     rows computing `min(xxhash64(s, seed_i))` for all seeds as flat
-    *     columns — Spark's partial aggregation makes this map-side combined;
-    *  2. band buckets: bucket_b = xxhash64(h_{b*r}, ..., h_{b*r+r-1}, b)
-    *     straight over the signature columns (no slicing/arrays);
-    *  3. candidates: equi-join on (band, bucket) — never all-pairs;
-    *  4. exact verify: shingle-count intersection join *restricted to
-    *     candidate docs* (broadcast the candidate set), so the expensive
-    *     exact step is proportional to candidates, not the corpus.
+    *  1. signatures and band buckets ([[signatureBands]]);
+    *  2. candidates: equi-join on (band, bucket) — never all-pairs;
+    *  3. exact verify ([[verifyJaccard]]) *restricted to candidate docs*
+    *     (broadcast the candidate set), so the expensive exact step is
+    *     proportional to candidates, not the corpus.
     *
     * At threshold t=0.8 with 16x4 bands the per-pair miss probability is
     * (1-t^4)^16 < 3e-4, and < 4e-8 for the t>=0.9 pairs this detects in
-    * practice.
+    * practice. The shingle arrays and bands are persisted for the call and
+    * the pairs localCheckpoint'ed (see the materialization note on
+    * [[Dedup]]).
     */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       n: Int, threshold: Double,
-                      numBands: Int = 16, rowsPerBand: Int = 4,
-                      materialize: Boolean = true): DataFrame = {
-    val numHashes = numBands * rowsPerBand
-    // Per-doc distinct shingle ARRAYS — the explode feeds the signature
-    // agg and the verification joins; sizes read the array lengths. With
-    // materialize=true the intermediates are persisted for the call, the
-    // pair result localCheckpoint'ed and the caches released; see
-    // ngramJaccardPairs for the tradeoff and the materialize=false
-    // (fully lazy) alternative.
-    // materialize=true: arrays persisted, verify side explodes the CACHED
-    // column (safe — see the shingleArrays hazard note) and sizes are
-    // array lengths. materialize=false: fully lazy, inline-exploded
-    // shingles and counted sizes (the array-attribute explode is
-    // reserved for the persisted path).
-    val shArr =
-      if (materialize) shingleArrays(docs, idCol, textCol, n).persist()
-      else null
-    val sh =
-      if (materialize) shArr.select(col("doc_id"), explode(col("_shs")).as("s"))
-      else shingleSet(docs, idCol, textCol, n)
-    // 1. one codegen'd aggregation pass for the whole signature. The
-    // variable-length shingle string is hashed ONCE to a long; the 64 seeded
-    // family members then hash the fixed 12-byte (long, seed) pair — ~2x
-    // less hashing work per row than 64 string hashes, same family quality
-    // (xxhash64 over a hash is still uniform), and the LSH recall argument
-    // is seed-agnostic: the exact-Jaccard verify step fixes the output.
-    val hashAggs = (0 until numHashes).map(i => min(xxhash64(col("_h"), lit(i))).as(s"h$i"))
-    // both sides of the band self-join consume the signatures
-    val sigPlan = sh.withColumn("_h", xxhash64(col("s")))
-      .groupBy("doc_id").agg(hashAggs.head, hashAggs.tail: _*)
-    val sig = if (materialize) sigPlan.persist() else sigPlan
+                      numBands: Int = 16, rowsPerBand: Int = 4): DataFrame = {
+    // the arrays feed the signature agg and the verify; both sides of the
+    // band self-join consume the bands
+    val arr = shingleArrays(docs, idCol, textCol, n).persist()
     try {
-      // 2. one bucket hash per band, fed columns directly
-      val bucketCols = (0 until numBands).map { b =>
-        xxhash64(((b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"h$i")) :+
-          lit(b)): _*)
-      }
-      val bands = sig.select(col("doc_id"), posexplode(array(bucketCols: _*)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-      // 3. candidate pairs from bucket collisions. The pair set feeds
-      // BOTH the candidate-doc derivation and the final join — scope-
-      // persist it (round 16): un-persisted, each reference re-plans
-      // (and with AQE re-executes) the band self-join subtree, a
-      // measurable share of the per-call job count on micro-batch
-      // inputs (51 -> 36 jobs on the qd03 gate).
-      val candidatesP = bands.as("x").join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        .distinct()
-      val candidates = if (materialize) candidatesP.persist() else candidatesP
-      try {
-        // 4. exact Jaccard on candidate docs only. Set sizes are the
-        // cached arrays' lengths (round 16) — the former counting
-        // aggregation over candSh executed its whole subtree twice
-        // (joined as s1 AND s2, never persisted).
-        // no distinct: candDocs only feeds broadcast SEMI-joins, whose
-        // hashed relation dedups keys on build — the distinct was one
-        // more exchange+agg stage per call (round 16)
-        val candDocs = candidates.select(col("d1").as("doc_id"))
-          .union(candidates.select(col("d2")))
-        val (candSh, sizes) =
-          if (materialize) {
-            val candArr = shArr.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-            (candArr.select(col("doc_id"), explode(col("_shs")).as("s")),
-              candArr.select(col("doc_id"),
-                size(col("_shs")).cast("long").as("n_sh")))
-          } else {
-            val cs = sh.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-            (cs, cs.groupBy("doc_id").agg(count(lit(1)).as("n_sh")))
-          }
-        val inter = candSh.as("a").join(candSh.as("b"),
-            col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .agg(count(lit(1)).as("inter"))
-        candidates.join(inter, Seq("d1", "d2"))
-          .join(sizes.as("s1"), col("d1") === col("s1.doc_id"))
-          .join(sizes.as("s2"), col("d2") === col("s2.doc_id"))
-          .withColumn("jaccard",
-            col("inter").cast("double") / (col("s1.n_sh") + col("s2.n_sh") - col("inter")))
-          .filter(col("jaccard") >= threshold)
-          .select(col("d1"), col("d2"), round(col("jaccard"), 4).as("jaccard")) match {
-          case out if materialize => out.localCheckpoint()
-          case out                => out
-        }
-      } finally if (materialize) candidates.unpersist()
-    } finally if (materialize) { sig.unpersist(); shArr.unpersist(); () }
+      val bands = signatureBands(arraySide(arr).sh, numBands, rowsPerBand).persist()
+      try intraBatchPairs(arr, bands, threshold)(
+        _.select(col("d1"), col("d2"), round(col("jaccard"), 4).as("jaccard")).localCheckpoint())
+      finally bands.unpersist()
+    } finally arr.unpersist()
   }
 
   /** The persistable LSH index of a corpus: one (doc_id, band, bucket) row
@@ -376,24 +256,7 @@ object Dedup {
     * for verification candidates, never re-shingled wholesale. */
   def lshIndex(docs: DataFrame, idCol: String, textCol: String, n: Int,
                numBands: Int = 16, rowsPerBand: Int = 4): DataFrame =
-    bandBuckets(shingleSet(docs, idCol, textCol, n), numBands, rowsPerBand)
-
-  /** (doc_id, band, bucket) LSH index rows for a distinct (doc_id, s)
-    * shingle table — the banding core of [[lshIndex]] (kept separate so
-    * [[minhashLshPairs]] can persist the signature stage across its
-    * self-join). */
-  private def bandBuckets(sh: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame = {
-    val numHashes = numBands * rowsPerBand
-    val hashAggs = (0 until numHashes).map(i => min(xxhash64(col("_h"), lit(i))).as(s"h$i"))
-    val sig = sh.withColumn("_h", xxhash64(col("s")))
-      .groupBy("doc_id").agg(hashAggs.head, hashAggs.tail: _*)
-    val bucketCols = (0 until numBands).map { b =>
-      xxhash64(((b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"h$i")) :+
-        lit(b)): _*)
-    }
-    sig.select(col("doc_id"), posexplode(array(bucketCols: _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-  }
+    signatureBands(shingleSet(docs, idCol, textCol, n), numBands, rowsPerBand)
 
   /** Incremental (delta-vs-corpus) MinHash LSH dedup: near-dup pairs
     * BETWEEN a new batch and an existing corpus, with exact-Jaccard
@@ -416,14 +279,13 @@ object Dedup {
   def minhashLshPairsAgainst(corpus: DataFrame, delta: DataFrame,
                              idCol: String, textCol: String,
                              n: Int, threshold: Double,
-                             numBands: Int = 16, rowsPerBand: Int = 4,
-                             materialize: Boolean = true): DataFrame =
+                             numBands: Int = 16, rowsPerBand: Int = 4): DataFrame =
     // one-shot form: compute the corpus index inline. Steady state
     // persists lshIndex(...) once (e.g. a ManifestTable version) and calls
     // minhashLshPairsAgainstIndex so no batch ever re-shingles the corpus.
     minhashLshPairsAgainstIndex(corpus,
       lshIndex(corpus, idCol, textCol, n, numBands, rowsPerBand), delta,
-      idCol, textCol, n, threshold, numBands, rowsPerBand, materialize)
+      idCol, textCol, n, threshold, numBands, rowsPerBand)
 
   /** [[minhashLshPairsAgainst]] against a PRE-BUILT corpus index (the
     * stored-index steady state): candidates come from the delta's bands
@@ -432,73 +294,22 @@ object Dedup {
     * each side (the candidate-id semi-join runs against the raw docs
     * BEFORE tokenization, so the work is proportional to candidates, not
     * corpus size). `corpusIndex` must be (doc_id, band, bucket) built by
-    * [[lshIndex]] with the same (n, numBands, rowsPerBand). */
+    * [[lshIndex]] with the same (n, numBands, rowsPerBand). The delta
+    * shingle arrays are persisted for the call and the pairs
+    * localCheckpoint'ed (see the materialization note on [[Dedup]]). */
   def minhashLshPairsAgainstIndex(corpus: DataFrame, corpusIndex: DataFrame,
                                   delta: DataFrame,
                                   idCol: String, textCol: String,
                                   n: Int, threshold: Double,
-                                  numBands: Int = 16, rowsPerBand: Int = 4,
-                                  materialize: Boolean = true): DataFrame = {
-    // the delta shingle arrays feed banding + verify + sizes; candidates
-    // feed three joins — scope-persist both (see ngramJaccardPairs for
-    // the tradeoff and the materialize=false fully-lazy alternative)
-    val deltaArr =
-      if (materialize) shingleArrays(delta, idCol, textCol, n).persist()
-      else null // lazy path explodes the expression inline (hazard note)
-    val deltaSh =
-      if (materialize) deltaArr.select(col("doc_id"), explode(col("_shs")).as("s"))
-      else shingleSet(delta, idCol, textCol, n)
-    try {
-      val candidatesP = corpusIndex.as("x")
-        .join(bandBuckets(deltaSh, numBands, rowsPerBand).as("y"),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
-        .select(col("x.doc_id").as("corpus_id"), col("y.doc_id").as("delta_id"))
-        .distinct()
-      val candidates = if (materialize) candidatesP.persist() else candidatesP
-      try {
-        // corpus text is touched only for candidate docs: semi-join the RAW
-        // docs first, shingle after — the full corpus is never re-tokenized.
-        // Set sizes are array lengths (round 16), not counting aggregations
-        // whose un-persisted subtrees re-executed per reference.
-        // no distinct on the broadcast-semi build sides (see candDocs
-        // note in minhashLshPairs)
-        val corpusCandDocs = corpus.join(
-          broadcast(candidates.select(col("corpus_id").as(idCol))),
-          Seq(idCol), "left_semi")
-        // corpus side is NOT persisted: explode the expression inline
-        // (shingleSet) and take sizes from a narrow no-Generate pass —
-        // see the shingleArrays hazard note
-        val candCo = shingleSet(corpusCandDocs, idCol, textCol, n)
-        val sizesCo = candCo.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-        // delta side: persisted arrays -> cached-column explode + array
-        // sizes; lazy -> exploded rows + counted sizes
-        val (candDe, sizesDe) =
-          if (materialize) {
-            val candDeArr = deltaArr.join(
-              broadcast(candidates.select(col("delta_id").as("doc_id"))),
-              Seq("doc_id"), "left_semi")
-            (candDeArr.select(col("doc_id"), explode(col("_shs")).as("s")),
-              candDeArr.select(col("doc_id"),
-                size(col("_shs")).cast("long").as("n_sh")))
-          } else {
-            val cd = deltaSh.join(
-              broadcast(candidates.select(col("delta_id").as("doc_id"))),
-              Seq("doc_id"), "left_semi")
-            (cd, cd.groupBy("doc_id").agg(count(lit(1)).as("n_sh")))
-          }
-        val inter = candCo.as("a").join(candDe.as("b"), col("a.s") === col("b.s"))
-          .groupBy(col("a.doc_id").as("corpus_id"), col("b.doc_id").as("delta_id"))
-          .agg(count(lit(1)).as("inter"))
-        val out = candidates.join(inter, Seq("corpus_id", "delta_id"))
-          .join(sizesCo.as("s1"), col("corpus_id") === col("s1.doc_id"))
-          .join(sizesDe.as("s2"), col("delta_id") === col("s2.doc_id"))
-          .withColumn("jaccard",
-            col("inter").cast("double") / (col("s1.n_sh") + col("s2.n_sh") - col("inter")))
-          .filter(col("jaccard") >= threshold)
-          .select(col("corpus_id"), col("delta_id"), round(col("jaccard"), 4).as("jaccard"))
-        if (materialize) out.localCheckpoint() else out
-      } finally if (materialize) candidates.unpersist()
-    } finally if (materialize) { deltaArr.unpersist(); () }
+                                  numBands: Int = 16, rowsPerBand: Int = 4): DataFrame = {
+    // the delta shingle arrays feed banding, verify and sizes
+    val deltaArr = shingleArrays(delta, idCol, textCol, n).persist()
+    try pairsAgainstIndex(corpus, corpusIndex, deltaArr,
+        signatureBands(arraySide(deltaArr).sh, numBands, rowsPerBand),
+        idCol, textCol, n, threshold)(
+      _.select(col("d1").as("corpus_id"), col("d2").as("delta_id"),
+        round(col("jaccard"), 4).as("jaccard")).localCheckpoint())
+    finally deltaArr.unpersist()
   }
 
   /** FUSED micro-batch acceptance for the streaming incremental-dedup
@@ -528,94 +339,32 @@ object Dedup {
     * shingle arrays exactly like the operators they replace.
     *
     * Returns (accepted batch rows, their (doc_id, band, bucket) index
-    * rows), both materialized via localCheckpoint (all internal caches
-    * are released before return; same executor-loss caveat as
-    * [[ngramJaccardPairs]]). `batch` is consumed twice (shingling +
-    * the final anti-join) — callers on a non-trivial source should
-    * persist it, as a foreachBatch body does anyway. */
+    * rows), both materialized via localCheckpoint with every internal
+    * cache released before return (see the materialization note on
+    * [[Dedup]]). `batch` is consumed twice (shingling + the final
+    * anti-join) — callers on a non-trivial source should persist it, as a
+    * foreachBatch body does anyway. */
   def acceptBatchAgainstIndex(corpus: DataFrame, corpusIndex: DataFrame,
                               batch: DataFrame,
                               idCol: String, textCol: String,
                               n: Int, threshold: Double,
                               numBands: Int = 16, rowsPerBand: Int = 4): (DataFrame, DataFrame) = {
-    val numHashes = numBands * rowsPerBand
     val spark = batch.sparkSession
-    def jaccardOf(inter: Column, n1: Column, n2: Column): Column =
-      inter.cast("double") / (n1 + n2 - inter)
     val arr = shingleArrays(batch, idCol, textCol, n).persist()
     try {
       // one signature aggregation for the whole batch (the only heavy
       // agg in the call; the composition ran it three times)
-      val sh = arr.select(col("doc_id"), explode(col("_shs")).as("s"))
-      val hashAggs = (0 until numHashes)
-        .map(i => min(xxhash64(col("_h"), lit(i))).as(s"h$i"))
-      val sig = sh.withColumn("_h", xxhash64(col("s")))
-        .groupBy("doc_id").agg(hashAggs.head, hashAggs.tail: _*)
-      val bucketCols = (0 until numBands).map { b =>
-        xxhash64(((b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"h$i")) :+
-          lit(b)): _*)
-      }
-      val bands = sig.select(col("doc_id"), posexplode(array(bucketCols: _*)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-        .persist()
+      val bands = signatureBands(arraySide(arr).sh, numBands, rowsPerBand).persist()
       try {
-        // --- intra-batch near-dup drop (minhashLshPairs verify algebra) ---
         val dupIds = JobCensus.labeled(spark, "operators.dedup.intra_drop") {
-          val intraCand = bands.as("x").join(bands.as("y"),
-              col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-                col("x.doc_id") < col("y.doc_id"))
-            .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-            .distinct().persist()
-          try {
-            val candDocs = intraCand.select(col("d1").as("doc_id"))
-              .union(intraCand.select(col("d2")))
-            val candArr = arr.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-            val candSh = candArr.select(col("doc_id"), explode(col("_shs")).as("s"))
-            val sizes = candArr.select(col("doc_id"),
-              size(col("_shs")).cast("long").as("n_sh"))
-            val inter = candSh.as("a").join(candSh.as("b"),
-                col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-              .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-              .agg(count(lit(1)).as("inter"))
-            intraCand.join(inter, Seq("d1", "d2"))
-              .join(sizes.as("s1"), col("d1") === col("s1.doc_id"))
-              .join(sizes.as("s2"), col("d2") === col("s2.doc_id"))
-              .filter(jaccardOf(col("inter"), col("s1.n_sh"), col("s2.n_sh")) >= threshold)
-              .select(col("d2").as("doc_id")).distinct().localCheckpoint()
-          } finally intraCand.unpersist()
+          intraBatchPairs(arr, bands, threshold)(
+            _.select(col("d2").as("doc_id")).distinct().localCheckpoint())
         }
-        // --- stored-index decontamination of the survivors (the
-        //     minhashLshPairsAgainstIndex algebra; the delta's bands are
-        //     the batch's bands minus the intra dups) ---
+        // the delta's bands are the batch's bands minus the intra dups
         val contaminated = JobCensus.labeled(spark, "operators.dedup.index_probe") {
-          val keptBands = bands.join(dupIds, Seq("doc_id"), "left_anti")
-          val crossCand = corpusIndex.as("x").join(keptBands.as("y"),
-              col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
-            .select(col("x.doc_id").as("corpus_id"), col("y.doc_id").as("delta_id"))
-            .distinct().persist()
-          try {
-            // corpus text is touched only for candidate docs; NOT persisted,
-            // so the explode stays inline (see the shingleArrays hazard note)
-            val corpusCandDocs = corpus.join(
-              broadcast(crossCand.select(col("corpus_id").as(idCol))),
-              Seq(idCol), "left_semi")
-            val candCo = shingleSet(corpusCandDocs, idCol, textCol, n)
-            val sizesCo = candCo.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-            val candDeArr = arr.join(
-              broadcast(crossCand.select(col("delta_id").as("doc_id"))),
-              Seq("doc_id"), "left_semi")
-            val candDe = candDeArr.select(col("doc_id"), explode(col("_shs")).as("s"))
-            val sizesDe = candDeArr.select(col("doc_id"),
-              size(col("_shs")).cast("long").as("n_sh"))
-            val inter = candCo.as("a").join(candDe.as("b"), col("a.s") === col("b.s"))
-              .groupBy(col("a.doc_id").as("corpus_id"), col("b.doc_id").as("delta_id"))
-              .agg(count(lit(1)).as("inter"))
-            crossCand.join(inter, Seq("corpus_id", "delta_id"))
-              .join(sizesCo.as("s1"), col("corpus_id") === col("s1.doc_id"))
-              .join(sizesDe.as("s2"), col("delta_id") === col("s2.doc_id"))
-              .filter(jaccardOf(col("inter"), col("s1.n_sh"), col("s2.n_sh")) >= threshold)
-              .select(col("delta_id").as("doc_id")).distinct().localCheckpoint()
-          } finally crossCand.unpersist()
+          pairsAgainstIndex(corpus, corpusIndex, arr,
+              bands.join(dupIds, Seq("doc_id"), "left_anti"), idCol, textCol, n, threshold)(
+            _.select(col("d2").as("doc_id")).distinct().localCheckpoint())
         }
         // --- survivors + their index rows, straight off the cached bands ---
         JobCensus.labeled(spark, "operators.dedup.accept_rows") {
@@ -628,6 +377,119 @@ object Dedup {
         }
       } finally bands.unpersist()
     } finally arr.unpersist()
+  }
+
+  /** (doc_id, band, bucket) LSH rows of a distinct (doc_id, s) shingle
+    * table — the one signature/banding kernel of the MinHash family:
+    *  1. signatures: ONE hash-aggregate pass over the shingle rows
+    *     computing the 64 seeded minima as flat columns — Spark's partial
+    *     aggregation makes this map-side combined;
+    *  2. band buckets: bucket_b = xxhash64(h_{b*r}, ..., h_{b*r+r-1}, b)
+    *     straight over the signature columns (no slicing/arrays). */
+  private def signatureBands(sh: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame = {
+    // The variable-length shingle string is hashed ONCE to a long; the
+    // seeded family members then hash the fixed 12-byte (long, seed) pair
+    // — ~2x less hashing work per row than 64 string hashes, same family
+    // quality (xxhash64 over a hash is still uniform), and the LSH recall
+    // argument is seed-agnostic: the exact-Jaccard verify fixes the output.
+    val hashAggs = (0 until numBands * rowsPerBand)
+      .map(i => min(xxhash64(col("_h"), lit(i))).as(s"h$i"))
+    val sig = sh.withColumn("_h", xxhash64(col("s")))
+      .groupBy("doc_id").agg(hashAggs.head, hashAggs.tail: _*)
+    val bucketCols = (0 until numBands).map { b =>
+      xxhash64(((b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"h$i")) :+
+        lit(b)): _*)
+    }
+    sig.select(col("doc_id"), posexplode(array(bucketCols: _*)))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+  }
+
+  /** Distinct (d1, d2) doc pairs colliding in some (band, bucket) of `x`
+    * and `y`; a table banded against itself (`x eq y`) keeps d1 < d2. */
+  private def bandCandidates(x: DataFrame, y: DataFrame): DataFrame = {
+    val collide = col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket")
+    x.as("x").join(y.as("y"),
+        if (x eq y) collide && col("x.doc_id") < col("y.doc_id") else collide)
+      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
+      .distinct()
+  }
+
+  /** One input of [[verifyJaccard]]: (doc_id, s) shingle rows and
+    * (doc_id, n_sh) shingle-set sizes. */
+  private final case class Side(sh: DataFrame, sizes: DataFrame)
+
+  /** A side over PERSISTED shingle arrays ([[shingleArrays]], possibly
+    * semi-joined): explodes the cached `_shs` and reads the sizes as
+    * array lengths — no counting aggregation. Only over a persisted frame:
+    * see the [[shingleArrays]] hazard note. */
+  private def arraySide(arr: DataFrame): Side = Side(
+    arr.select(col("doc_id"), explode(col("_shs")).as("s")),
+    arr.select(col("doc_id"), size(col("_shs")).cast("long").as("n_sh")))
+
+  /** A side over inline-exploded shingle rows ([[shingleSet]]): the sizes
+    * are counted. */
+  private def countedSide(sh: DataFrame): Side =
+    Side(sh, sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh")))
+
+  /** The one exact-Jaccard verify: (d1, d2, jaccard >= threshold) with d1
+    * from side `a` and d2 from side `b` — a shingle-intersection join
+    * (a side verified against itself, `a eq b`, keeps d1 < d2), restricted
+    * to the (d1, d2) `candidates` when given, then the two size joins. */
+  private def verifyJaccard(a: Side, b: Side, candidates: Option[DataFrame],
+                            threshold: Double): DataFrame = {
+    val shared = col("a.s") === col("b.s")
+    val inter = a.sh.as("a").join(b.sh.as("b"),
+        if (a eq b) shared && col("a.doc_id") < col("b.doc_id") else shared)
+      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+      .agg(count(lit(1)).as("inter"))
+    candidates.fold(inter)(_.join(inter, Seq("d1", "d2")))
+      .join(a.sizes.as("s1"), col("d1") === col("s1.doc_id"))
+      .join(b.sizes.as("s2"), col("d2") === col("s2.doc_id"))
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("s1.n_sh") + col("s2.n_sh") - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("d1"), col("d2"), col("jaccard"))
+  }
+
+  /** Verified near-dup pairs inside one batch: its persisted shingle
+    * arrays `arr` and band table `bands`. The band self-join's pairs feed
+    * both the candidate-doc derivation and the final join, so they are
+    * persisted while `finish` materializes its projection of the pairs.
+    * (Un-persisted, each reference re-planned and with AQE re-executed
+    * the band self-join: 51 -> 36 jobs on the qd03 gate, round 16.) */
+  private def intraBatchPairs[T](arr: DataFrame, bands: DataFrame, threshold: Double)(
+      finish: DataFrame => T): T = {
+    val candidates = bandCandidates(bands, bands).persist()
+    try {
+      // no distinct: candDocs only feeds a broadcast SEMI-join, whose
+      // hashed relation dedups keys on build (round 16)
+      val candDocs = candidates.select(col("d1").as("doc_id"))
+        .union(candidates.select(col("d2")))
+      val side = arraySide(arr.join(broadcast(candDocs), Seq("doc_id"), "left_semi"))
+      finish(verifyJaccard(side, side, Some(candidates), threshold))
+    } finally candidates.unpersist()
+  }
+
+  /** Verified (d1 = corpus doc, d2 = delta doc) pairs of a delta — its
+    * persisted shingle arrays `deltaArr` and band rows `deltaBands` —
+    * probing a stored `corpusIndex`. The candidates are persisted while
+    * `finish` materializes its projection. The corpus text is touched
+    * only for candidate docs: the RAW docs are semi-joined first and
+    * shingled after, so the full corpus is never re-tokenized; that side
+    * is NOT persisted, so its explode stays inline ([[shingleSet]]). */
+  private def pairsAgainstIndex[T](corpus: DataFrame, corpusIndex: DataFrame,
+                                   deltaArr: DataFrame, deltaBands: DataFrame,
+                                   idCol: String, textCol: String, n: Int,
+                                   threshold: Double)(finish: DataFrame => T): T = {
+    val candidates = bandCandidates(corpusIndex, deltaBands).persist()
+    try {
+      val corpusCand = corpus.join(broadcast(candidates.select(col("d1").as(idCol))),
+        Seq(idCol), "left_semi")
+      val deltaCand = deltaArr.join(broadcast(candidates.select(col("d2").as("doc_id"))),
+        Seq("doc_id"), "left_semi")
+      finish(verifyJaccard(countedSide(shingleSet(corpusCand, idCol, textCol, n)),
+        arraySide(deltaCand), Some(candidates), threshold))
+    } finally candidates.unpersist()
   }
 
   /** Connected components over a near-dup pair list — the clustering step
@@ -699,74 +561,6 @@ object Dedup {
     }
   }
 
-  /** Alternating LARGE-STAR / SMALL-STAR connected components (Kiveris et
-    * al. 2014, "Connected Components in MapReduce and Beyond") — the
-    * OPT-IN deep-chain path next to [[connectedComponents]]'s min-label
-    * loop. Label propagation converges in O(diameter) shuffling rounds:
-    * fine for near-dup graphs (components are cliques-ish, diameter ~2),
-    * pathological for chain-shaped graphs (a 10⁶-link chain = 10⁶
-    * rounds). Star rounds HALVE tree heights instead — O(log n) rounds on
-    * any graph shape:
-    *
-    *  - large-star(u): connect every neighbor v > u to
-    *    m = min(N(u) ∪ {u});
-    *  - small-star(u): connect every neighbor v ≤ u (and u itself) to
-    *    the minimum of that set.
-    *
-    * At the fixpoint the edge set is a star forest rooted at each
-    * component's minimum id — the labels. Returns (labels, rounds) with
-    * the same (doc_id, cluster_id) schema and the same min-id cluster
-    * semantics as the default loop (equivalence is property-tested), so
-    * callers can swap it in for deep graphs without changing results.
-    * Default stays label propagation: on the common shallow graphs it
-    * does one cheap job per round, not two grouped passes + the
-    * convergence diff. */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 32): (DataFrame, Int) = {
-    import org.apache.spark.sql.functions.{greatest, least}
-    val caller = pairs.sparkSession
-    val iso = caller.newSession()
-    iso.conf.set("spark.sql.shuffle.partitions", "8")
-    val canon0 = pairs
-      .select(least(col("d1"), col("d2")).as("lo"),
-        greatest(col("d1"), col("d2")).as("hi"))
-      .filter(col("lo") =!= col("hi")).distinct().localCheckpoint()
-    var edges = iso.createDataFrame(canon0.rdd, canon0.schema) // canonical lo < hi
-    var rounds = 0
-    var converged = edges.isEmpty
-    while (!converged && rounds < maxIter) {
-      // LARGE-STAR over the symmetric neighborhood
-      val sym = edges.select(col("lo").as("u"), col("hi").as("v"))
-        .unionByName(edges.select(col("hi").as("u"), col("lo").as("v")))
-      val mOf = sym.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      val ls = sym.join(mOf, "u").filter(col("v") > col("u"))
-        .select(least(col("v"), col("m")).as("lo"),
-          greatest(col("v"), col("m")).as("hi"))
-        .filter(col("lo") =!= col("hi")).distinct()
-      // SMALL-STAR on the canonical orientation (all of hi's smaller
-      // neighbors are its lo rows; their min is < hi by construction)
-      val mS = ls.groupBy("hi").agg(min("lo").as("m"))
-      val ss = ls.join(mS, "hi")
-      val next = ss
-        .select(least(col("lo"), col("m")).as("lo"),
-          greatest(col("lo"), col("m")).as("hi"))
-        .unionByName(ss.select(col("m").as("lo"), col("hi")))
-        .filter(col("lo") =!= col("hi")).distinct().localCheckpoint()
-      converged = next.except(edges).limit(1).count() == 0L &&
-        edges.except(next).limit(1).count() == 0L
-      edges = next
-      rounds += 1
-    }
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponentsStar: maxIter=$maxIter star rounds reached " +
-          "before the edge set stabilized — raise maxIter")
-    val labels = edges.select(col("hi").as("doc_id"), col("lo").as("cluster_id"))
-      .unionByName(edges.select(col("lo").as("doc_id"), col("lo").as("cluster_id")))
-      .distinct().localCheckpoint()
-    (caller.createDataFrame(labels.rdd, labels.schema), rounds)
-  }
-
   /** 64-bit SimHash fingerprint of a token array: bit k is the sign of the
     * sum over tokens of +-1 depending on bit k of the token's hash — two
     * disjoint 32-bit md5 slices (k<32 from hex chars [1,8], k>=32 from
@@ -802,8 +596,7 @@ object Dedup {
     * equi-join on (chunk index, chunk value) — never all-pairs. For larger
     * distances, band into more chunks (d <= c-1 needs c chunks). */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   maxDistance: Int = 3,
-                   materialize: Boolean = true): DataFrame = {
+                   maxDistance: Int = 3): DataFrame = {
     require(maxDistance < 4, "4-chunk banding guarantees recall only for distance <= 3")
     // Transposed fingerprint computation: explode tokens once and compute all
     // 64 bit-counters as flat sum() columns in a single codegen'd hash
@@ -824,12 +617,11 @@ object Dedup {
       .map(i => when(col(s"b$i") > 0, lit(1L << i)).otherwise(lit(0L)))
       .reduce((a, b) => a.bitwiseOR(b))
     // Both sides of the chunk self-join consume the fingerprints; without
-    // materialization the whole tokenize+explode+64-column aggregation runs
-    // TWICE (once per join side). Same scoped persist/localCheckpoint
-    // pattern and materialize=false escape hatch as the other operators.
-    val fpPlan = toks.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
+    // the persist the whole tokenize+explode+64-column aggregation runs
+    // TWICE (once per join side). See the materialization note on [[Dedup]].
+    val fp = toks.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
       .select(col("doc_id"), fpExpr.as("fp"))
-    val fp = if (materialize) fpPlan.persist() else fpPlan
+      .persist()
     try {
       val chunks = fp.select(col("doc_id"), col("fp"),
           posexplode(transform(sequence(lit(0), lit(3)),
@@ -839,15 +631,15 @@ object Dedup {
       // appears k times, and deduplicating only the surviving (<= maxDistance)
       // pairs keeps the distinct's shuffle proportional to real near-dups,
       // not to all chunk collisions
-      val out = chunks.as("x").join(chunks.as("y"),
+      chunks.as("x").join(chunks.as("y"),
           col("x.chunk") === col("y.chunk") && col("x.ck") === col("y.ck") &&
             col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
           hamming64(col("x.fp"), col("y.fp")).as("hamming"))
         .filter(col("hamming") <= maxDistance)
         .distinct()
-      if (materialize) out.localCheckpoint() else out
-    } finally if (materialize) fp.unpersist()
+        .localCheckpoint()
+    } finally fp.unpersist()
   }
 
   /** Embedding near-dup via banded sign-LSH blocking — the 100 TB shape:

@@ -398,6 +398,44 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("shingle tokenization never re-runs as a filter below a Generate or at the scan") {
+    // The InferFiltersFromGenerate hazard: exploding a plain array
+    // ATTRIBUTE of an unpersisted frame makes Spark add size(_shs) > 0
+    // below the Generate, and pushdown then substitutes the whole
+    // shingles(split(text)) expression into it, so the tokenization
+    // re-runs as a filter at the scan (4-8x in round 16;
+    // plans/r16/qd07_decontaminate_broken_midround.txt). Unpersisted
+    // shingle rows must explode the expression inline (Dedup.shingleSet).
+    import graft.core.SparkJobs
+    import graft.operators.Dedup
+    import org.apache.spark.sql.execution.{FileSourceScanLike, FilterExec, GenerateExec, SparkPlan}
+    def splitFilters(p: SparkPlan): Seq[String] = {
+      val belowGenerate = p.collect { case g: GenerateExec =>
+        g.child.collect { case f: FilterExec => f.condition.toString }
+      }.flatten
+      val atScan = p.collect { case s: FileSourceScanLike =>
+        s.dataFilters.map(_.toString) ++ s.metadata.get("PushedFilters")
+      }.flatten
+      (belowGenerate ++ atScan).filter(_.contains("split("))
+    }
+    def shinglesAScan(p: SparkPlan): Boolean =
+      p.collect { case g: GenerateExec => g }
+        .exists(_.collectFirst { case s: FileSourceScanLike => s }.nonEmpty)
+    val qd07 = SparkEntry.queries("qd07_decontaminate")(spark, sf).queryExecution.sparkPlan
+    assert(shinglesAScan(qd07), s"qd07 explodes no scanned shingles:\n$qd07")
+    assert(splitFilters(qd07).isEmpty, s"qd07 re-tokenizes in a filter:\n$qd07")
+    // the unpersisted corpus side of the stored-index probe
+    val docs = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+    val corpus = docs.filter(col("doc_id") % 5 =!= 4)
+    val idx = Dedup.lshIndex(corpus, "doc_id", "text", 3).localCheckpoint()
+    val (_, runs) = SparkJobs.executions(spark)(Dedup.minhashLshPairsAgainstIndex(
+      corpus, idx, docs.filter(col("doc_id") % 5 === 4), "doc_id", "text", 3, 0.8))
+    val probe = runs.map(_.sparkPlan)
+    assert(probe.exists(shinglesAScan), s"the corpus side explodes no scanned shingles:\n$probe")
+    assert(probe.flatMap(splitFilters).isEmpty,
+      s"the corpus side re-tokenizes in a filter:\n${probe.mkString("\n")}")
+  }
+
   test("vector assignment is map-only: zero Exchange on the corpus side") {
     // The kmeans/IVF nearest-centroid and sign-LSH bucket assignments must
     // be pure maps over the corpus: the streamed (corpus) side of the

@@ -809,16 +809,17 @@ class CatalogProcedureSpec extends AnyFunSuite {
       // minhash signature Aggregate must sit over the STAGED slice (its
       // subtree carries the staged doc_id predicate); a sig-agg subtree
       // over the released slice = the released corpus re-shingled per
-      // release. The stored index must be scanned, not recomputed.
-      val decon = graft.operators.Dedup.minhashLshPairsAgainstIndex(
-        released, spark.table("gp.db.wapx_idx"), staged,
-        "doc_id", "text", 3, 0.8, materialize = false)
-      val plan = decon.queryExecution.optimizedPlan
-      val sigAggs = plan.collect {
+      // release. The stored index must be scanned, not recomputed. The
+      // plans are the ones the default call runs, with the persisted
+      // arrays and candidates inlined, so leaves are the real scans.
+      val (pairs, plans) = graft.core.SparkJobs.plans(spark)(
+        graft.operators.Dedup.minhashLshPairsAgainstIndex(
+          released, spark.table("gp.db.wapx_idx"), staged, "doc_id", "text", 3, 0.8))
+      val sigAggs = plans.flatMap(_.collect {
         case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
             if a.aggregateExpressions.map(_.toString)
               .count(_.contains("min(xxhash64")) >= 64 => a
-      }
+      })
       assert(sigAggs.nonEmpty, "signature aggregation missing entirely")
       def scansCorpus(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
         p.collectLeaves().exists { l =>
@@ -834,12 +835,9 @@ class CatalogProcedureSpec extends AnyFunSuite {
       assert(releasedSigAggs.isEmpty,
         "the released slice was re-shingled for banding — staged batches " +
           "must probe the stored index instead")
-      assert(plan.collectLeaves().exists(_.toString.contains("wapx_idx")),
+      assert(plans.exists(_.collectLeaves().exists(_.toString.contains("wapx_idx"))),
         "plan does not scan the stored index")
       // 3. VALUES: every staged doc near-dups its released twin
-      val pairs = graft.operators.Dedup.minhashLshPairsAgainstIndex(
-        released, spark.table("gp.db.wapx_idx"), staged,
-        "doc_id", "text", 3, 0.8)
       assert(pairs.filter(col("corpus_id") === col("delta_id") - 1000).count() === 20L)
     } finally spark.conf.unset(GraftCatalog.WapBranchConf)
   }

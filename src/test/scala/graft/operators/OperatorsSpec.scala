@@ -119,9 +119,7 @@ class OperatorsSpec extends AnyFunSuite {
     import spark.implicits._
     // A path graph is the worst case for min-label propagation: the
     // smallest label walks ONE hop per iteration, so a component of
-    // diameter d needs ~d rounds — the documented linear-rounds bound
-    // (connectedComponentsStar is the opt-in O(log d) path for deep
-    // graphs; the default stays label propagation for shallow ones).
+    // diameter d needs ~d rounds — the documented linear-rounds bound.
     val chain = (1 until 30).map(i => (i.toLong, i + 1L)).toDF("d1", "d2")
     // maxIter below the diameter: the component SPLITS into multiple
     // cluster ids — the documented failure mode (warn + split, no error)
@@ -140,37 +138,6 @@ class OperatorsSpec extends AnyFunSuite {
       .select("doc_id", "cluster_id").as[(Long, Long)].collect()
     assert(comps.filter(_._1 >= 101L).forall(_._2 == 101L))
     assert(comps.filter(_._1 <= 30L).forall(_._2 == 1L))
-  }
-
-  test("star-rounds CC: O(log n) rounds on the chain, clusters match the default") {
-    import spark.implicits._
-    // The opt-in large-star/small-star path: a 64-node chain needs ~63
-    // min-label rounds (one hop per round) but only O(log n) star rounds
-    // (each round halves tree heights) — the deep-graph escape hatch.
-    val chain = (1 until 64).map(i => (i.toLong, i + 1L)).toDF("d1", "d2")
-    val (labels, rounds) = Dedup.connectedComponentsStar(chain)
-    assert(rounds <= 12, s"star rounds must be logarithmic on a 64-chain: $rounds")
-    val got = labels.as[(Long, Long)].collect()
-    assert(got.length === 64 && got.forall(_._2 == 1L),
-      s"chain must collapse to min id 1: ${got.take(5).toSeq}")
-    // equivalence with the default loop on a mixed random-ish graph
-    // (cliques + chains + singleton pair), min-id semantics both sides
-    val mixed = (
-      (1 until 20).map(i => (i.toLong, i + 1L)) ++            // chain 1..20
-      Seq((50L, 51L), (51L, 52L), (52L, 50L), (50L, 53L)) ++  // clique + spur
-      Seq((90L, 91L)) ++                                      // pair
-      (0 until 15).map(i => (100L + i % 5, 100L + (i * 7) % 5)) // dense knot
-    ).filter(p => p._1 != p._2).toDF("d1", "d2")
-    val viaLabel = Dedup.connectedComponents(mixed, maxIter = 40)
-      .as[(Long, Long)].collect().toSet
-    val viaStar = Dedup.connectedComponentsStar(mixed)._1
-      .as[(Long, Long)].collect().toSet
-    assert(viaStar === viaLabel,
-      s"star and label clusterings diverge: ${viaStar.diff(viaLabel)} / ${viaLabel.diff(viaStar)}")
-    // empty input: no rounds, no labels
-    val (empty, r0) = Dedup.connectedComponentsStar(
-      Seq.empty[(Long, Long)].toDF("d1", "d2"))
-    assert(empty.isEmpty && r0 === 0)
   }
 
   test("range join: auto bucket width = sqrt(win/density), clamped; overrides honored") {
@@ -265,22 +232,21 @@ class OperatorsSpec extends AnyFunSuite {
     val oneShot = Dedup.minhashLshPairsAgainst(
       corpus, delta, "doc_id", "text", 3, 0.8)
     assert(viaIndex.collect().toSet === oneShot.collect().toSet)
-    // plan proof: with an in-memory delta, every minhash signature
-    // aggregation in the plan must sit over the delta (LocalRelation) —
-    // if the corpus were re-shingled for banding, a 64-hash Aggregate
-    // whose subtree scans documents.parquet would appear. (The lazy plan
-    // replicates the delta agg once per join branch; all copies are
-    // delta-side.) materialize=false keeps the plan inspectable.
+    // plan proof over the plans the default call runs (its eager
+    // localCheckpoint, with the persisted delta arrays and candidates
+    // inlined): with an in-memory delta, every minhash signature
+    // aggregation must sit over the delta (LocalRelation) — if the corpus
+    // were re-shingled for banding, a 64-hash Aggregate whose subtree
+    // scans documents.parquet would appear.
     val deltaLocal = Seq((900001L, "spark join filter window batch stream"))
       .toDF("doc_id", "text")
-    val lazyPlan = Dedup.minhashLshPairsAgainstIndex(
-      corpus, idx, deltaLocal, "doc_id", "text", 3, 0.8, materialize = false)
-      .queryExecution.optimizedPlan
-    val sigAggNodes = lazyPlan.collect {
+    val (_, plans) = SparkJobs.plans(spark)(Dedup.minhashLshPairsAgainstIndex(
+      corpus, idx, deltaLocal, "doc_id", "text", 3, 0.8))
+    val sigAggNodes = plans.flatMap(_.collect {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
           if a.aggregateExpressions.map(_.toString)
             .count(_.contains("min(xxhash64")) >= 64 => a
-    }
+    })
     assert(sigAggNodes.nonEmpty, "signature aggregation missing entirely")
     def scansFile(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
                   marker: String): Boolean =
@@ -297,7 +263,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(corpusSigAggs.isEmpty,
       "the corpus was re-shingled for banding — the stored index must be the only source")
     // and the index is read from its stored parquet files, not recomputed
-    assert(scansFile(lazyPlan, "graft_lshidx_spec_"),
+    assert(plans.exists(scansFile(_, "graft_lshidx_spec_")),
       "plan does not scan the stored index")
   }
 
